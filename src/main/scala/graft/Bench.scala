@@ -69,18 +69,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r12: serialized shuffle writer for every exchange (see build.sbt
-      // bypassMergeThreshold note: the bypass writer's per-reduce-partition
-      // file creates were a measured 3x task-CPU constant on small exchanges)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESH", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // driver-side kernel microbenchmarks at the reference's own problem
     // sizes — directly comparable to the BASELINE.md rows. Measured FIRST:
     // after the query sweep the JVM carries Spark executor pools, streaming
@@ -129,17 +118,7 @@ object Bench {
     // in the headline throughput number that was JVM temperature, not
     // code). JIT/codegen warmth survives in the JVM across contexts.
     spark.stop()
-    val s2 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r12: serialized shuffle writer for every exchange (see build.sbt
-      // bypassMergeThreshold note: the bypass writer's per-reduce-partition
-      // file creates were a measured 3x task-CPU constant on small exchanges)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESH", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = GraftSession.local()
     // EMPIRICAL 10x SCALE POINT — runs FIRST on the fresh context, BEFORE
     // the many-series blocks (r10 VERDICT #1): the r10 driver run read
     // pagerank/jaccard/window_quantile at 2-3x their isolated TimeQ warm

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main for the connected-components paths at OVER-CAP scale
@@ -35,13 +34,7 @@ object CcScale {
     val cap = args.lift(1).flatMap(_.toLongOption).getOrElse(0L)
     val chainArg = args.lift(2).flatMap(_.toLongOption).getOrElse(1000L)
     val shape = args.lift(3).getOrElse("star")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val chain = chainArg
     val clusterE = shape match {
       case "clique" =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Many-series throughput at an arbitrary series count:
   * `runMain graft.ManySeriesBench <nSeries> [nSeries...]` — the decade
   * ladder of the SURVEY §6 claim (N independent yearly series
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ManySeriesBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val ns = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1000000)
     ns.foreach { n =>
       val sec = Bench.manySeriesSec(spark, n)

@@ -25,7 +25,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleSweep {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dirs = Seq(
       "base" -> sys.env.getOrElse("SWEEP_BASE", "/root/testdata/sf0.1"),
       "x10" -> sys.env.getOrElse("SWEEP_10X", "/root/repo/target/testdata_10x"),
@@ -60,13 +59,7 @@ object ScaleSweep {
     val acc = scala.collection.mutable.Map.empty[String, Map[String, Double]]
     def freshSession(): SparkSession = {
       SparkSession.getActiveSession.foreach(_.stop())
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+      GraftSession.local()
     }
     dirs.foreach { case (label, dir) =>
       // fresh context per decade: stop-the-world between dirs so no decade

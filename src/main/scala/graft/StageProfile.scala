@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage timing/shuffle profile of one query run (guide §1: decide
   * whether the time goes to shuffle, compute, or scheduling before touching
@@ -25,13 +24,7 @@ object StageProfile {
     }
     val names = if (rest.nonEmpty) rest else Seq("dedup_jaccard_prefix")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     final case class St(wallMs: Long, taskMs: Long, nTasks: Int,
       shRead: Long, shWrite: Long, site: String,

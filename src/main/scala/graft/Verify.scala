@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,7 @@ object Verify {
     // optional trailing args: run only these queries (fast local iteration;
     // the driver always passes exactly two args, so its behavior is fixed)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r12: serialized shuffle writer for every exchange (see build.sbt
-      // bypassMergeThreshold note: the bypass writer's per-reduce-partition
-      // file creates were a measured 3x task-CPU constant on small exchanges)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESH", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name))

@@ -256,6 +256,8 @@ case class SrpPackedBits(child: Expression, signs: Array[Array[Double]],
     "rectangular sign matrix required")
 
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  // null on a length mismatch, even for a non-null input (doGenCode sets isNull)
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

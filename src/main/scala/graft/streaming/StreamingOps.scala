@@ -423,8 +423,9 @@ object StreamingOps {
     * drops: TIMESTAMP(NANOS) (readable only as raw nanos via the
     * `nanosAsLong` legacy conf) and plain micros TIMESTAMP_NTZ. Normalize
     * either to the session-UTC TIMESTAMP every downstream query assumes —
-    * the NTZ cast is value-exact because every entrypoint pins the session
-    * timezone to UTC (build.sbt javaOptions / Verify builder).
+    * the NTZ cast is value-exact because the session timezone is UTC in
+    * every JVM sbt forks (`-Dspark.sql.session.timeZone=UTC` in build.sbt's
+    * `javaOptions`).
     */
   private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {

@@ -19,9 +19,7 @@ class ExtensionsSpec extends AnyFunSuite {
     SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 

@@ -9,12 +9,7 @@ import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
 /** Invariant tests for the LLM-pipeline operators on the sf0.001 tables. */
 class OpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   private val dir = "/root/testdata/sf0.001"
   private def docs: DataFrame = spark.read.parquet(s"$dir/documents.parquet")

@@ -13,12 +13,7 @@ import graft.disagg.Disaggregate
   */
 class SparkApiSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   test("denton golden through spark.read.csv + Disaggregate.series") {
     val url = getClass.getResource("/tsdisagg/sales_a.csv")
@@ -135,5 +130,23 @@ class SparkApiSpec extends AnyFunSuite {
           s"$aggFunc: $got != $want")
       }
     }
+  }
+
+  // Stops the suite's session, so it must stay the last test here.
+  test("GraftSession.local gets the JVM-wide settings from build.sbt's javaOptions") {
+    // a fresh session, so the check does not depend on which suite built
+    // the active one (ExtensionsSpec builds local[2])
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.stop())
+    val s = GraftSession.local(4)
+    // read from SparkConf: it holds only what was set, so an unset key
+    // shows as None instead of Spark's default
+    val conf = s.sparkContext.getConf
+    assert(conf.getOption("spark.sql.session.timeZone").contains("UTC"))
+    assert(conf.getOption("spark.ui.enabled").contains("false"))
+    assert(conf.getOption("spark.shuffle.sort.bypassMergeThreshold").contains("0"))
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.sparkContext.master == "local[4]")
   }
 }

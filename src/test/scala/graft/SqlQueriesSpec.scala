@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SqlQueriesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 
