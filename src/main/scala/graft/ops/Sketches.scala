@@ -1038,7 +1038,8 @@ object Sketches {
     // (cheap count on the materialized frame), not the raw event count —
     // the exploded frame is 7×|pre| rows now, and an events-derived width
     // would over-partition it ~10³× at the big decades
-    val parts = math.max(32L, pre.count() * 7L / 2000000L).toInt
+    val preRows = pre.count()
+    val parts = math.max(32L, preRows * 7L / 2000000L).toInt
     val daysDf = pre.select(col("d0").as("w")).distinct()
     import org.apache.spark.sql.expressions.{Window => W}
     // exact order statistic from per-(window, value) COUNTS, not a row-level
@@ -1049,13 +1050,15 @@ object Sketches {
     // [cum−c+1, cum] contains rank ceil(q·n) is BY CONSTRUCTION the same
     // value row_number() would have landed on (ties in `value` collapse to
     // one count row), so est/exact_q/rank_err are bit-identical.
-    val cnt = pre
+    val cntPlan = pre
       .select(explode(sequence(col("d0"), col("d0") + 6)).as("w"),
         col("value"), col("c0"))
       .join(daysDf, Seq("w"), "left_semi")
       .repartition(parts, col("w"))
       .groupBy(col("w"), col("value")).agg(sum(col("c0")).as("c"))
-      .localCheckpoint() // cum/exact AND rank consume cnt — compute once
+    // cum/exact AND rank consume cnt — compute once; ≤ 7×|pre| rows, so a
+    // big decade spills to scratch parquet instead of checkpoint blocks
+    val cnt = graft.util.Fs.materialize(cntPlan, 7L * preRows)
     val cum = cnt
       .withColumn("cum", sum(col("c")).over(
         W.partitionBy(col("w")).orderBy(col("value"))))

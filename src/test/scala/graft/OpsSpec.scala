@@ -735,6 +735,28 @@ class OpsSpec extends AnyFunSuite {
       s"stream-batch divergence: only-stream=${streamed -- batch} only-batch=${batch -- streamed}")
   }
 
+  test("streamed simhash bucket cap fails loudly and leaves no engine checkpoint behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def ckDirs(): Set[String] = {
+      val listing = java.nio.file.Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        listing.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft_simhash_pairs_ck")).toSet
+      } finally listing.close()
+    }
+    val before = ckDirs()
+    val e = intercept[Exception] {
+      graft.streaming.StreamingOps.streamDedupSimhash(spark, dir, maxBucket = 1)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(c => Option(c.getMessage)).toSeq
+    assert(msgs.exists(_.contains("grew past")),
+      s"bucket-cap failure missing from the cause chain: ${msgs.take(3)}")
+    val leaked = ckDirs() -- before
+    assert(leaked.isEmpty, s"failed stream left its checkpoint behind: $leaked")
+  }
+
   test("streaming ingest pipeline equals the batch filter->dedup->sample") {
     val streamed = graft.streaming.StreamingOps.streamPipelineIngest(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
