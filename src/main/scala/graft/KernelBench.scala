@@ -22,8 +22,8 @@ import graft.time.Frequency
   */
 object KernelBench {
 
-  private def syntheticLow(nYears: Int): TsFrame = {
-    val ts = Frequency.parseValidated("YS").nDatesFrom(LocalDate.of(1975, 1, 1), nYears)
+  private def syntheticLow(nYears: Int, start: LocalDate = LocalDate.of(1975, 1, 1)): TsFrame = {
+    val ts = Frequency.parseValidated("YS").nDatesFrom(start, nYears)
     val v = Array.tabulate(nYears)(i => 100.0 + 10.0 * math.sin(i * 0.7) + i)
     TsFrame(ts, IndexedSeq("y"), IndexedSeq(v))
   }
@@ -56,6 +56,21 @@ object KernelBench {
     times.sorted.apply(reps / 2)
   }
 
+  /** y, C without its all-zero rows, and X, as DisaggCore.run assembles
+    * them for an indicator series.
+    */
+  private def mlInputs(low: TsFrame, high: TsFrame, method: String)
+      : (DenseVector[Double], DenseMatrix[Double], DenseMatrix[Double]) = {
+    val prep = DisaggCore.prepareInputs(low, Some(high), None, method)
+    val c = DisaggCore.buildConversionMatrix(prep.low.ts, prep.lowFreq,
+      prep.high.ts, prep.factor, "sum")
+    val mask = (0 until c.rows).filter(i => (0 until c.cols).exists(j => c(i, j) != 0.0))
+    val y = DenseVector(mask.map(low.data(0)).toArray)
+    val ck = DenseMatrix.tabulate(mask.length, c.cols)((i, j) => c(mask(i), j))
+    val x = DenseMatrix.tabulate(high.nRows, high.data.length)((i, j) => high.data(j)(i))
+    (y, ck, x)
+  }
+
   /** name -> median milliseconds. */
   def run(reps: Int = 31): Seq[(String, Double)] = {
     val low36 = syntheticLow(36)
@@ -69,28 +84,14 @@ object KernelBench {
 
     // chow-lin objective at the exports_q shape: n=158 quarterly, k=2
     val highQ = syntheticHigh("QS", LocalDate.of(1972, 1, 1), 158, 2)
-    val lowQ = syntheticLow(36)
-    val prepQ = DisaggCore.prepareInputs(lowQ, Some(highQ), None, "chow-lin")
-    val cQ = DisaggCore.buildConversionMatrix(prepQ.low.ts, prepQ.lowFreq,
-      prepQ.high.ts, prepQ.factor, "sum")
-    val maskQ = (0 until cQ.rows).filter(i => (0 until cQ.cols).exists(j => cQ(i, j) != 0.0))
-    val cQk = DenseMatrix.tabulate(maskQ.length, cQ.cols)((i, j) => cQ(maskQ(i), j))
-    val yQ = DenseVector(maskQ.map(lowQ.data(0)).toArray)
-    val xQ = DenseMatrix.tabulate(158, 2)((i, j) => highQ.data(j)(i))
+    val (yQ, cQk, xQ) = mlInputs(syntheticLow(36), highQ, "chow-lin")
     val chowLinEvalMs = medianMs(reps) {
       Kernels.negLogLikObjective(0.8, 0.8, yQ, xQ, cQk, Kernels.ChowLinCov)
     }
 
     // litterman objective at the exports_m shape: n=474 monthly, k=2
     val highM = syntheticHigh("MS", LocalDate.of(1972, 1, 1), 474, 2)
-    val lowM = syntheticLow(39)
-    val prepM = DisaggCore.prepareInputs(lowM, Some(highM), None, "litterman")
-    val cM = DisaggCore.buildConversionMatrix(prepM.low.ts, prepM.lowFreq,
-      prepM.high.ts, prepM.factor, "sum")
-    val maskM = (0 until cM.rows).filter(i => (0 until cM.cols).exists(j => cM(i, j) != 0.0))
-    val cMk = DenseMatrix.tabulate(maskM.length, cM.cols)((i, j) => cM(maskM(i), j))
-    val yM = DenseVector(maskM.map(lowM.data(0)).toArray)
-    val xM = DenseMatrix.tabulate(474, 2)((i, j) => highM.data(j)(i))
+    val (yM, cMk, xM) = mlInputs(syntheticLow(39), highM, "litterman")
     val littermanEvalMs = medianMs(reps) {
       Kernels.negLogLikObjective(0.8, 0.8, yM, xM, cMk, Kernels.LittermanCov)
     }
@@ -101,18 +102,8 @@ object KernelBench {
     // two metrics are where the asymptotic win over the dense reference
     // kernels is directly visible.
     val highBig = syntheticHigh("MS", LocalDate.of(1800, 1, 1), 2400, 2)
-    val lowBig = {
-      val ts = Frequency.parseValidated("YS").nDatesFrom(LocalDate.of(1800, 1, 1), 200)
-      val v = Array.tabulate(200)(i => 100.0 + 10.0 * math.sin(i * 0.7) + i)
-      TsFrame(ts, IndexedSeq("y"), IndexedSeq(v))
-    }
-    val prepB = DisaggCore.prepareInputs(lowBig, Some(highBig), None, "chow-lin")
-    val cB = DisaggCore.buildConversionMatrix(prepB.low.ts, prepB.lowFreq,
-      prepB.high.ts, prepB.factor, "sum")
-    val maskB = (0 until cB.rows).filter(i => (0 until cB.cols).exists(j => cB(i, j) != 0.0))
-    val cBk = DenseMatrix.tabulate(maskB.length, cB.cols)((i, j) => cB(maskB(i), j))
-    val yB = DenseVector(maskB.map(lowBig.data(0)).toArray)
-    val xB = DenseMatrix.tabulate(2400, 2)((i, j) => highBig.data(j)(i))
+    val lowBig = syntheticLow(200, LocalDate.of(1800, 1, 1))
+    val (yB, cBk, xB) = mlInputs(lowBig, highBig, "chow-lin")
     val chowLinBigMs = medianMs(9) {
       Kernels.negLogLikObjective(0.8, 0.8, yB, xB, cBk, Kernels.ChowLinCov)
     }
@@ -129,18 +120,8 @@ object KernelBench {
     // near-linear, so this is where the asymptotic gap is widest. Light
     // warmup — the same code paths are C2-hot from the n=2400 shapes.
     val high48 = syntheticHigh("MS", LocalDate.of(1600, 1, 1), 4800, 2)
-    val low48 = {
-      val ts = Frequency.parseValidated("YS").nDatesFrom(LocalDate.of(1600, 1, 1), 400)
-      val v = Array.tabulate(400)(i => 100.0 + 10.0 * math.sin(i * 0.7) + i)
-      TsFrame(ts, IndexedSeq("y"), IndexedSeq(v))
-    }
-    val prep48 = DisaggCore.prepareInputs(low48, Some(high48), None, "chow-lin")
-    val c48 = DisaggCore.buildConversionMatrix(prep48.low.ts, prep48.lowFreq,
-      prep48.high.ts, prep48.factor, "sum")
-    val mask48 = (0 until c48.rows).filter(i => (0 until c48.cols).exists(j => c48(i, j) != 0.0))
-    val c48k = DenseMatrix.tabulate(mask48.length, c48.cols)((i, j) => c48(mask48(i), j))
-    val y48 = DenseVector(mask48.map(low48.data(0)).toArray)
-    val x48 = DenseMatrix.tabulate(4800, 2)((i, j) => high48.data(j)(i))
+    val low48 = syntheticLow(400, LocalDate.of(1600, 1, 1))
+    val (y48, c48k, x48) = mlInputs(low48, high48, "chow-lin")
     val chowLin48Ms = medianMs(7, warmup = 3) {
       Kernels.negLogLikObjective(0.8, 0.8, y48, x48, c48k, Kernels.ChowLinCov)
     }

@@ -2,125 +2,87 @@ package graft.disagg
 
 import breeze.linalg._
 
-/** Dense linear-algebra kernels for temporal disaggregation — driver-side
-  * (or executor-side in the many-series mode), Breeze-backed.
+/** Linear-algebra kernels for temporal disaggregation — driver-side (or
+  * executor-side in the many-series mode), Breeze-backed.
   *
-  * 1:1 with the reference's numeric layer
-  * (/root/reference/tsdisagg/ts_disagg.py:84-176) including its quirks:
-  * the `(1+rho)` variance correction in the ML objective (ts_disagg.py:144)
-  * is replicated verbatim because the R-golden outputs depend on it.
+  * The reference's numeric contract (ts_disagg.py:84-176) is three steps:
+  * the preliminary series p, the low-frequency residual ul = y - C p, and
+  * the estimate p + S C' (C S C')^-1 ul. Every covariance family reaches
+  * that formula through one operation: S is s2 M^-1 for a BANDED symmetric
+  * positive-definite M (the tridiagonal Chow-Lin and pentadiagonal
+  * Litterman precisions, the h-difference Gram D'D for Denton, D'D + rho C'C
+  * for Denton-Cholette), and [[bandedCmi]] turns M and the conversion
+  * matrix C into C M^-1 and C M^-1 C' in O(n w^2 + n w nl + n nl). No kernel
+  * here builds an n x n matrix, so a series costs near-linear time in its
+  * length; cluster scale comes from running many independent series in
+  * parallel (Disaggregate.manySeries), never from distributing one series'
+  * linear algebra.
   *
-  * Series lengths in the supported econometric regime are O(10^2..10^3)
-  * (largest reference fixture n=474), so O(n^2) memory / O(n^3) solves on a
-  * single node are the right tool; cluster scale comes from running MANY
-  * independent series in parallel (see Disaggregate.manySeries), never from
-  * distributing one series' linear algebra.
+  * The reference's quirks are kept: the `(1+rho)` variance correction in the
+  * ML objective (ts_disagg.py:144) is replicated verbatim because the
+  * R-golden outputs depend on it. The dense forms the reference computes
+  * (explicit covariances, the dense KKT, the distribution matrix) live in
+  * test scope as `graft.DenseKernels`, the oracle KernelsSpec checks this
+  * banded path against.
   */
 object Kernels {
 
-  /** Lower-bidiagonal difference matrix raised to the h-th power
-    * (build_difference_matrix, ts_disagg.py:90-93). h=0 gives identity.
+  /** Packed lower band (half-bandwidth `w` >= h) of `D'D`, where D holds the
+    * rows `first until n` of the h-th difference matrix
+    * (build_difference_matrix, ts_disagg.py:90-93) with the optional
+    * proportional column scaling `D <- D diag(1/(x * mean(x)))`
+    * (ts_disagg.py:155-161). Row i of D is the stencil
+    * (-1)^k binom(h,k) at column i-k, clipped at column 0: Denton keeps every
+    * row (first = 0), Denton-Cholette slices the top h off (first = h,
+    * ts_disagg.py:164-176). Band-filled from the stencil in O(n h^2) —
+    * never a dense D'D product.
     */
-  def differenceMatrix(n: Int, h: Int): DenseMatrix[Double] = {
-    val d = DenseMatrix.eye[Double](n)
-    var i = 1
-    while (i < n) { d(i, i - 1) = -1.0; i += 1 }
-    h match {
-      case 0 => DenseMatrix.eye[Double](n)
-      case 1 => d
-      case _ =>
-        var acc = d
-        var k = 1
-        while (k < h) { acc = acc * d; k += 1 }
-        acc
-    }
-  }
-
-  /** AR(1) Toeplitz covariance `rho^|i-j| * s2/(1-rho^2)`
-    * (build_chao_lin_covariance, ts_disagg.py:100-107).
-    */
-  def chowLinCovariance(rho: Double, sigmaSq: Double, n: Int): DenseMatrix[Double] = {
-    val scale = sigmaSq / (1.0 - rho * rho)
-    // Toeplitz: precompute the scaled power ladder once (n multiplications)
-    // instead of n^2 math.pow calls
-    val pow = new Array[Double](n)
-    var i = 0
-    var acc = scale
-    while (i < n) { pow(i) = acc; acc *= rho; i += 1 }
-    DenseMatrix.tabulate(n, n)((i, j) => pow(math.abs(i - j)))
-  }
-
-  /** Litterman random-walk-AR(1) covariance
-    * `s2 * (D' H' H D)^-1`, `H = I - rho*subdiag`
-    * (build_litterman_covariance, ts_disagg.py:110-114).
-    */
-  def littermanCovariance(rho: Double, sigmaSq: Double, n: Int): DenseMatrix[Double] = {
-    val d = differenceMatrix(n, 1)
-    val h = DenseMatrix.tabulate(n, n) { (i, j) =>
-      if (i == j) 1.0 else if (i == j + 1) -rho else 0.0
-    }
-    val a = d.t * h.t * h * d
-    (a \ DenseMatrix.eye[Double](n)) * sigmaSq
-  }
-
-  /** Denton covariance `(D'D)^-1` with the optional proportional scaling
-    * `D <- D diag(1/(x * mean(x)))` (build_denton_covariance,
-    * ts_disagg.py:155-161).
-    */
-  def dentonCovariance(
-      n: Int, x: DenseVector[Double], h: Int, proportional: Boolean): DenseMatrix[Double] = {
-    var d = differenceMatrix(n, h)
-    if (proportional) {
-      val m = breeze.stats.mean(x)
-      val inv = x.map(v => 1.0 / v / m)
-      d = d * diag(inv)
-    }
-    (d.t * d) \ DenseMatrix.eye[Double](n)
-  }
-
-  /** Denton-Cholette distribution matrix W_θ — the x-block of the KKT
-    * solution of  min x' D'D x  s.t.  C x = y  (the Cholette correction
-    * slices the top h rows off the difference matrix,
-    * build_denton_charlotte_distribution_matrix, ts_disagg.py:164-176; only
-    * the used `w_theta = W[:n, n:]` block is computed — the reference's
-    * dead statement at :174 is not ported, SURVEY.md §1.4).
-    *
-    * Solved by BANDED regularized elimination instead of the dense
-    * (n+nl)² KKT LU: with A = D'D (bandwidth h, built from the h-difference
-    * stencil in O(n h²) — never as a dense D'D product) and
-    * M = A + ρ C'C (C'C is block-diagonal with blocks ≤ the conversion
-    * factor, so M is banded SPD; ρ balances the two terms' scales and
-    * cancels algebraically), the KKT solution is
-    *   W_θ = M⁻¹ C' S⁻¹,  S = C M⁻¹ C'
-    * for ANY ρ > 0: O(n w² + n w nl + n nl²) instead of O((n+nl)³) — the
-    * n=2400 shape drops from ~3.9 s to ~50 ms (reference: 2.08 s). Equality
-    * with the dense KKT is pinned in KernelsSpec across agg shapes.
-    */
-  def dentonCholetteDistribution(
-      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
-      h: Int, proportional: Boolean): DenseMatrix[Double] = {
-    val (band, _) = dentonCholetteSystem(n, nl, c, x, h, proportional)
-    dcSolveTail(c, band)
-  }
-
-  /** Banded regularized KKT system (M = A + rho C'C, half-bandwidth w) shared
-    * by the matrix and vector-apply denton-cholette paths. */
-  private def dentonCholetteSystem(
-      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
-      h: Int, proportional: Boolean): (Array[Array[Double]], Int) = {
-    // column scalings s_j (proportional: D <- D diag(1/(x*mean(x))))
+  private def stencilGram(
+      n: Int, x: DenseVector[Double], h: Int, proportional: Boolean,
+      first: Int, w: Int): Array[Array[Double]] = {
     val s = new Array[Double](n)
     if (proportional) {
       val m = breeze.stats.mean(x)
       var j = 0
       while (j < n) { s(j) = 1.0 / x(j) / m; j += 1 }
     } else java.util.Arrays.fill(s, 1.0)
-    // h-th difference stencil: row i (i >= h) has (-1)^k binom(h,k) at col i-k
     val coef = new Array[Double](h + 1)
     coef(0) = 1.0
     var k = 1
     while (k <= h) { coef(k) = -coef(k - 1) * (h - k + 1).toDouble / k; k += 1 }
-    // bandwidth: the A-part contributes h; the C'C part the widest row support
+    // only the lower triangle (k1 <= k2 => row i-k1 >= col i-k2) is stored
+    val band = Array.ofDim[Double](w + 1, n)
+    var i = first
+    while (i < n) {
+      val kMax = math.min(h, i)
+      var k1 = 0
+      while (k1 <= kMax) {
+        val v1 = coef(k1) * s(i - k1)
+        var k2 = k1
+        while (k2 <= kMax) {
+          band(k2 - k1)(i - k2) += v1 * coef(k2) * s(i - k2)
+          k2 += 1
+        }
+        k1 += 1
+      }
+      i += 1
+    }
+    band
+  }
+
+  /** Denton-Cholette as a banded system: the x-block of the KKT solution of
+    * min x' D'D x  s.t.  C x = y  (build_denton_charlotte_distribution_matrix,
+    * ts_disagg.py:164-176) is W = M^-1 C' (C M^-1 C')^-1 with
+    * M = D'D + rho C'C, for ANY rho > 0. C'C is block-diagonal with blocks
+    * no wider than the conversion factor, so M is banded SPD; rho balances
+    * the two terms' scales and cancels algebraically. This replaces the
+    * dense (n+nl)^2 KKT LU: the n=2400 shape drops from ~3.9 s to ~50 ms
+    * (reference: 2.08 s).
+    */
+  private def dentonCholetteBand(
+      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
+      h: Int, proportional: Boolean): Array[Array[Double]] = {
+    // bandwidth: D'D contributes h; C'C the widest row support
     var wC = 0
     var r = 0
     while (r < nl) {
@@ -134,26 +96,8 @@ object Kernels {
       r += 1
     }
     val w = math.max(h, wC)
-    // PACKED lower band (band(d)(col) = M(col+d, col)): O(n w) memory —
-    // the dense n x n carrier was the dominant allocation at large n
-    val band = Array.ofDim[Double](w + 1, n)
-    // A = D'D from the stencil, band-filled in O(n h^2); only the lower
-    // triangle (k1 <= k2 => row i-k1 >= col i-k2) is stored
-    var i = h
-    while (i < n) {
-      var k1 = 0
-      while (k1 <= h) {
-        val v1 = coef(k1) * s(i - k1)
-        var k2 = k1
-        while (k2 <= h) {
-          band(k2 - k1)(i - k2) += v1 * coef(k2) * s(i - k2)
-          k2 += 1
-        }
-        k1 += 1
-      }
-      i += 1
-    }
-    // scale-balancing rho (cancels in W_theta; conditions M)
+    val band = stencilGram(n, x, h, proportional, h, w)
+    // scale-balancing rho (cancels in W; conditions M)
     var diagSum = 0.0
     var j = 0
     while (j < n) { diagSum += band(0)(j); j += 1 }
@@ -176,140 +120,42 @@ object Kernels {
       }
       r += 1
     }
-    (band, w)
-  }
-
-  private def dcSolveTail(
-      c: DenseMatrix[Double], band: Array[Array[Double]]): DenseMatrix[Double] = {
-    val g = bandedSpdSolveB(band, c.t)    // M^-1 C'  (n x nl)
-    val sMat = sparseRowProduct(c, g)     // S = C M^-1 C'  (nl x nl, SPD)
-    (sMat \ g.t).t                        // G S^-1  (S symmetric)
-  }
-
-  /** `W_theta * ul` WITHOUT materializing the n x nl distribution matrix:
-    * the distribution step only ever applies W to one residual vector, so
-    * the O(nl^2 * n) multi-RHS backsubstitution above is replaced by one
-    * nl-sized solve + one n x nl product — the n=4800 denton-cholette run
-    * drops ~10x. Same algebra, same factorizations; only the final solve
-    * order is reassociated (within kernel fp tolerance, goldens unchanged).
-    */
-  def dentonCholetteApply(
-      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
-      h: Int, proportional: Boolean, ul: DenseVector[Double]): DenseVector[Double] = {
-    val (band, _) = dentonCholetteSystem(n, nl, c, x, h, proportional)
-    val g = bandedSpdSolveB(band, c.t)
-    val sMat = sparseRowProduct(c, g)
-    g * (sMat \ ul)
-  }
-
-  /** Dense KKT reference implementation of [[dentonCholetteDistribution]] —
-    * kept as the equality spec for the banded path (KernelsSpec).
-    */
-  def dentonCholetteDistributionDense(
-      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
-      h: Int, proportional: Boolean): DenseMatrix[Double] = {
-    var d = differenceMatrix(n, h)(h until n, ::).toDenseMatrix
-    if (proportional) {
-      val m = breeze.stats.mean(x)
-      val inv = x.map(v => 1.0 / v / m)
-      d = d * diag(inv)
-    }
-    val dtd = d.t * d
-    val w1 = DenseMatrix.vertcat(
-      DenseMatrix.horzcat(dtd, c.t),
-      DenseMatrix.horzcat(c, DenseMatrix.zeros[Double](nl, nl)))
-    val rhs = DenseMatrix.vertcat(
-      DenseMatrix.zeros[Double](n, nl), DenseMatrix.eye[Double](nl))
-    val w = w1 \ rhs
-    w(0 until n, ::).toDenseMatrix
-  }
-
-  /** Residual-distribution matrix `D = S C' (C S C')^-1`, computed as a solve
-    * (build_distribution_matrix, ts_disagg.py:96-97).
-    */
-  def distributionMatrix(sigma: DenseMatrix[Double], c: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val csct = c * sigma * c.t
-    (csct \ (c * sigma)).t
-  }
-
-  /** Denton distribution matrix without the dense `(D'D)^-1`: the Denton
-    * covariance is `S = M^-1` with `M = D'D` BANDED (half-bandwidth h, since
-    * the h-th difference matrix has h subdiagonals), so `S C'` is a banded
-    * Cholesky solve and the distribution matrix follows from one nl x nl
-    * solve — O(n h^2 + n h nl) instead of the O(n^3) explicit inverse.
-    * Value-equal to `distributionMatrix(dentonCovariance(...), c)` (pinned
-    * in KernelsSpec).
-    */
-  def dentonDistribution(
-      n: Int, x: DenseVector[Double], h: Int, proportional: Boolean,
-      c: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val m = dentonBandedM(n, x, h, proportional)
-    val z = bandedSpdSolveB(m, c.t) // S C' (n x nl)
-    val csct = sparseRowProduct(c, z)
-    (csct \ z.t).t
-  }
-
-  /** Banded `M = D'D` (half-bandwidth h) shared by the matrix and
-    * vector-apply denton paths. */
-  private def dentonBandedM(
-      n: Int, x: DenseVector[Double], h: Int,
-      proportional: Boolean): Array[Array[Double]] = {
-    // D = (I - subdiag)^h has coef(t) = (-1)^t binom(h, t) on the t-th
-    // subdiagonal (clipped at column 0), so M = D'D band-fills straight
-    // from the stencil — no dense difference matrix, O(n h^2) total and
-    // O(n h) memory (the dense build was two n^2 carriers)
-    val scale = new Array[Double](n)
-    if (proportional) {
-      val mn = breeze.stats.mean(x)
-      var j = 0
-      while (j < n) { scale(j) = 1.0 / x(j) / mn; j += 1 }
-    } else java.util.Arrays.fill(scale, 1.0)
-    val coef = new Array[Double](h + 1)
-    coef(0) = 1.0
-    var t = 1
-    while (t <= h) { coef(t) = -coef(t - 1) * (h - t + 1).toDouble / t; t += 1 }
-    val band = Array.ofDim[Double](h + 1, n)
-    var j = 0
-    while (j < n) {
-      var dd = 0
-      while (dd <= h && j + dd < n) {
-        // M(j+dd, j) = sum_k D(k, j+dd) D(k, j), k = j+dd .. min(n-1, j+h)
-        var acc = 0.0
-        var k = j + dd
-        val kMax = math.min(n - 1, j + h)
-        while (k <= kMax) {
-          acc += (coef(k - j - dd) * scale(j + dd)) * (coef(k - j) * scale(j))
-          k += 1
-        }
-        band(dd)(j) = acc
-        dd += 1
-      }
-      j += 1
-    }
     band
   }
 
-  /** Denton `W * ul` without the n x nl matrix (see [[dentonCholetteApply]]
-    * for the rationale): one nl-solve + one banded-structured product.
+  /** `W ul = M^-1 C' (C M^-1 C')^-1 ul` for a banded SPD M: one nl-sized
+    * solve and one n x nl product. The distribution step only ever applies
+    * W to the one residual vector, so the n x nl distribution matrix is
+    * never formed.
+    */
+  private def distribute(
+      band: Array[Array[Double]], c: DenseMatrix[Double],
+      ul: DenseVector[Double]): DenseVector[Double] = {
+    val (cmInv, cmic) = bandedCmi(band, c)
+    cmInv.t * (cmic \ ul)
+  }
+
+  /** Denton-Cholette `W ul` (see [[dentonCholetteBand]]). */
+  def dentonCholetteApply(
+      n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
+      h: Int, proportional: Boolean, ul: DenseVector[Double]): DenseVector[Double] =
+    distribute(dentonCholetteBand(n, nl, c, x, h, proportional), c, ul)
+
+  /** Denton `S C' (C S C')^-1 ul` with the Denton covariance
+    * `S = (D'D)^-1` (build_denton_covariance, ts_disagg.py:155-161): D'D is
+    * banded with half-bandwidth h, so this is the banded solve, not the
+    * O(n^3) explicit inverse.
     */
   def dentonApply(
       n: Int, x: DenseVector[Double], h: Int, proportional: Boolean,
-      c: DenseMatrix[Double], ul: DenseVector[Double]): DenseVector[Double] = {
-    val m = dentonBandedM(n, x, h, proportional)
-    val z = bandedSpdSolveB(m, c.t) // S C' (n x nl)
-    val csct = sparseRowProduct(c, z)
-    z * (csct \ ul)
-  }
+      c: DenseMatrix[Double], ul: DenseVector[Double]): DenseVector[Double] =
+    distribute(stencilGram(n, x, h, proportional, 0, h), c, ul)
 
-  /** The two ML covariance families, as structure-aware product builders.
-    *
-    * The likelihood objective never needs the n x n covariance itself — only
-    * `C S C'` (nl x nl) and `C S` (nl x n). For Litterman the precision matrix
-    * `M = D' H' H D` is PENTADIAGONAL (product of two lower-bidiagonal
-    * factors), so `S = s2 M^-1` is applied by building M in O(n) and solving
-    * `M Z = C'` once per evaluation instead of inverting a dense n x n matrix
-    * — this turns the 474-point fixture's per-eval cost from O(4n^3) into one
-    * LU + nl triangular solves.
+  /** The two ML covariance families. The likelihood objective never needs
+    * the n x n covariance itself — only `C S C'` (nl x nl) and, once per
+    * series for the distribution step, `C S` (nl x n). Both follow from the
+    * banded precision `M = s2 S^-1` ([[precisionBand]]) through one banded
+    * Cholesky per evaluation.
     */
   sealed trait MlCov
   case object ChowLinCov extends MlCov
@@ -317,27 +163,12 @@ object Kernels {
 
   final case class CovProducts(csct: DenseMatrix[Double], cSigma: DenseMatrix[Double])
 
-  /** Tridiagonal AR(1) precision: the Chow-Lin covariance
-    * `S = s2/(1-rho^2) * rho^|i-j|` has the closed-form inverse
-    * `S^-1 = (1/s2) * B` with `B = tridiag(-rho; 1, 1+rho^2, ..., 1+rho^2, 1; -rho)`
-    * — so the ML objective never needs the dense n x n Toeplitz matrix: like
-    * the Litterman fast path below, `C S` is one solve `B Z = C'` (O(n)
-    * structure, one LU) instead of two dense n^2-sized products per
-    * optimizer evaluation.
+  /** Tridiagonal AR(1) precision in packed band form (band(d)(j) = B(j+d, j)):
+    * the Chow-Lin covariance `S = s2/(1-rho^2) * rho^|i-j|`
+    * (build_chao_lin_covariance, ts_disagg.py:100-107) has the closed-form
+    * inverse `S^-1 = (1/s2) * B` with
+    * `B = tridiag(-rho; 1, 1+rho^2, ..., 1+rho^2, 1; -rho)`.
     */
-  def chowLinPrecision(rho: Double, n: Int): DenseMatrix[Double] = {
-    if (n == 1) return DenseMatrix((1.0 - rho * rho))
-    val m = DenseMatrix.zeros[Double](n, n)
-    var i = 0
-    while (i < n) {
-      m(i, i) = if (i == 0 || i == n - 1) 1.0 else 1.0 + rho * rho
-      if (i + 1 < n) { m(i, i + 1) = -rho; m(i + 1, i) = -rho }
-      i += 1
-    }
-    m
-  }
-
-  /** [[chowLinPrecision]] in packed band form (band(d)(j) = B(j+d, j)). */
   def chowLinPrecisionBand(rho: Double, n: Int): Array[Array[Double]] = {
     val band = Array.ofDim[Double](2, n)
     var i = 0
@@ -350,7 +181,10 @@ object Kernels {
     band
   }
 
-  /** [[littermanPrecision]] in packed band form. */
+  /** Pentadiagonal Litterman precision `M = (H D)' (H D)`, `H = I - rho*subdiag`
+    * (build_litterman_covariance, ts_disagg.py:110-114: `S = s2 M^-1`), in
+    * packed band form. H D is lower-tridiagonal with bands {1, -(1+rho), rho}.
+    */
   def littermanPrecisionBand(rho: Double, n: Int): Array[Array[Double]] = {
     val a = -(1.0 + rho)
     val b = rho
@@ -372,65 +206,41 @@ object Kernels {
     band
   }
 
-  /** Pentadiagonal `M = (H D)' (H D)` with bands {1, -(1+rho), rho}. */
-  def littermanPrecision(rho: Double, n: Int): DenseMatrix[Double] = {
-    val a = -(1.0 + rho)
-    val b = rho
-    val m = DenseMatrix.zeros[Double](n, n)
-    var j = 0
-    while (j < n) {
-      var d = 1.0
-      if (j + 1 < n) d += a * a
-      if (j + 2 < n) d += b * b
-      m(j, j) = d
-      if (j + 1 < n) {
-        var o = a
-        if (j + 2 < n) o += a * b
-        m(j, j + 1) = o
-        m(j + 1, j) = o
-      }
-      if (j + 2 < n) {
-        m(j, j + 2) = b
-        m(j + 2, j) = b
-      }
-      j += 1
-    }
-    m
+  private def precisionBand(kind: MlCov, rho: Double, n: Int): Array[Array[Double]] = kind match {
+    case ChowLinCov   => chowLinPrecisionBand(rho, n)
+    case LittermanCov => littermanPrecisionBand(rho, n)
   }
 
-  /** Cholesky solve `A Z = R` for a symmetric positive-definite BANDED
-    * matrix (half-bandwidth `w`; only the band of `a` is read). The banded
-    * factor costs O(n w^2) and each RHS column O(n w) — for the tridiagonal
-    * Chow-Lin and pentadiagonal Litterman precisions this replaces the
-    * O(n^3) dense LU that dominated the per-evaluation cost (the optimizer
-    * calls the objective 100-300 times).
+  /** `C M^-1` and `C M^-1 C'` for a banded SPD M given as its packed lower
+    * band (band(d)(j) = M(j+d, j), d = 0..w) — the one solve behind every
+    * covariance family. The banded Cholesky factor costs O(n w^2); the two
+    * substitutions run VECTORIZED over the nl rows of C in a work buffer
+    * W(j*nl + k) = (M^-1 C')(j, k), which is exactly C's column-major buffer
+    * (one clone, no transpose): the substitution streams over nl-length
+    * runs instead of walking a transposed view with a row-sized stride. The
+    * same buffer, read as a column-major nl x n matrix, IS `C M^-1`
+    * (M is symmetric), so it is returned without a copy.
+    *
+    * The diagonal scaling multiplies by a precomputed reciprocal: the
+    * substitution is DIVISION-bound otherwise (2 n nl divides at 20-40
+    * cycles each, against ~1 ulp of accuracy — well inside every tolerance
+    * this kernel is checked at). Package-visible so the test-scope oracle
+    * can check it on general SPD bands with a dense right-hand side.
     */
-  def bandedSpdSolve(a: DenseMatrix[Double], w: Int, rhs: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val n = a.rows
-    val band = Array.ofDim[Double](w + 1, n)
-    var d0 = 0
-    while (d0 <= w) {
-      var j0 = 0
-      while (j0 + d0 < n) { band(d0)(j0) = a(j0 + d0, j0); j0 += 1 }
-      d0 += 1
-    }
-    bandedSpdSolveB(band, rhs)
-  }
-
-  /** Same solve on a PACKED lower band (band(d)(j) = A(j+d, j), d = 0..w):
-    * the O(n^2) dense zero-filled carrier the dense-argument overload
-    * requires dominates the hot path for large n (a 4800-point tridiagonal
-    * precision is a 184 MB allocation holding 14 KB of information) — the
-    * packed form keeps every per-evaluation kernel O(n*w) in memory.
-    */
-  def bandedSpdSolveB(band: Array[Array[Double]], rhs: DenseMatrix[Double]): DenseMatrix[Double] = {
+  private[graft] def bandedCmi(
+      band: Array[Array[Double]],
+      c0: DenseMatrix[Double]): (DenseMatrix[Double], DenseMatrix[Double]) = {
     val w = band.length - 1
     val n = band(0).length
-    // column-oriented band storage: l(d)(j) = L(j+d, j), d = 0..w
+    val cm = if (c0.isTranspose || c0.offset != 0 || c0.majorStride != c0.rows) c0.copy else c0
+    val nl = cm.rows
+    require(cm.cols == n, s"conversion matrix cols ${cm.cols} != n $n")
+    val cd = cm.data // column-major nl x n: column j (= C(:, j)) contiguous
+    val wArr = cd.clone()
+    // banded Cholesky factor, column-oriented: l(d)(j) = L(j+d, j)
     val l = Array.ofDim[Double](w + 1, n)
     var j = 0
     while (j < n) {
-      // diagonal: L(j,j) = sqrt(A(j,j) - sum_k L(j,k)^2), k >= j-w
       var s = band(0)(j)
       var k = math.max(0, j - w)
       while (k < j) { val v = l(j - k)(k); s -= v * v; k += 1 }
@@ -438,83 +248,75 @@ object Kernels {
       l(0)(j) = djj
       var d = 1
       while (d <= w && j + d < n) {
-        val i = j + d
         var s2 = band(d)(j)
-        var k2 = math.max(0, i - w)
-        while (k2 < j) { s2 -= l(i - k2)(k2) * l(j - k2)(k2); k2 += 1 }
+        var k2 = math.max(0, j + d - w)
+        while (k2 < j) { s2 -= l(j + d - k2)(k2) * l(j - k2)(k2); k2 += 1 }
         l(d)(j) = s2 / djj
         d += 1
       }
       j += 1
     }
-    // Substitution VECTORIZED over the RHS columns, in an rhs-index-fastest
-    // work layout (wArr(i*m + k)): the per-column formulation walked the
-    // transposed c.t view with a 3 KB stride — pure cache misses that cost
-    // more than the arithmetic (measured 87 ms at n=4800, nl=400; ~20 ms
-    // this way). Loading row i of c.t reads COLUMN i of c, which is
-    // contiguous; the d-updates then stream over m-length runs.
-    val m = rhs.cols
-    val wArr = new Array[Double](n * m)
+    val invDiag = new Array[Double](n)
+    var ii = 0
+    while (ii < n) { invDiag(ii) = 1.0 / l(0)(ii); ii += 1 }
+    // L Y = C' (forward), then L' X = Y (backward)
     var i = 0
     while (i < n) {
-      val base = i * m
-      var k = 0
-      while (k < m) { wArr(base + k) = rhs(i, k); k += 1 }
-      i += 1
-    }
-    // L Y = R (forward), rows in ascending order, d ascending per row —
-    // identical operation order per (i, k) as the per-column formulation
-    i = 0
-    while (i < n) {
-      val base = i * m
+      val base = i * nl
       var d = 1
       while (d <= w && i - d >= 0) {
         val f = l(d)(i - d)
-        val src = (i - d) * m
+        val src = (i - d) * nl
         var k = 0
-        while (k < m) { wArr(base + k) -= f * wArr(src + k); k += 1 }
+        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
         d += 1
       }
-      val diag = l(0)(i)
+      val r = invDiag(i)
       var k = 0
-      while (k < m) { wArr(base + k) /= diag; k += 1 }
+      while (k < nl) { wArr(base + k) *= r; k += 1 }
       i += 1
     }
-    // L' X = Y (backward)
     i = n - 1
     while (i >= 0) {
-      val base = i * m
+      val base = i * nl
       var d = 1
       while (d <= w && i + d < n) {
         val f = l(d)(i)
-        val src = (i + d) * m
+        val src = (i + d) * nl
         var k = 0
-        while (k < m) { wArr(base + k) -= f * wArr(src + k); k += 1 }
+        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
         d += 1
       }
-      val diag = l(0)(i)
+      val r = invDiag(i)
       var k = 0
-      while (k < m) { wArr(base + k) /= diag; k += 1 }
+      while (k < nl) { wArr(base + k) *= r; k += 1 }
       i -= 1
     }
-    val z = DenseMatrix.zeros[Double](n, m)
-    val zd = z.data
-    var k2 = 0
-    while (k2 < m) {
-      var i2 = 0
-      val off = k2 * n
-      while (i2 < n) { zd(off + i2) = wArr(i2 * m + k2); i2 += 1 }
-      k2 += 1
+    // out(r, k) = sum_j C(r, j) * W(j, k). j OUTER: C's column j and W's
+    // row j are both contiguous (the r-outer form reads cd with a row-sized
+    // stride — pure cache misses), and out fits in L2. For each r the js
+    // still arrive in ascending order. A conversion-matrix column has at
+    // most one nonzero (each high-freq period maps to one low period), so
+    // this is O(n nl).
+    val out = DenseMatrix.zeros[Double](nl, nl)
+    val od = out.data
+    j = 0
+    while (j < n) {
+      val base = j * nl
+      var r = 0
+      while (r < nl) {
+        val cv = cd(base + r)
+        if (cv != 0.0) {
+          var k = 0
+          while (k < nl) { od(k * nl + r) += cv * wArr(base + k); k += 1 }
+        }
+        r += 1
+      }
+      j += 1
     }
-    z
+    (new DenseMatrix(nl, n, wArr), out)
   }
 
-  /** `C S C'` alone — the only covariance product the ML objective needs.
-    * Skips materializing the nl x n `C S` (whose transpose-scale costs more
-    * than every solve in the hot path); the full [[covProducts]] runs once
-    * per series for the final distribution step, this runs per optimizer
-    * evaluation.
-    */
   /** `c * m` exploiting C's row sparsity: each conversion-matrix row has
     * exactly `factor` nonzeros (a contiguous calendar window), so the dense
     * O(nl·n·k) gemm wastes a factor n/f of its flops on exact zeros — at
@@ -568,130 +370,21 @@ object Kernels {
     out
   }
 
+  /** `C S C'` alone — the only covariance product the ML objective needs.
+    * Skips scaling the nl x n `C S`; the full [[covProducts]] runs once per
+    * series for the final distribution step, this runs per optimizer
+    * evaluation.
+    */
   def csctOnly(
       kind: MlCov, rho: Double, sigmaSq: Double, n: Int,
-      c: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val band = kind match {
-      case ChowLinCov   => chowLinPrecisionBand(rho, n)
-      case LittermanCov => littermanPrecisionBand(rho, n)
-    }
-    cmic(band, c) * sigmaSq
-  }
-
-  /** Fused `C M^-1 C'` for a packed-band SPD M: the generic
-    * bandedSpdSolveB(band, c.t) + sparseRowProduct(c, z) pair spends more
-    * on layout (strided view load, column-major round-trip) than on
-    * arithmetic — here the work array IS C's buffer layout (one clone, no
-    * transpose), the banded substitution streams over nl-length runs, and
-    * the sparse product reads each z-row contiguously. Identical operation
-    * order per element as the two-step form.
-    */
-  private def cmic(band: Array[Array[Double]], c0: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val w = band.length - 1
-    val n = band(0).length
-    val cm = if (c0.isTranspose || c0.offset != 0 || c0.majorStride != c0.rows) c0.copy else c0
-    val nl = cm.rows
-    require(cm.cols == n, s"conversion matrix cols ${cm.cols} != n $n")
-    val cd = cm.data // column-major nl x n: column j (= C(:, j)) contiguous
-    // W(j*nl + k) = (M^-1 C')(j, k); the RHS load C'(j, k) = C(k, j) is
-    // exactly C's buffer
-    val wArr = cd.clone()
-    // banded Cholesky factor (same as bandedSpdSolveB)
-    val l = Array.ofDim[Double](w + 1, n)
-    var j = 0
-    while (j < n) {
-      var s = band(0)(j)
-      var k = math.max(0, j - w)
-      while (k < j) { val v = l(j - k)(k); s -= v * v; k += 1 }
-      val djj = math.sqrt(s)
-      l(0)(j) = djj
-      var d = 1
-      while (d <= w && j + d < n) {
-        var s2 = band(d)(j)
-        var k2 = math.max(0, j + d - w)
-        while (k2 < j) { s2 -= l(j + d - k2)(k2) * l(j - k2)(k2); k2 += 1 }
-        l(d)(j) = s2 / djj
-        d += 1
-      }
-      j += 1
-    }
-    // forward / backward substitution vectorized over the nl columns.
-    // The diagonal scaling multiplies by a precomputed reciprocal: the
-    // substitution is DIVISION-bound otherwise (2 n nl divides at 20-40
-    // cycles each vs the ~1 ulp the reciprocal costs in accuracy — well
-    // inside every tolerance this kernel is checked at)
-    val invDiag = new Array[Double](n)
-    var ii = 0
-    while (ii < n) { invDiag(ii) = 1.0 / l(0)(ii); ii += 1 }
-    var i = 0
-    while (i < n) {
-      val base = i * nl
-      var d = 1
-      while (d <= w && i - d >= 0) {
-        val f = l(d)(i - d)
-        val src = (i - d) * nl
-        var k = 0
-        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
-        d += 1
-      }
-      val r = invDiag(i)
-      var k = 0
-      while (k < nl) { wArr(base + k) *= r; k += 1 }
-      i += 1
-    }
-    i = n - 1
-    while (i >= 0) {
-      val base = i * nl
-      var d = 1
-      while (d <= w && i + d < n) {
-        val f = l(d)(i)
-        val src = (i + d) * nl
-        var k = 0
-        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
-        d += 1
-      }
-      val r = invDiag(i)
-      var k = 0
-      while (k < nl) { wArr(base + k) *= r; k += 1 }
-      i -= 1
-    }
-    // out(r, k) = sum_j C(r, j) * W(j, k). j OUTER: C's column j and W's
-    // row j are both contiguous (the r-outer form reads cd with a 3 KB
-    // stride — pure cache misses), and out fits in L2. For each r the js
-    // still arrive in ascending order, so per-element accumulation order
-    // is unchanged. A conversion-matrix column has exactly one nonzero
-    // (each high-freq period maps to one low period), so this is O(n nl).
-    val out = DenseMatrix.zeros[Double](nl, nl)
-    val od = out.data
-    j = 0
-    while (j < n) {
-      val cBase = j * nl
-      val src = j * nl
-      var r = 0
-      while (r < nl) {
-        val cv = cd(cBase + r)
-        if (cv != 0.0) {
-          var k = 0
-          while (k < nl) { od(k * nl + r) += cv * wArr(src + k); k += 1 }
-        }
-        r += 1
-      }
-      j += 1
-    }
-    out
-  }
+      c: DenseMatrix[Double]): DenseMatrix[Double] =
+    bandedCmi(precisionBand(kind, rho, n), c)._2 * sigmaSq
 
   def covProducts(
       kind: MlCov, rho: Double, sigmaSq: Double, n: Int,
-      c: DenseMatrix[Double]): CovProducts = kind match {
-    case ChowLinCov =>
-      val z = bandedSpdSolveB(chowLinPrecisionBand(rho, n), c.t) // n x nl
-      val cs = z.t * sigmaSq // C S = s2 (B^-1 C')'
-      CovProducts(sparseRowProduct(c, cs.t).t, cs)
-    case LittermanCov =>
-      val z = bandedSpdSolveB(littermanPrecisionBand(rho, n), c.t) // n x nl
-      val cs = z.t * sigmaSq // C S = s2 (M^-1 C')'
-      CovProducts(sparseRowProduct(c, cs.t).t, cs)
+      c: DenseMatrix[Double]): CovProducts = {
+    val (cmInv, cmic) = bandedCmi(precisionBand(kind, rho, n), c)
+    CovProducts(cmic * sigmaSq, cmInv * sigmaSq)
   }
 
   /** Apply S^-1 to a skinny matrix (for GLS standard errors) — banded
@@ -700,10 +393,7 @@ object Kernels {
   def sigmaInv(kind: MlCov, rho: Double, sigmaSq: Double,
       x: DenseMatrix[Double]): DenseMatrix[Double] = {
     val n = x.rows
-    val band = kind match {
-      case ChowLinCov   => chowLinPrecisionBand(rho, n)
-      case LittermanCov => littermanPrecisionBand(rho, n)
-    }
+    val band = precisionBand(kind, rho, n)
     val w = band.length - 1
     val out = DenseMatrix.zeros[Double](n, x.cols)
     var i = 0
@@ -727,14 +417,6 @@ object Kernels {
     }
     out
   }
-
-  /** GLS estimator (GLS_beta_hat, ts_disagg.py:117-131): one factorization of
-    * `C S C'` reused for both right-hand sides via a single multi-column solve.
-    */
-  def glsBetaHat(
-      sigma: DenseMatrix[Double], y: DenseVector[Double],
-      x: DenseMatrix[Double], c: DenseMatrix[Double]): DenseVector[Double] =
-    glsBetaHatFromCsct(c * sigma * c.t, y, x, c)
 
   /** One SPD Cholesky of `C S C'` shared by the GLS solve, the
     * log-determinant, and the residual whitening — the per-evaluation
@@ -785,6 +467,9 @@ object Kernels {
     2.0 * ldet
   }
 
+  /** GLS estimator (GLS_beta_hat, ts_disagg.py:117-131) from the Cholesky
+    * factor of `C S C'`: one multi-column solve serves both right-hand sides.
+    */
   def glsBetaHatFromChol(
       chol: DenseMatrix[Double], y: DenseVector[Double],
       x: DenseMatrix[Double], c: DenseMatrix[Double]): DenseVector[Double] = {
@@ -800,27 +485,14 @@ object Kernels {
 
   def glsBetaHatFromCsct(
       csct: DenseMatrix[Double], y: DenseVector[Double],
-      x: DenseMatrix[Double], c: DenseMatrix[Double]): DenseVector[Double] = {
-    val cx = sparseRowProduct(c, x)
-    val rhs = DenseMatrix.horzcat(cx, y.toDenseMatrix.t)
-    val z = csct \ rhs // one LU, k+1 right-hand sides
-    val z1 = z(::, 0 until cx.cols).toDenseMatrix
-    val z2 = z(::, cx.cols).toDenseVector
-    val a = cx.t * z1
-    val b = cx.t * z2
-    a \ b
-  }
+      x: DenseMatrix[Double], c: DenseMatrix[Double]): DenseVector[Double] =
+    glsBetaHatFromChol(cholesky(csct), y, x, c)
 
-  /** Concentrated Gaussian log-likelihood (log_likelihood, ts_disagg.py:84-87). */
-  def logLikelihood(nl: Int, csct: DenseMatrix[Double], ul: DenseVector[Double]): Double = {
-    val ld = logdet(csct)._2
-    -nl / 2.0 * math.log(2.0 * math.Pi) - 0.5 * (ld + (ul dot (csct \ ul)))
-  }
-
-  /** ML objective over (rho, sigma^2) (f_minimize, ts_disagg.py:134-152).
-    * The `(1+rho)` rescaling of sigma^2 (ts_disagg.py:140-144) is the
-    * reference's deliberate correction to match R `tempdisagg` — replicated
-    * bit-for-bit.
+  /** ML objective over (rho, sigma^2) (f_minimize, ts_disagg.py:134-152):
+    * the negated concentrated Gaussian log-likelihood (log_likelihood,
+    * ts_disagg.py:84-87) at the GLS beta. The `(1+rho)` rescaling of sigma^2
+    * (ts_disagg.py:140-144) is the reference's deliberate correction to
+    * match R `tempdisagg` — replicated bit-for-bit.
     */
   def negLogLikObjective(
       rho: Double, sigmaSqRaw: Double,

@@ -1,13 +1,15 @@
 package graft
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.{DenseMatrix, DenseVector, cholesky, logdet, max}
+import breeze.numerics.abs
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.{DisaggCore, Kernels, TsFrame}
+import graft.disagg.{AggFunc, DisaggCore, Kernels}
 import graft.time.Frequency
 
 /** Kernel unit tests against the reference's inline R-derived goldens
-  * (/root/reference/tests/test_computations.py).
+  * (tests/test_computations.py), and the banded production kernels against
+  * their dense oracle, [[DenseKernels]].
   */
 class KernelsSpec extends AnyFunSuite {
 
@@ -18,12 +20,34 @@ class KernelsSpec extends AnyFunSuite {
         s"($i,$j): ${got(i, j)} != ${want(i)(j)}")
   }
 
+  /** The covariance itself through the production path: `C S C'` with C = I. */
+  def bandedSigma(kind: Kernels.MlCov, n: Int): DenseMatrix[Double] =
+    Kernels.covProducts(kind, 0.95, 1.0, n, DenseMatrix.eye[Double](n)).csct
+
+  /** Symmetric dense matrix from a packed lower band (band(d)(j) = M(j+d, j)). */
+  def unband(band: Array[Array[Double]]): DenseMatrix[Double] = {
+    val n = band(0).length
+    DenseMatrix.tabulate(n, n) { (i, j) =>
+      val d = math.abs(i - j)
+      if (d < band.length) band(d)(math.min(i, j)) else 0.0
+    }
+  }
+
+  def relErr(got: DenseMatrix[Double], want: DenseMatrix[Double]): Double = {
+    assert(got.rows == want.rows && got.cols == want.cols, s"shape ${got.rows}x${got.cols}")
+    max(abs(got - want)) / max(abs(want))
+  }
+
+  def relErr(got: DenseVector[Double], want: DenseVector[Double]): Double =
+    relErr(got.toDenseMatrix, want.toDenseMatrix)
+
   test("chow-lin covariance 3x3 at rho=0.95 (test_computations.py:14-24)") {
     val want = Array(
       Array(10.25641, 9.74359, 9.25641),
       Array(9.74359, 10.25641, 9.74359),
       Array(9.25641, 9.74359, 10.25641))
-    assertMatClose(Kernels.chowLinCovariance(0.95, 1.0, 3), want, 1e-6)
+    assertMatClose(DenseKernels.chowLinCovariance(0.95, 1.0, 3), want, 1e-6)
+    assertMatClose(bandedSigma(Kernels.ChowLinCov, 3), want, 1e-6)
   }
 
   test("litterman covariance 5x5 at rho=0.95 vs tempdisagg:::CalcQ_Lit (:27-39)") {
@@ -33,15 +57,16 @@ class KernelsSpec extends AnyFunSuite {
       Array(2.852500, 7.512375, 12.939256, 18.094793, 22.992554),
       Array(3.709875, 10.086756, 18.094793, 26.702429, 34.879682),
       Array(4.524381, 12.532418, 22.992554, 34.879682, 47.172454))
-    assertMatClose(Kernels.littermanCovariance(0.95, 1.0, 5), want, 1e-6)
+    assertMatClose(DenseKernels.littermanCovariance(0.95, 1.0, 5), want, 1e-6)
+    assertMatClose(bandedSigma(Kernels.LittermanCov, 5), want, 1e-6)
   }
 
   test("difference matrix and denton covariance shapes") {
-    val d1 = Kernels.differenceMatrix(4, 1)
+    val d1 = DenseKernels.differenceMatrix(4, 1)
     assert(d1(0, 0) == 1.0 && d1(1, 0) == -1.0 && d1(1, 1) == 1.0 && d1(0, 1) == 0.0)
-    val d2 = Kernels.differenceMatrix(4, 2)
+    val d2 = DenseKernels.differenceMatrix(4, 2)
     assert(d2(2, 0) == 1.0 && d2(2, 1) == -2.0 && d2(2, 2) == 1.0)
-    val cov = Kernels.dentonCovariance(6, DenseVector.ones[Double](6), 1, proportional = true)
+    val cov = DenseKernels.dentonCovariance(6, DenseVector.ones[Double](6), 1, proportional = true)
     assert(cov.rows == 6 && cov.cols == 6)
   }
 
@@ -49,7 +74,7 @@ class KernelsSpec extends AnyFunSuite {
     val n = 7
     val rho = 0.7
     val s2 = 1.3
-    val slow = Kernels.littermanCovariance(rho, s2, n)
+    val slow = DenseKernels.littermanCovariance(rho, s2, n)
     val c = DenseMatrix.tabulate(2, n)((i, j) => if (j / 4 == i) 1.0 else 0.0)
     val fast = Kernels.covProducts(Kernels.LittermanCov, rho, s2, n, c)
     val wantCs = c * slow
@@ -75,25 +100,24 @@ class KernelsSpec extends AnyFunSuite {
     val n = highTs.length
     val x = DenseMatrix.tabulate(n, 2)((i, j) => if (j == 0) 1.0 else highV(i))
 
-    val sigma = Kernels.chowLinCovariance(0.95, 1.0, n)
-    val beta = Kernels.glsBetaHat(sigma, y, x, c)
-    Fixtures.assertAllClose(beta.toArray, Array(908.6679748, 0.9772889), 1e-6, "GLS beta")
+    val want = Array(908.6679748, 0.9772889)
+    val csct = Kernels.covProducts(Kernels.ChowLinCov, 0.95, 1.0, n, c).csct
+    Fixtures.assertAllClose(Kernels.glsBetaHatFromCsct(csct, y, x, c).toArray, want, 1e-6, "GLS beta")
+    val dense = DenseKernels.glsBetaHat(DenseKernels.chowLinCovariance(0.95, 1.0, n), y, x, c)
+    Fixtures.assertAllClose(dense.toArray, want, 1e-6, "dense GLS beta")
   }
 
   test("chow-lin tridiagonal precision is the exact inverse of the Toeplitz covariance") {
-    import breeze.linalg._
     for (rho <- Seq(1e-5, 0.3, 0.63, 0.95, 1.0 - 1e-5); n <- Seq(1, 2, 7, 40)) {
       val s2 = 2.1
-      val sigma = Kernels.chowLinCovariance(rho, s2, n)
-      val prec = Kernels.chowLinPrecision(rho, n) / s2
-      val prod = sigma * prec
-      val err = max(breeze.numerics.abs(prod - DenseMatrix.eye[Double](n)))
+      val sigma = DenseKernels.chowLinCovariance(rho, s2, n)
+      val prec = DenseKernels.chowLinPrecision(rho, n) / s2
+      val err = max(abs(sigma * prec - DenseMatrix.eye[Double](n)))
       assert(err < 1e-8, s"rho=$rho n=$n max |Sigma*Prec - I| = $err")
     }
   }
 
   test("bandedSpdSolve matches the dense solve on seeded SPD banded systems") {
-    import breeze.linalg._
     val rnd = new scala.util.Random(42)
     for (n <- Seq(5, 23, 60); w <- Seq(1, 2, 3)) {
       // SPD banded with half-bandwidth w: A = B B' + n*I, B lower-banded
@@ -102,58 +126,62 @@ class KernelsSpec extends AnyFunSuite {
       val a = b * b.t + DenseMatrix.eye[Double](n) * n.toDouble
       val rhs = DenseMatrix.tabulate(n, 3)((_, _) => rnd.nextDouble())
       val dense = a \ rhs
-      val banded = Kernels.bandedSpdSolve(a, w, rhs)
-      val err = max(breeze.numerics.abs(dense - banded))
+      val banded = DenseKernels.bandedSpdSolve(a, w, rhs)
+      val err = max(abs(dense - banded))
       assert(err < 1e-9, s"n=$n w=$w max diff $err")
     }
   }
 
   test("shared-Cholesky SPD helpers match dense solve and logdet") {
-    import breeze.linalg._
     val rnd = new scala.util.Random(7)
     for (n <- Seq(4, 17, 40)) {
       val b = DenseMatrix.tabulate(n, n)((_, _) => rnd.nextDouble() - 0.5)
       val a = b * b.t + DenseMatrix.eye[Double](n) * n.toDouble
       val chol = cholesky(a)
       val rhs = DenseMatrix.tabulate(n, 2)((_, _) => rnd.nextDouble())
-      val errM = max(breeze.numerics.abs((a \ rhs) - Kernels.spdSolveMat(chol, rhs)))
+      val errM = max(abs((a \ rhs) - Kernels.spdSolveMat(chol, rhs)))
       assert(errM < 1e-9, s"n=$n spdSolveMat diff $errM")
       val v = DenseVector.tabulate(n)(_ => rnd.nextDouble())
-      val errV = max(breeze.numerics.abs((a \ v) - Kernels.spdSolveVec(chol, v)))
+      val errV = max(abs((a \ v) - Kernels.spdSolveVec(chol, v)))
       assert(errV < 1e-9, s"n=$n spdSolveVec diff $errV")
       val ldErr = math.abs(logdet(a)._2 - Kernels.spdLogDet(chol))
       assert(ldErr < 1e-9, s"n=$n logdet diff $ldErr")
-      // packed precision builders == dense builders (band extraction)
+      // packed precision bands against their definitions
       for (rho <- Seq(0.3, 0.95)) {
-        val denseB = Kernels.chowLinPrecision(rho, n)
-        val band = Kernels.chowLinPrecisionBand(rho, n)
-        for (d <- 0 to 1; j <- 0 until n - d)
-          assert(band(d)(j) == denseB(j + d, j), s"chowlin band d=$d j=$j")
-        val denseL = Kernels.littermanPrecision(rho, n)
-        val bandL = Kernels.littermanPrecisionBand(rho, n)
-        for (d <- 0 to 2; j <- 0 until n - d)
-          assert(bandL(d)(j) == denseL(j + d, j), s"litterman band d=$d j=$j")
+        val sigma = DenseKernels.chowLinCovariance(rho, 1.0, n)
+        val errB = max(abs(sigma * unband(Kernels.chowLinPrecisionBand(rho, n)) - DenseMatrix.eye[Double](n)))
+        assert(errB < 1e-8, s"chow-lin rho=$rho n=$n max |Sigma*band - I| = $errB")
+        val errL = relErr(unband(Kernels.littermanPrecisionBand(rho, n)), DenseKernels.littermanPrecision(rho, n))
+        assert(errL < 1e-14, s"litterman rho=$rho n=$n band vs (HD)'(HD) rel diff $errL")
       }
     }
   }
 
+  /** The full n x nl distribution matrix of an apply form: column k is D e_k. */
+  def appliedMatrix(nl: Int)(apply: DenseVector[Double] => DenseVector[Double]): DenseMatrix[Double] = {
+    val cols = (0 until nl).map { k =>
+      val e = DenseVector.zeros[Double](nl)
+      e(k) = 1.0
+      apply(e).toDenseMatrix.t
+    }
+    DenseMatrix.horzcat(cols: _*)
+  }
+
   test("banded denton distribution equals the dense-inverse formulation") {
-    import breeze.linalg._
     val n = 20
     val x = DenseVector.tabulate(n)(i => 40.0 + 3.0 * math.sin(i * 0.4) + 0.5 * i)
     val c = DenseMatrix.zeros[Double](5, n)
     for (r <- 0 until 5; j <- 0 until 4) c(r, r * 4 + j) = 1.0
     for (h <- Seq(1, 2); prop <- Seq(true, false)) {
-      val dense = Kernels.distributionMatrix(
-        Kernels.dentonCovariance(n, x, h, prop), c)
-      val banded = Kernels.dentonDistribution(n, x, h, prop, c)
-      val err = max(breeze.numerics.abs(dense - banded))
+      val dense = DenseKernels.distributionMatrix(
+        DenseKernels.dentonCovariance(n, x, h, prop), c)
+      val banded = appliedMatrix(c.rows)(Kernels.dentonApply(n, x, h, prop, c, _))
+      val err = max(abs(dense - banded))
       assert(err < 1e-8, s"h=$h prop=$prop max diff $err")
     }
   }
 
   test("banded denton-cholette KKT equals the dense KKT across agg shapes") {
-    import breeze.linalg._
     val n = 48
     val nl = 11 // one incomplete trailing period left out, like the real mask
     val x = DenseVector.tabulate(n)(i => 40.0 + 3.0 * math.sin(i * 0.4) + 0.5 * i)
@@ -170,11 +198,70 @@ class KernelsSpec extends AnyFunSuite {
       "first" -> blockC((r, f) => Seq((r * f, 1.0))),
       "last" -> blockC((r, f) => Seq((r * f + f - 1, 1.0))))
     for ((name, c) <- shapes; h <- Seq(1, 2); prop <- Seq(true, false)) {
-      val dense = Kernels.dentonCholetteDistributionDense(n, nl, c, x, h, prop)
-      val banded = Kernels.dentonCholetteDistribution(n, nl, c, x, h, prop)
-      val scale = max(breeze.numerics.abs(dense))
-      val err = max(breeze.numerics.abs(dense - banded)) / scale
+      val dense = DenseKernels.dentonCholetteDistributionDense(n, nl, c, x, h, prop)
+      val banded = appliedMatrix(nl)(Kernels.dentonCholetteApply(n, nl, c, x, h, prop, _))
+      val scale = max(abs(dense))
+      val err = max(abs(dense - banded)) / scale
       assert(err < 1e-8, s"agg=$name h=$h prop=$prop max rel diff $err")
+    }
+  }
+
+  /** Every banded production kernel against its dense oracle, over a seeded
+    * sweep of real calendars: frequency ratio 3 (Q->M), 4 (Y->Q) and 12
+    * (Y->M), with and without a trailing incomplete low period (whose
+    * all-zero C row is dropped, as DisaggCore.run drops it), every agg, rho
+    * from near 0 to 0.95, h in {1, 2} and both criteria. Series stay short
+    * enough (n <= 107) that the dense inverses are themselves accurate to
+    * well below the 1e-8 relative bound.
+    */
+  test("banded kernels equal the dense oracle over (n, rho, factor, agg, h, criterion)") {
+    val rnd = new scala.util.Random(20240517)
+    val calendars = Seq(("QS", "MS", 3), ("YS", "QS", 4), ("YS", "MS", 12))
+    val tol = 1e-8
+    for ((lowF, highF, f) <- calendars; trailing <- Seq(false, true); agg <- AggFunc.all) {
+      val nl = 3 + rnd.nextInt(if (f == 12) 6 else 12)
+      val extra = if (trailing) 1 + rnd.nextInt(f - 1) else 0
+      val lowFreq = Frequency.parseValidated(lowF)
+      val lowTs = Fixtures.freqDates("1990-01-01", lowF, nl + (if (trailing) 1 else 0))
+      val highTs = Fixtures.freqDates("1990-01-01", highF, nl * f + extra)
+      val c0 = DisaggCore.buildConversionMatrix(lowTs, lowFreq, highTs, f, agg)
+      val keep = (0 until c0.rows).filter(i => (0 until c0.cols).exists(j => c0(i, j) != 0.0))
+      val c = DenseMatrix.tabulate(keep.length, c0.cols)((i, j) => c0(keep(i), j))
+      assert(c.rows == nl, s"$lowF->$highF trailing=$trailing kept ${c.rows} of ${c0.rows} rows")
+      val n = highTs.length
+      val x = DenseVector.tabulate(n)(i => 40.0 + 3.0 * math.sin(i * 0.4) + 0.5 * i + rnd.nextDouble())
+      val xm = DenseMatrix.horzcat(DenseMatrix.ones[Double](n, 1), x.toDenseMatrix.t)
+      val y = c * (xm * DenseVector(10.0, 2.0)) + DenseVector.fill(nl)(5.0 * rnd.nextGaussian())
+      val shape = s"$lowF->$highF n=$n nl=$nl agg=$agg"
+
+      for (rho <- Seq(1e-5, 0.3, 0.63, 0.95); kind <- Seq(Kernels.ChowLinCov, Kernels.LittermanCov)) {
+        val s2 = 0.5 + rnd.nextDouble()
+        val what = s"$shape $kind rho=$rho"
+        val sigma = DenseKernels.covariance(kind, rho, s2, n)
+        val prod = Kernels.covProducts(kind, rho, s2, n, c)
+        val errCs = relErr(prod.cSigma, c * sigma)
+        assert(errCs < tol, s"$what C Sigma rel diff $errCs")
+        val errCsct = relErr(prod.csct, c * sigma * c.t)
+        assert(errCsct < tol, s"$what C Sigma C' rel diff $errCsct")
+        val obj = Kernels.negLogLikObjective(rho, s2, y, xm, c, kind)
+        val want = DenseKernels.fMinimize(rho, s2, y, xm, c, kind)
+        assert(math.abs(obj - want) <= tol * math.abs(want), s"$what objective $obj vs dense $want")
+        val se = Kernels.glsStdErrors(kind, rho, s2, xm)
+        val seWant = DenseKernels.glsStdErrors(sigma, xm)
+        for (i <- 0 until se.length)
+          assert(math.abs(se(i) - seWant(i)) <= tol * seWant(i), s"$what std error $i: ${se(i)} vs ${seWant(i)}")
+      }
+
+      val ul = y - c * x
+      for (h <- Seq(1, 2); prop <- Seq(true, false)) {
+        val what = s"$shape h=$h proportional=$prop"
+        val dentonWant = DenseKernels.distributionMatrix(DenseKernels.dentonCovariance(n, x, h, prop), c) * ul
+        val errD = relErr(Kernels.dentonApply(n, x, h, prop, c, ul), dentonWant)
+        assert(errD < tol, s"$what denton D ul rel diff $errD")
+        val dcWant = DenseKernels.dentonCholetteDistributionDense(n, nl, c, x, h, prop) * ul
+        val errDc = relErr(Kernels.dentonCholetteApply(n, nl, c, x, h, prop, ul), dcWant)
+        assert(errDc < tol, s"$what denton-cholette D ul rel diff $errDc")
+      }
     }
   }
 
