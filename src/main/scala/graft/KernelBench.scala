@@ -18,9 +18,13 @@ import graft.time.Frequency
   *     [baseline: 24.0 ms]
   *
   * Synthetic deterministic series (no RNG). Median of `reps` after a JIT
-  * warmup.
+  * warmup. `runMain graft.KernelBench` prints them alone (no Spark
+  * session) — quick feedback while tuning graft.disagg.Kernels without
+  * paying the full Bench query sweep.
   */
 object KernelBench {
+  def main(args: Array[String]): Unit =
+    run().sortBy(_._1).foreach { case (k, v) => println(f"$k%-42s $v%10.3f ms") }
 
   private def syntheticLow(nYears: Int, start: LocalDate = LocalDate.of(1975, 1, 1)): TsFrame = {
     val ts = Frequency.parseValidated("YS").nDatesFrom(start, nYears)

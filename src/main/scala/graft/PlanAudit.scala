@@ -3,30 +3,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Print physical plans for selected queries so shuffle/broadcast/codegen
-  * shape can be audited by eye (`runMain graft.PlanAudit [names...]`).
+  * shape can be audited by eye (`runMain graft.PlanAudit [--exec]
+  * [names...]`, SPARK_GRAFT_SF_DIR selects the corpus). With `--exec` each
+  * query is EXECUTED and the FINAL AQE plan printed with its
+  * WholeStageCodegen annotations (the initial `explain` of an adaptive
+  * plan shows neither codegen spans nor AQE rewrites; r12 needed the
+  * runtime truth to attribute per-row CPU).
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
+    val exec = args.headOption.contains("--exec")
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     // sf0.001 keeps the audit fast, but auto-broadcast fires everywhere at
     // that size — for a bench-faithful plan pass SPARK_GRAFT_SF_DIR=sf0.1
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val names = if (args.nonEmpty) args.toSeq
+    val given = args.drop(if (exec) 1 else 0).toSeq
+    val names = if (given.nonEmpty) given
       else Seq("dedup_embedding_cosine", "cube_revenue", "window_topk_per_group")
     names.foreach { n =>
-      println(s"\n=== $n ===")
-      println(plan(spark, dir, n))
+      println(s"\n=== $n${if (exec) " (executed)" else ""} ===")
+      println(if (exec) executedPlanString(spark, dir, n) else plan(spark, dir, n))
     }
     spark.stop()
   }
 
-  /** `GRAFT_PLAN_EXEC=1 runMain graft.PlanAuditExec [names...]` — EXECUTE
-    * each query (noop sink) and print the FINAL AQE plan with
-    * WholeStageCodegen annotations (the initial `explain` of an adaptive
-    * plan shows neither codegen spans nor AQE rewrites; r12 needed the
-    * runtime truth to attribute per-row CPU).
-    */
+  /** The final executed plan of a query, run once to completion. */
   private[graft] def executedPlanString(
       spark: SparkSession, dir: String, name: String): String = {
     val df = plannedFrame(spark, dir, name)
@@ -65,22 +67,5 @@ object PlanAudit {
           parts = 32, rowsHint = 2L * liRows)
       case _ => SparkEntry.queries(name)(spark, dir)
     }
-  }
-}
-
-/** Execute-and-print companion of [[PlanAudit]]: the final AQE plan with
-  * WholeStageCodegen spans (`runMain graft.PlanAuditExec [names...]`,
-  * SPARK_GRAFT_SF_DIR selects the corpus).
-  */
-object PlanAuditExec {
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    args.foreach { n =>
-      println(s"\n=== $n (executed) ===")
-      println(PlanAudit.executedPlanString(spark, dir, n))
-    }
-    spark.stop()
   }
 }

@@ -1,79 +1,23 @@
 package graft.disagg
 
 import breeze.linalg.{DenseMatrix, DenseVector}
+import org.apache.commons.math3.distribution.TDistribution
 
 /** GLS regression report (print_regression_report,
   * /root/reference/tsdisagg/ts_disagg.py:179-210). Print-only — no golden
-  * output depends on it. Student-t tail probabilities come from the
-  * regularized incomplete beta function (standard continued-fraction
-  * evaluation, e.g. Numerical Recipes §6.4 / DLMF 8.17).
+  * output depends on it. Student-t probabilities come from commons-math3's
+  * `TDistribution`; with no degrees of freedom left (df <= 0, tiny inputs)
+  * they read NaN, so a verbose run never fails on the report.
   */
 object Report {
 
-  /** Regularized incomplete beta I_x(a, b) by Lentz's continued fraction. */
-  def betainc(a: Double, b: Double, x: Double): Double = {
-    if (x <= 0.0) return 0.0
-    if (x >= 1.0) return 1.0
-    val lbeta = breeze.numerics.lgamma(a) + breeze.numerics.lgamma(b) -
-      breeze.numerics.lgamma(a + b)
-    val front = math.exp(a * math.log(x) + b * math.log(1.0 - x) - lbeta)
-    def cf(a: Double, b: Double, x: Double): Double = {
-      val eps = 1e-15
-      val fpmin = 1e-300
-      var c = 1.0
-      var d = 1.0 - (a + b) * x / (a + 1.0)
-      if (math.abs(d) < fpmin) d = fpmin
-      d = 1.0 / d
-      var h = d
-      var m = 1
-      var done = false
-      while (m <= 300 && !done) {
-        val m2 = 2 * m
-        var aa = m * (b - m) * x / ((a + m2 - 1.0) * (a + m2))
-        d = 1.0 + aa * d
-        if (math.abs(d) < fpmin) d = fpmin
-        c = 1.0 + aa / c
-        if (math.abs(c) < fpmin) c = fpmin
-        d = 1.0 / d
-        h *= d * c
-        aa = -(a + m) * (a + b + m) * x / ((a + m2) * (a + m2 + 1.0))
-        d = 1.0 + aa * d
-        if (math.abs(d) < fpmin) d = fpmin
-        c = 1.0 + aa / c
-        if (math.abs(c) < fpmin) c = fpmin
-        d = 1.0 / d
-        val del = d * c
-        h *= del
-        if (math.abs(del - 1.0) < eps) done = true
-        m += 1
-      }
-      h
-    }
-    if (x < (a + 1.0) / (a + b + 2.0)) front * cf(a, b, x) / a
-    else 1.0 - math.exp(b * math.log(1.0 - x) + a * math.log(x) -
-      (breeze.numerics.lgamma(a) + breeze.numerics.lgamma(b) - breeze.numerics.lgamma(a + b))) *
-      cf(b, a, 1.0 - x) / b
-  }
-
   /** Student-t survival function P(T > t), df degrees of freedom. */
-  def tSf(t: Double, df: Double): Double = {
-    val x = df / (df + t * t)
-    val tail = 0.5 * betainc(df / 2.0, 0.5, x)
-    if (t >= 0) tail else 1.0 - tail
-  }
+  def tSf(t: Double, df: Double): Double =
+    if (df > 0) new TDistribution(df).cumulativeProbability(-t) else Double.NaN
 
-  /** Student-t two-sided critical value t_{1-alpha/2, df} via bisection. */
-  def tPpf(p: Double, df: Double): Double = {
-    var lo = 0.0
-    var hi = 1e3
-    var i = 0
-    while (i < 200) {
-      val mid = (lo + hi) / 2.0
-      if (1.0 - tSf(mid, df) < p) lo = mid else hi = mid
-      i += 1
-    }
-    (lo + hi) / 2.0
-  }
+  /** Student-t quantile: the t with P(T <= t) = p. */
+  def tPpf(p: Double, df: Double): Double =
+    if (df > 0) new TDistribution(df).inverseCumulativeProbability(p) else Double.NaN
 
   def printRegressionReport(
       targetName: String,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.{DisaggCore, TsFrame}
+import graft.disagg.{DisaggCore, Report, TsFrame}
 
 /** End-to-end golden parity vs R `tempdisagg` outputs — the reference's own
   * correctness corpus (/root/reference/tests/test_disaggregation.py:142-363).
@@ -181,5 +181,33 @@ class DisaggGoldenSpec extends AnyFunSuite {
     assert(e9.getMessage.contains(
       "Only annual, quarterly and monthly frequencies are supported, found W-WED"),
       e9.getMessage)
+  }
+
+  test("regression report: Student-t tails match the closed forms") {
+    for (t <- Seq(-7.5, -1.3, -0.2, 0.0, 0.4, 1.0, 2.5, 12.0, 150.0)) {
+      assert(math.abs(Report.tSf(t, 1) - (0.5 - math.atan(t) / math.Pi)) < 1e-12, s"df=1 t=$t")
+      assert(math.abs(Report.tSf(t, 2) - (0.5 - t / (2 * math.sqrt(t * t + 2)))) < 1e-12,
+        s"df=2 t=$t")
+    }
+    for (df <- Seq(1.0, 2.0, 5.0, 30.0); p <- Seq(0.05, 0.5, 0.9, 0.975, 0.995))
+      assert(math.abs(Report.tSf(Report.tPpf(p, df), df) - (1 - p)) < 1e-9, s"df=$df p=$p")
+    // no degrees of freedom left (tiny inputs): NaN, never an exception
+    assert(Report.tSf(1.0, 0).isNaN && Report.tPpf(0.975, -1).isNaN)
+  }
+
+  test("regression report: verbose chow-lin prints the GLS table") {
+    val buf = new java.io.ByteArrayOutputStream
+    Console.withOut(buf) {
+      DisaggCore.run(salesA, Some(withConstant(exportsQ)),
+        method = "chow-lin", aggFunc = "sum", optimizerMethod = "powell", verbose = true)
+    }
+    val lines = buf.toString("UTF-8").linesIterator.toVector
+    assert(lines.exists(_.startsWith("Dependent Variable")), lines.mkString("\n"))
+    val rows = lines.dropWhile(!_.startsWith("-" * 100)).drop(1).takeWhile(_.nonEmpty)
+    assert(rows.size == 2, lines.mkString("\n"))
+    rows.foreach { r =>
+      val p = r.trim.split("\\s+")(4).toDouble
+      assert(p >= 0 && p <= 1, r)
+    }
   }
 }

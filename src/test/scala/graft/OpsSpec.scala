@@ -187,6 +187,17 @@ class OpsSpec extends AnyFunSuite {
       "chowlin_objective_eval_n158_ms" -> 0.573)) == -1.0)
   }
 
+  test("bench timer: wall seconds, or -1 when the frame or the query name fails") {
+    assert(Bench.query(spark, dir, "a1_scan_project_filter") > 0)
+    assert(Bench.query(spark, dir, "no_such_query") == -1.0)
+    assert(Bench.seconds("throws")(spark.range(3).select(
+      assert_true(col("id") < 0)).toDF()) == -1.0)
+    assert(Bench.seconds("build fails")(throw new IllegalStateException("no frame")) == -1.0)
+    assert(Bench.best(3)(Bench.query(spark, dir, "a1_scan_project_filter")) > 0)
+    var runs = 0
+    assert(Bench.best(3) { runs += 1; -1.0 } == -1.0 && runs == 1)
+  }
+
   test("spill guard covers every exploded-index operator (r9 VERDICT #3)") {
     // same corpus×expansion shuffle shape as jaccard-prefix — each of the
     // four refuses an over-budget corpus up front, naming its alternative,

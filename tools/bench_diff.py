@@ -11,8 +11,11 @@ a uniformly slower container doesn't read as 193 regressions
 TimeQ archaeology; the detail file + this diff replaces it).
 
 Prints the topN regressions and improvements by normalized delta, plus
-queries present in only one side. Small absolute deltas (<0.3 s) are
-suppressed — they sit inside the container's documented run-to-run band.
+queries present in only one side. A query that failed reads -1 in the
+payload; the failed queries of each side are listed on their own and only
+queries measured on both sides are diffed. Small absolute deltas (<0.3 s)
+are suppressed — they sit inside the container's documented run-to-run
+band.
 """
 import json
 import sys
@@ -26,20 +29,26 @@ def load(path):
     host = final.get("host_index", 1.0)
     if not host or host <= 0:
         host = 1.0
-    return {k: v / host for k, v in detail["queries"].items()}, final
+    queries = detail["queries"]
+    failed = sorted(k for k, v in queries.items() if v < 0)
+    measured = {k: v / host for k, v in queries.items() if v >= 0}
+    return measured, failed, final
 
 
 def main():
     if len(sys.argv) < 3:
         sys.exit(__doc__)
-    old, fold = load(sys.argv[1])
-    new, fnew = load(sys.argv[2])
+    old, failed_old, fold = load(sys.argv[1])
+    new, failed_new, fnew = load(sys.argv[2])
     top_n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     print(f"old total={fold['value']} (host {fold.get('host_index')}) -> "
           f"new total={fnew['value']} (host {fnew.get('host_index')}, "
           f"end {fnew.get('host_index_end', 'n/a')})")
-    only_old = sorted(set(old) - set(new))
-    only_new = sorted(set(new) - set(old))
+    for side, failed in (("old", failed_old), ("new", failed_new)):
+        if failed:
+            print(f"failed in {side}:", ", ".join(failed))
+    only_old = sorted(set(old) - set(new) - set(failed_new))
+    only_new = sorted(set(new) - set(old) - set(failed_old))
     if only_old:
         print("only in old:", ", ".join(only_old))
     if only_new:
