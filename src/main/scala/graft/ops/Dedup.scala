@@ -416,15 +416,19 @@ object Dedup {
     * 8-byte hashes, or exploding window substrings at other densities,
     * pass their own factor (each call site documents its arithmetic).
     */
-  /** @return the measured corpus character count (reusable by the caller
-    *          for self-sizing decisions — one agg scan, not two). Measured
-    *          even when the guard is disabled (`maxSpillBytes == 0`): only
-    *          the budget CHECK is skipped — r11 ADVICE found the −1 return
-    *          silently turned OFF the jaccard verify-stage widening in
-    *          exactly the provisioned-disk/large-corpus scenario where the
-    *          single-threaded intersect stage hurts most.
-    */
   private[graft] def guardIndexSpill(docs: DataFrame, textCol: String,
+      op: String, alternative: String, maxSpillBytes: Long,
+      bytesPerChar: Long = 8L): Unit =
+    if (maxSpillBytes != 0L)
+      measureIndexSpill(docs, textCol, op, alternative, maxSpillBytes, bytesPerChar)
+
+  /** [[guardIndexSpill]] for callers that size their own work from the
+    * corpus character count (one agg scan, not two).
+    * @return the measured count, measured even when the guard is disabled
+    *         (`maxSpillBytes == 0`): only the budget CHECK is skipped, so a
+    *         provisioned-disk, large-corpus run keeps its self-sizing.
+    */
+  private[graft] def measureIndexSpill(docs: DataFrame, textCol: String,
       op: String, alternative: String, maxSpillBytes: Long,
       bytesPerChar: Long = 8L): Long = {
       val charsCol =
@@ -500,7 +504,7 @@ object Dedup {
       parts: Int = 32,
       maxSpillBytes: Long = -1L): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen, "threshold in (0, 1]")
-    val totalChars = guardIndexSpill(docs, textCol, "jaccardPrefixPairs",
+    val totalChars = measureIndexSpill(docs, textCol, "jaccardPrefixPairs",
       "Dedup.subsetDocs (dedup_jaccard_prefix_subset)", maxSpillBytes)
     // HASHED index keys (r11 VERDICT #9, guide §2.3 narrower types): the
     // three index-scale exchanges ship h = xxhash64(shingle) longs instead

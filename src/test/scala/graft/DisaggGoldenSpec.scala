@@ -34,11 +34,18 @@ class DisaggGoldenSpec extends AnyFunSuite {
     assertAllClose(out.values, want, 1e-5, "denton-cholette w/ indicator")
   }
 
+  // The reference fits the next three goldens with powell; each one also
+  // runs on the default (nelder-mead), which must land on the same optimum
+  // rather than stop at the rho bound.
+  private val powellAndDefault = Seq("powell", "nelder-mead")
+
   test("chow-lin A->Q, powell (R_output_chow_lin.csv, test:175-189)") {
     val want = rValues("R_output_chow_lin.csv")
-    val out = DisaggCore.run(salesA, Some(withConstant(exportsQ)),
-      method = "chow-lin", aggFunc = "sum", optimizerMethod = "powell")
-    assertAllClose(out.values, want, 1e-5, "chow-lin")
+    for (m <- powellAndDefault) {
+      val out = DisaggCore.run(salesA, Some(withConstant(exportsQ)),
+        method = "chow-lin", aggFunc = "sum", optimizerMethod = m)
+      assertAllClose(out.values, want, 1e-5, s"chow-lin $m")
+    }
   }
 
   test("chow-lin two indicators, l-bfgs-b (R_output_chow_lin_two_indicator.csv, test:265-281)") {
@@ -77,10 +84,12 @@ class DisaggGoldenSpec extends AnyFunSuite {
     val low = frame(lowTs, "Value" -> lowV)
     val high = TsFrame(highTs, IndexedSeq("Value_m", "intercept"),
       IndexedSeq(highV, Array.fill(highV.length)(1.0)))
-    val out = DisaggCore.run(low, Some(high),
-      method = "chow-lin", aggFunc = "first", optimizerMethod = "powell")
-    assert(out.ts.length == want.length)
-    assertAllClose(out.values, want, 1e-3, "chow-lin QtoM backcast")
+    for (m <- powellAndDefault) {
+      val out = DisaggCore.run(low, Some(high),
+        method = "chow-lin", aggFunc = "first", optimizerMethod = m)
+      assert(out.ts.length == want.length)
+      assertAllClose(out.values, want, 1e-3, s"chow-lin QtoM backcast $m")
+    }
   }
 
   test("chow-lin A->Q backcasting + optimizer success (AL_A_to_Q_expected.csv, test:224-263)") {
@@ -95,11 +104,13 @@ class DisaggGoldenSpec extends AnyFunSuite {
     val low = frame(lowTs, "value" -> lowV)
     val high = TsFrame(highTs, IndexedSeq("Value", "intercept"),
       IndexedSeq(highV, Array.fill(highV.length)(1.0)))
-    val out = DisaggCore.run(low, Some(high),
-      method = "chow-lin", aggFunc = "first", optimizerMethod = "powell")
-    assert(out.optim.exists(_.success))
-    assert(out.values.length == want.length)
-    assertAllClose(out.values, want, 1e-3, "chow-lin AtoQ backcast")
+    for (m <- powellAndDefault) {
+      val out = DisaggCore.run(low, Some(high),
+        method = "chow-lin", aggFunc = "first", optimizerMethod = m)
+      assert(out.optim.exists(_.success))
+      assert(out.values.length == want.length)
+      assertAllClose(out.values, want, 1e-3, s"chow-lin AtoQ backcast $m")
+    }
   }
 
   test("additive criterion preserves aggregation consistency (no golden exists)") {
@@ -171,6 +182,13 @@ class DisaggGoldenSpec extends AnyFunSuite {
       DisaggCore.run(quarterly, None, method = "denton", aggFunc = "sum",
         targetColumn = Some("nope")))
     assert(e10.getMessage.contains("target_column nope not found"))
+
+    val e11 = intercept[IllegalArgumentException](
+      DisaggCore.run(salesA, Some(withConstant(exportsQ)),
+        method = "chow-lin", aggFunc = "sum", optimizerMethod = "bfgs"))
+    assert(e11.getMessage.contains("Unsupported optimizer method bfgs"), e11.getMessage)
+    for (m <- Seq("nelder-mead", "powell", "l-bfgs-b"))
+      assert(e11.getMessage.contains(m), e11.getMessage)
 
     // inferable-but-unsupported frequency: weekly infers like pandas
     // ("W-WED") and then fails validate_freqs-style (time_conversion.py:66-71)

@@ -227,6 +227,39 @@ class OpsSpec extends AnyFunSuite {
     assert(Queries.dedupLrsLadder(spark, dir).count() == 4)
   }
 
+  test("spill guard off (0) runs no corpus scan on the operators that discard the count") {
+    // noveltySignals, quoteAttribution and ngramJaccardPairs only check the
+    // budget, so with the guard off they must not pay the sum(length(text))
+    // scan; an explicit budget still runs it. The frames are built, never
+    // run, so the only jobs in each window are the scan's and the
+    // operator's own sizing (quoteAttribution's docs.count()).
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(build: => Any): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      build
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    val d = docs.drop("n_chars")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ops = Seq[(String, Long => DataFrame)](
+        "noveltySignals" -> (b => TextOps.noveltySignals(d, maxSpillBytes = b)),
+        "quoteAttribution" -> (b => TextOps.quoteAttribution(d, maxSpillBytes = b)),
+        "ngramJaccardPairs" -> (b => Dedup.ngramJaccardPairs(d, maxSpillBytes = b)))
+      val scan = jobsOf(Dedup.measureIndexSpill(d, "text", "scan", "none", 0L))
+      assert(scan > 0)
+      for ((name, op) <- ops)
+        assert(jobsOf(op(Long.MaxValue)) - jobsOf(op(0L)) == scan, name)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("spill guard default (-1) audits against measured scratch dirs (r10 ADVICE)") {
     // the gate used to read `maxSpillBytes >= 0`, which silently DISABLED
     // the default auto-audit (-1) and ran it for the documented-disabled 0.
