@@ -3,6 +3,8 @@ package graft.disagg
 import java.sql.Timestamp
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,10 +23,11 @@ case class KeyedOut(series_id: Long, ts: LocalDateTime, value: Double)
   * (/root/reference/tsdisagg/ts_disagg.py:302-472).
   *
   * Two execution shapes:
-  *  - [[series]]: one series. The frame is tiny (n = O(10^3)); it is collected
-  *    once, the Breeze kernel runs on the driver, and the result is returned
-  *    as a DataFrame. Spark's job here is I/O + validation pushdown, not the
-  *    O(n^3) solve.
+  *  - [[series]]: one series. The frame is tiny (n = O(10^3)), so each input
+  *    costs ONE Spark job: its projection is collected as it is and sorted on
+  *    the driver. The Breeze kernel runs on the driver, and the result comes
+  *    back as a local relation, which `collect()` reads without a job. Spark's
+  *    job here is I/O + validation pushdown, not the O(n^3) solve.
   *  - [[manySeries]]: millions of independent series keyed by an id column.
   *    Both inputs are co-partitioned by the key via `groupByKey.cogroup`
   *    (ONE shuffle each, then embarrassingly parallel kernels inside
@@ -62,9 +65,17 @@ object Disaggregate {
     case other => throw new IllegalArgumentException(s"Unsupported time value $other")
   }
 
+  // Wall-clock order of the NTZ external type, shared by both execution shapes.
+  private val byDateTime: Ordering[LocalDateTime] = (a, b) => a.compareTo(b)
+
   /** Collect a (tsCol, value...) DataFrame into a sorted in-memory TsFrame.
     * Validation mirrors ts_disagg.py:216-231 (message text pinned by the
     * reference's error-path tests).
+    *
+    * One job: the projection is collected unordered and sorted on the driver
+    * (stable, on the full timestamp). A global `orderBy` would plan a range
+    * exchange, which costs a sampling job and a shuffle stage on top of the
+    * result stage, for a frame of at most a few thousand rows.
     */
   private[graft] def collectTsFrame(df: DataFrame, tsCol: String, role: String): TsFrame = {
     val schema = df.schema
@@ -82,8 +93,9 @@ object Disaggregate {
       // every date by up to a day and corrupt calendar period keys)
       .select((col(tsCol).cast(TimestampNTZType) +:
         valueCols.map(c => col(c).cast(DoubleType))): _*)
-      .orderBy(col(tsCol))
       .collect()
+      // nulls first, as in an ascending orderBy; toLocalDate rejects them below
+      .sortBy(r => Option(r.getAs[LocalDateTime](0)))(Ordering.Option(byDateTime))
     val ts = rows.map(r => toLocalDate(r.get(0))).toIndexedSeq
     val data = valueCols.indices.map { j =>
       rows.map(r => if (r.isNullAt(j + 1)) Double.NaN else r.getDouble(j + 1))
@@ -118,12 +130,15 @@ object Disaggregate {
       params.lowFreq, params.highFreq, params.optimizerOptions)
   }
 
+  /** The result as a local relation: the rows live in the plan, so
+    * `collect()` on it runs no Spark job.
+    */
   private[graft] def toDataFrame(spark: SparkSession, out: DisaggOutput, tsCol: String): DataFrame = {
     val schema = StructType(Seq(
       StructField(tsCol, TimestampNTZType, nullable = false),
       StructField(out.name, DoubleType, nullable = false)))
     val rows = out.ts.zip(out.values).map { case (d, v) => Row(d.atStartOfDay(), v) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   // ---------------------------------------------------------------- manySeries
@@ -180,8 +195,7 @@ object Disaggregate {
         // skipped — at pipeline scale one poisoned series must not kill
         // the job
         try {
-          implicit val ldtOrd: Ordering[LocalDateTime] =
-            Ordering.by(d => d.toLocalDate.toEpochDay * 86400000000000L + d.toLocalTime.toNanoOfDay)
+          implicit val ldtOrd: Ordering[LocalDateTime] = byDateTime
           val lowRows = lowIt.toArray.filter(_.ts != null).sortBy(_.ts)
           if (lowRows.isEmpty) Iterator.empty
           else {

@@ -17,6 +17,11 @@ package graft.disagg
   */
 object Optimizer {
 
+  /** `success` means the last simplex met both `xatol` and `fatol` before
+    * `maxIter` iterations. It is a stopping test, not evidence that `x` is
+    * the likelihood optimum: a simplex can meet it while stalled on a bound.
+    * perfbench's `MlCheck` is the check of the estimate itself.
+    */
   final case class Result(x: Array[Double], fval: Double, nIter: Int, success: Boolean)
 
   /** The optimizer_kwargs surface (ts_disagg.py:426-448): tolerance and
@@ -157,7 +162,7 @@ object Optimizer {
         it += 1
       }
     }
-    Result(simplex(0), fvals(0), it, success = converged || it < maxIter)
+    Result(simplex(0), fvals(0), it, success = converged)
   }
 
   /** Dispatch over the reference's optimizer_kwargs["method"] names

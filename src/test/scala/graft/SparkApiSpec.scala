@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.Disaggregate
+import graft.disagg.{Disaggregate, TsFrame}
 
 /** Drives the DataFrame-level API end-to-end, including the reference's CSV
   * source shape (A1: R-export CSVs with an unnamed index column) read through
@@ -130,6 +134,87 @@ class SparkApiSpec extends AnyFunSuite {
           s"$aggFunc: $got != $want")
       }
     }
+  }
+
+  // (ts, columns...) rows of a TsFrame, in the frame's order
+  private def rowsOf(f: TsFrame): (StructType, Seq[Row]) = {
+    val schema = StructType(StructField("ts", TimestampNTZType) +:
+      f.columns.map(StructField(_, DoubleType)))
+    (schema, f.ts.indices.map(i => Row.fromSeq(f.ts(i).atStartOfDay() +: f.data.map(_(i)))))
+  }
+
+  private def localDf(f: TsFrame): DataFrame = {
+    val (schema, rows) = rowsOf(f)
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("series runs one Spark job per input and none for its output") {
+    // a parquet scan is the shape callers pass; the frames are built (and
+    // their schemas read) before counting, so each window holds only the
+    // jobs of the call itself
+    val dir = java.nio.file.Files.createTempDirectory("graft_series_jobs").toString
+    localDf(Fixtures.salesA).write.parquet(s"$dir/low")
+    localDf(Fixtures.withConstant(Fixtures.exportsQ)).write.parquet(s"$dir/high")
+    val low = spark.read.parquet(s"$dir/low")
+    val high = spark.read.parquet(s"$dir/high")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def jobsOf(run: => Any): Int = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      run
+      ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+      assert(jobsOf(Disaggregate.seriesOutput(low, Some(high), params = chowLin)) == 2,
+        "seriesOutput(low, high): one job per input")
+      val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
+      assert(jobsOf(Disaggregate.series(low, None, params = dc).collect()) == 1,
+        "series(low).collect(): one job for the input, none for the output")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("series output does not depend on input row order or partitioning") {
+    def reversed(f: TsFrame): DataFrame = {
+      val (schema, rows) = rowsOf(f)
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.reverse, 3), schema)
+    }
+    val lowF = Fixtures.salesA
+    val highF = Fixtures.withConstant(Fixtures.exportsQ)
+    val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    val dc = Disaggregate.Params(method = "denton-cholette", aggFunc = "sum", targetFreq = Some("QS"))
+    for ((params, high) <- Seq(chowLin -> Some(highF), dc -> None)) {
+      val sorted = Disaggregate.seriesOutput(localDf(lowF), high.map(localDf), params = params)
+      val shuffled = Disaggregate.seriesOutput(reversed(lowF), high.map(reversed), params = params)
+      assert(shuffled.ts == sorted.ts, params.method)
+      assert(bits(shuffled.values) == bits(sorted.values), params.method)
+    }
+    val sortedHigh = Disaggregate.collectTsFrame(localDf(highF), "ts", "high_freq_df")
+    val reversedHigh = Disaggregate.collectTsFrame(reversed(highF), "ts", "high_freq_df")
+    assert(reversedHigh.ts == sortedHigh.ts)
+    assert(reversedHigh.data.map(bits) == sortedHigh.data.map(bits))
+  }
+
+  test("series keeps the reference's messages for a null or non-time ts") {
+    val (schema, rows) = rowsOf(Fixtures.salesA)
+    val withNull = rows.updated(3, Row(null, 1.0))
+    val e = intercept[IllegalArgumentException](
+      Disaggregate.series(spark.createDataFrame(withNull.asJava, schema)))
+    assert(e.getMessage == "Unsupported time value null")
+    val asText = localDf(Fixtures.salesA).withColumn("ts", col("ts").cast(StringType))
+    val low = intercept[IllegalArgumentException](Disaggregate.series(asText))
+    assert(low.getMessage ==
+      "No datetime index found on the dataframe passed as argument to low_freq_df.")
+    val high = intercept[IllegalArgumentException](
+      Disaggregate.series(localDf(Fixtures.salesA), Some(asText)))
+    assert(high.getMessage ==
+      "No datetime index found on the dataframe passed as argument to high_freq_df.")
   }
 
   // Stops the suite's session, so it must stay the last test here.
