@@ -1666,20 +1666,22 @@ object Queries {
 
   /** Shared BPE trainer (see textBpeVocab's scaladoc for the design):
     * returns the (word, cnt, syms-after-6-merges) vocabulary frame and the
-    * merge table. The vocabulary-sized words frame is localCheckpointed so
-    * the 6 argmax jobs and any downstream consumer (text_bpe_apply's
-    * tokenizer) reuse its blocks without corpus re-scans.
+    * merge table. The vocabulary-sized words frame is materialized once
+    * (sized from the corpus footers) so the 6 argmax jobs and any
+    * downstream consumer (text_bpe_apply's tokenizer) reuse it without
+    * corpus re-scans.
     */
   private def bpeTrain(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
     val sep = BpeSep
-    val words = t(s, dir, "documents")
+    val docs = t(s, dir, "documents")
+    val words = graft.util.Fs.materialize(docs
       .select(explode(split(lower(col("text")), "[^a-z]+")).as("word"))
       .where(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .withColumn("syms", concat(lit(sep),
-        array_join(filter(split(col("word"), ""), x => x =!= ""), sep), lit(sep)))
-      .localCheckpoint()
+        array_join(filter(split(col("word"), ""), x => x =!= ""), sep), lit(sep))),
+      graft.util.Fs.footerRows(docs).getOrElse(0L))
     var cur = words
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     for (k <- 1 to 6) {
@@ -1905,10 +1907,10 @@ object Queries {
       .distinct()
     // footer-count hint: past ~10⁸ lineitems the edge set goes to a
     // bucketed scratch table instead of memory-backed checkpoint blocks
-    // (Fs.materializeKeyed — the graph-at-1000× OOM lessons, r6 + r7);
+    // (Fs.materializeTrackedKeyed — the graph-at-1000× OOM lessons, r6 + r7);
     // bucketing on u keeps the consumers' per-round u-joins exchange-free.
     // Below the widen threshold, keep the distinct's own (u, v)
-    // HashPartitioning and plain-localCheckpoint it: materializeKeyed's
+    // HashPartitioning and plain-localCheckpoint it: the keyed form's
     // small-branch repartition(32, u) was an unconditional extra exchange
     // at base scale — the r7 graph_triangles +32% regression (r8 bisect:
     // VERDICT #2); the keyed layout only pays for itself when the loop
@@ -2001,13 +2003,12 @@ object Queries {
     // finalize the ≤100-row result eagerly so tri's materialization can be
     // freed before returning (r7 VERDICT #8: long bench sessions at decade
     // 3–4 otherwise accumulate scratch parquet until JVM exit)
-    val out = tri.select(col("x").as("part_key"))
+    val out = graft.util.Fs.materialize(tri.select(col("x").as("part_key"))
       .unionAll(tri.select(col("y"))).unionAll(tri.select(col("z")))
       .groupBy("part_key").agg(count(lit(1)).as("tri_count"))
       .crossJoin(broadcast(total))
       .orderBy(col("tri_count").desc, col("part_key"))
-      .limit(100)
-      .localCheckpoint()
+      .limit(100), 100L)
     triH.free()
     out.orderBy(col("tri_count").desc, col("part_key"))
   }
@@ -5313,11 +5314,12 @@ object Queries {
         .option("nullValue", "\u0001")
         .csv(path)
     }
-    val res = back.select(col("doc_id"), col("lang"),
+    // materialize before deleting the staged files; the round trip keeps
+    // one row per document
+    val res = graft.util.Fs.materialize(back.select(col("doc_id"), col("lang"),
         length(col("text")).cast(IntegerType).as("n_chars_rt"),
         md5(col("text")).as("fp"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint() // materialize before deleting the staged files
+      .orderBy(col("doc_id")), graft.util.Fs.footerRows(staged).getOrElse(0L))
     rmTreeQuiet(out)
     res
   }
@@ -7350,6 +7352,7 @@ object Queries {
     // repo's scratch discipline (localCheckpoint below 2e7 rows, pruned
     // parquet above) — this is the "checkpoint the post-filter stage"
     // deployment shape the scaladoc above already prescribes at 100 TB.
+    val nDocs = cachedCount(s, dir, "documents")
     val feat = graft.util.Fs.materialize(
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"),
@@ -7358,7 +7361,7 @@ object Queries {
           (length(regexp_replace(col("text"), "[a-z ]", "")).cast(DoubleType) /
             length(col("text"))).as("nonalpha"))
         .where(col("n_tokens") >= 5 && col("nonalpha") < 0.3),
-      cachedCount(s, dir, "documents"))
+      nDocs)
     // exact dedup, apply form: narrow (fp, doc_id) shuffle finds the
     // non-canonical members; they broadcast back as an anti-join so text
     // never crosses a shuffle
@@ -7384,11 +7387,11 @@ object Queries {
     // train split's 8-gram shingles — pin it so the two downstream
     // consumers of `clean` (final agg + packCounts) don't re-run the
     // explosion twice each
-    val contaminated = withSplit.where(col("split") === "train")
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"), 8)).as("sh"))
-      .join(broadcast(evalSh), Seq("sh"))
-      .select(col("doc_id")).distinct()
-      .localCheckpoint()
+    val contaminated = graft.util.Fs.materialize(
+      withSplit.where(col("split") === "train")
+        .select(col("doc_id"), explode(Dedup.shingles(col("text"), 8)).as("sh"))
+        .join(broadcast(evalSh), Seq("sh"))
+        .select(col("doc_id")).distinct(), nDocs)
     val clean = withSplit.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
     // pack the surviving training stream per lang (same shape as
     // pipeline_pack_docs), then summarize

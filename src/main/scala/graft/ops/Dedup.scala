@@ -97,6 +97,15 @@ object Dedup {
     graft.functions.HashOps.minhashSig(
       transform(shingleCol, s => xxhash64(s)), k)
 
+  /** Materialize an iterative or multi-consumer intermediate: a RELIABLE
+    * `checkpoint()` on shared storage when the caller passed a
+    * `checkpointDir` (survives executor loss — what a real cluster needs;
+    * a local checkpoint dies with its executor), otherwise
+    * [[graft.util.Fs.materialize]] sized from `rowsHint`.
+    */
+  private def checkpointed(df: DataFrame, dir: Option[String], rowsHint: Long): DataFrame =
+    if (dir.isDefined) df.checkpoint() else graft.util.Fs.materialize(df, rowsHint)
+
   /** MinHash-LSH near-duplicate pairs.
     *
     * @param numHashes signature length k
@@ -150,10 +159,10 @@ object Dedup {
       // final verification join): materialize it once, eagerly. Unlike
       // persist(), a localCheckpoint'd RDD is ContextCleaner-eligible, so
       // repeated calls in one session do not accumulate pinned cache
-      // blocks. checkpointDir switches to a RELIABLE checkpoint (survives
-      // executor loss — the right mode on a real cluster).
-      .transform(df =>
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint())
+      // blocks. Sized from the corpus footers (no tighter bound exists
+      // before the pairs are built).
+      .transform(checkpointed(_, checkpointDir,
+        graft.util.Fs.footerRows(docs).getOrElse(0L)))
 
     // exact verification on HASH-typed shingles (array<long> — 8 bytes per
     // shingle instead of the string), recomputed for the candidate set only:
@@ -663,8 +672,9 @@ object Dedup {
     * path, below the worst-case bound; elapsed is linear in rounds
     * (~3.2 s/round at that edge count on 16 cores), so the valve's cost
     * model is per-round edge-sized shuffles × a logarithmic round count.
-    * Each round is localCheckpoint'd:
-    * iterative lineage otherwise re-executes the whole history every action.
+    * Each round is materialized ([[checkpointed]], sized from the last
+    * round's edge count): iterative lineage otherwise re-executes the
+    * whole history every action.
     *
     * Returns (doc_id, cluster_id) for every node that appears in `pairs`,
     * where cluster_id = min doc_id of the component.
@@ -807,22 +817,17 @@ object Dedup {
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
       : DataFrame = {
     val spark = pairs.sparkSession
-    // iterative-truncation primitive: localCheckpoint (zero-IO, executor
-    // blocks — right for local[] and short loops) by default; passing
-    // checkpointDir switches every round to RELIABLE checkpoints on shared
-    // storage, which a real cluster needs — a local checkpoint dies with
-    // its executor mid-loop. (setCheckpointDir creates a fresh UUID subdir
-    // per invocation, so concurrent runs never collide.)
+    // iterative-truncation primitive: [[checkpointed]] per round.
+    // (setCheckpointDir creates a fresh UUID subdir per invocation, so
+    // concurrent runs never collide.)
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
 
     // canonical orientation u > v (self-loops dropped)
-    var edges = mat(pairs
+    var edges = checkpointed(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct(), checkpointDir, graft.util.Fs.footerRows(pairs).getOrElse(0L))
     var it = 0
     // ONE aggregate action per round: |E| plus an order-independent set
     // fingerprint (exact decimal sum of per-edge hashes — decimal because
@@ -908,11 +913,12 @@ object Dedup {
       val members = large.select(col("u"), col("v").as("x"))
         .unionAll(minsS.select(col("u"), col("u").as("x")))
         .repartition(ccParts, col("u"))
-      val small = mat(members.join(minsS, "u")
+      // the edge set never grows: last round's count bounds this one
+      val small = checkpointed(members.join(minsS, "u")
         .where(col("x") =!= col("m"))
         .select(col("x").as("u"), col("m").as("v"))
         .repartition(ccParts, col("u"))
-        .distinct())
+        .distinct(), checkpointDir, nEdges)
       val (nSmall, fpSmall) = stats(small)
       // Exactness restored cheaply (r5 ADVICE): count+fingerprint is a
       // set-equality check only up to a sum-preserving hash collision, so
@@ -930,11 +936,12 @@ object Dedup {
     }
     roundsOut.foreach(_.set(it))
     // at the fixpoint the graph is a union of stars: (member -> root),
-    // materialized so the caller's consumption never replays the loop.
-    mat(edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+    // materialized so the caller's consumption never replays the loop;
+    // every node sits on an edge, so 2·|E| bounds the label rows.
+    checkpointed(edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
       .unionAll(edges.select(col("v"), col("v")).distinct()
         .toDF("doc_id", "cluster_id"))
-      .distinct())
+      .distinct(), checkpointDir, 2L * nEdges)
   }
 
   /** Exact-substring duplication detector (the Lee et al. 2022

@@ -998,12 +998,10 @@ object Similarity {
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("c").desc, col("vec_id").asc)))
-    val full = ranked(identity).select(
-      col("vec_id").as("full_vec_id"), col("rnk").as("frank"))
-      .localCheckpoint()
-    val trunc = ranked(v => slice(v, 1, dims)).select(
-      col("vec_id").as("trunc_vec_id"), col("rnk").as("trank"))
-      .localCheckpoint()
+    val full = graft.util.Fs.materialize(ranked(identity).select(
+      col("vec_id").as("full_vec_id"), col("rnk").as("frank")), topK)
+    val trunc = graft.util.Fs.materialize(ranked(v => slice(v, 1, dims)).select(
+      col("vec_id").as("trunc_vec_id"), col("rnk").as("trank")), topK)
     val pairs = full.join(trunc,
       col("full_vec_id") === col("trunc_vec_id"))
     val ks = spark.range(1, topK + 1).select(col("id").cast(IntegerType).as("k"))
@@ -1045,12 +1043,12 @@ object Similarity {
     val spark = embeddings.sparkSession
     val e = prepared(embeddings)
     val q = e.where(col("vec_id") === queryId).select(col("v").as("qv"))
-    val pool = e.crossJoin(broadcast(q))
+    // one scan feeds both the collect and the self-join
+    val pool = graft.util.Fs.materialize(e.crossJoin(broadcast(q))
       .where(col("vec_id") =!= queryId)
       .select(col("vec_id"), col("v"), cosine(col("v"), col("qv")).as("rel"))
       .orderBy(col("rel").desc, col("vec_id").asc)
-      .limit(poolSize)
-      .localCheckpoint() // one scan feeds both the collect and the self-join
+      .limit(poolSize), poolSize)
     val pairsDf = pool.select(col("vec_id").as("ia"), col("v").as("va"))
       .crossJoin(broadcast(pool.select(col("vec_id").as("ib"), col("v").as("vb"))))
       .where(col("ia") =!= col("ib"))

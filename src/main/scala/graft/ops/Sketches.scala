@@ -1027,18 +1027,19 @@ object Sketches {
       expr("unix_micros(ts) div 86400000000").as("d0"), col("value"))
     // one localCheckpoint/scratch materialization: pre feeds the day spine,
     // the window explode AND the rank stage (3 consumers — the genuinely-
-    // multi-consumer bar); rowsHint |events|/50 is conservative vs the
-    // measured ~10³× cardinality drop
-    val nEvents = events.count()
-    val preM = graft.util.Fs.materializeTracked(
-      el.groupBy(col("d0"), col("value")).agg(count(lit(1)).as("c0")),
-      nEvents / 50L)
+    // multi-consumer bar); rowsHint |events|/50 from the events' parquet
+    // footers is conservative vs the measured ~10³× cardinality drop
+    val nEvents = graft.util.Fs.footerRows(events).getOrElse(0L)
+    // audit shuffle width self-sized from the MEASURED pre-agg cardinality,
+    // not the raw event count — the exploded frame is 7×|pre| rows now, and
+    // an events-derived width would over-partition it ~10³× at the big
+    // decades. The count is observed during the materializing write itself
+    // (localCheckpoint or the scratch-parquet write), not a second job.
+    val preObs = org.apache.spark.sql.Observation()
+    val preM = graft.util.Fs.materializeTracked(el.groupBy(col("d0"), col("value"))
+      .agg(count(lit(1)).as("c0")).observe(preObs, count(lit(1)).as("n")), nEvents / 50L)
     val pre = preM.df
-    // audit shuffle width self-sized from the MEASURED pre-agg cardinality
-    // (cheap count on the materialized frame), not the raw event count —
-    // the exploded frame is 7×|pre| rows now, and an events-derived width
-    // would over-partition it ~10³× at the big decades
-    val preRows = pre.count()
+    val preRows = preObs.get("n").asInstanceOf[Long]
     val parts = math.max(32L, preRows * 7L / 2000000L).toInt
     val daysDf = pre.select(col("d0").as("w")).distinct()
     import org.apache.spark.sql.expressions.{Window => W}

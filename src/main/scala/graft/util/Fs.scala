@@ -27,6 +27,35 @@ object Fs {
   }
   def deferDelete(p: java.nio.file.Path): Unit = { deferred.add(p); () }
 
+  /** Rows from which [[materialize]] and its siblings spill to scratch
+    * parquet instead of `localCheckpoint` blocks.
+    */
+  val BigRows: Long = 20000000L
+
+  /** Row count of `df`'s parquet inputs from their FOOTERS: the sum of
+    * `getRecordCount` over the files behind the plan's parquet leaves, read
+    * on the driver, with no Spark job. It counts the files, not the frame:
+    * a filter or join above the scan is not applied, so it bounds a 1:1
+    * projection exactly and anything else only loosely. `None` when the
+    * plan has no parquet file leaf (a checkpointed, cached, local or
+    * non-parquet source); callers with no tighter bound then pass
+    * `footerRows(input).getOrElse(0L)`, which keeps `localCheckpoint`.
+    */
+  def footerRows(df: org.apache.spark.sql.DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val files = df.queryExecution.optimizedPlan.collectLeaves()
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation if h.fileFormat.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
+        h.location.inputFiles }.flatten.distinct
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    if (files.isEmpty) None else Some(files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet
+        .hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }.sum)
+  }
+
   /** Live deferred scratch dirs — the observable for the no-leak
     * discipline (r7 VERDICT #8): iterative operators must free their loop
     * scratch before returning, so a long bench session's deferred count
@@ -83,19 +112,25 @@ object Fs {
     * in the CACHING layer: under memory pressure an evicted checkpoint
     * block is UNRECOVERABLE (the lineage is severed) and big intermediates
     * pin gigabytes of storage memory against execution — the
-    * graph-at-1000× OOM class. Past `bigRows`, spill the frame to a
-    * scratch PARQUET dir instead (columnar, compressed, read back lazily;
-    * the cluster-filesystem shape of a checkpoint) and keep the dir until
-    * JVM exit (or until the caller frees the [[Materialized]] handle). The
-    * threshold is a row-count hint the caller already has (typically a
-    * parquet footer count — no extra scan).
+    * graph-at-1000× OOM class. From `bigRows` ([[BigRows]], 2·10⁷) rows
+    * up, spill the frame to a scratch PARQUET dir instead (columnar,
+    * compressed, read back lazily; the cluster-filesystem shape of a
+    * checkpoint) and keep the dir until JVM exit (or until the caller frees
+    * the [[Materialized]] handle).
+    *
+    * This object is the only place in `src/main` that calls
+    * `localCheckpoint` (PlanInvariantsSpec's source fence). `rowsHint` is
+    * the tightest upper bound on the frame's rows the caller has without a
+    * new Spark job: a structural one first (`limit(k)` gives k, a per-day
+    * audit days × quantiles), then a count the caller already computed,
+    * and last the input's [[footerRows]].
     */
   def materialize(df: org.apache.spark.sql.DataFrame, rowsHint: Long,
-      bigRows: Long = 20000000L): org.apache.spark.sql.DataFrame =
+      bigRows: Long = BigRows): org.apache.spark.sql.DataFrame =
     materializeTracked(df, rowsHint, bigRows).df
 
   def materializeTracked(df: org.apache.spark.sql.DataFrame, rowsHint: Long,
-      bigRows: Long = 20000000L): Materialized =
+      bigRows: Long = BigRows): Materialized =
     if (rowsHint < bigRows) Materialized(df.localCheckpoint(), None)
     else {
       val tmp = java.nio.file.Files.createTempDirectory("graft_mat")
@@ -145,7 +180,7 @@ object Fs {
     */
   def materializeTrackedKeyed(df: org.apache.spark.sql.DataFrame,
       parts: Int, keys: Seq[String], rowsHint: Long,
-      bigRows: Long = 20000000L): Materialized = {
+      bigRows: Long = BigRows): Materialized = {
     val keyCols = keys.map(df.col)
     if (rowsHint < bigRows)
       // r11: on Spark 4.1 + AQE the checkpointed leaf reports
@@ -199,9 +234,4 @@ object Fs {
       Materialized(spark.table(name), Some(tmp), Some((spark, name)))
     }
   }
-
-  def materializeKeyed(df: org.apache.spark.sql.DataFrame,
-      parts: Int, keys: Seq[String], rowsHint: Long,
-      bigRows: Long = 20000000L): org.apache.spark.sql.DataFrame =
-    materializeTrackedKeyed(df, parts, keys, rowsHint, bigRows).df
 }

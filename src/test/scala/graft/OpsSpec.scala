@@ -3737,6 +3737,51 @@ class OpsSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("Fs.footerRows reads the parquet footer count with no Spark job, None without a parquet leaf") {
+    import graft.util.Fs
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val d = docs
+    val n = d.count()
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      val r = Fs.footerRows(d)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows.contains(n))
+    assert(jobs.get() == 0)
+    // it counts the files behind the leaf, not the filtered frame
+    assert(Fs.footerRows(d.select(col("doc_id")).where(col("doc_id") < 3)).contains(n))
+    assert(Fs.footerRows(spark.range(5).toDF()).isEmpty)
+    val m = Fs.materializeTracked(d.select(col("doc_id")), rowsHint = n)
+    try assert(Fs.footerRows(m.df).isEmpty) finally m.free()
+  }
+
+  test("an Observation on the frame handed to Fs.materializeTracked fires on both branches") {
+    import graft.util.Fs
+    // the small branch's localCheckpoint and the big branch's (bigRows = 1)
+    // scratch-parquet write both run the observed plan; a bounded wait so a
+    // branch that never delivers fails instead of hanging the suite
+    for (bigRows <- Seq(Fs.BigRows, 1L)) {
+      val obs = org.apache.spark.sql.Observation()
+      val m = Fs.materializeTracked(
+        spark.range(37).toDF().observe(obs, count(lit(1)).as("n")), rowsHint = 37, bigRows = bigRows)
+      try {
+        assert(m.scratch.isDefined == (bigRows == 1L))
+        val got = scala.concurrent.Await.result(
+          scala.concurrent.Future(obs.get("n"))(scala.concurrent.ExecutionContext.global),
+          scala.concurrent.duration.Duration(60, "s"))
+        assert(got == 37L, s"bigRows = $bigRows")
+      } finally m.free()
+    }
+  }
+
   test("Fs materialization lifecycle: free() releases scratch dirs, tables, and checkpoint blocks") {
     import graft.util.Fs
     val df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")

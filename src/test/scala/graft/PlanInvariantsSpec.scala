@@ -623,4 +623,26 @@ class PlanInvariantsSpec extends AnyFunSuite {
       s"custom-expression projection fell out of WholeStageCodegen:\n$p")
     assert(df.collect().length == 4)
   }
+
+  test("one materialization rule: localCheckpoint and parquet footer reads only in util/Fs.scala") {
+    // src/main code with // and /* */ comments removed; string and char
+    // literals are matched first and kept, so a "//" inside one is not
+    // taken for a comment (Bridge.scala's scaladoc names localCheckpoint)
+    val token = ("(?s)\"\"\".*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"|'(?:\\\\.|[^'\\\\])'" +
+      "|/\\*.*?\\*/|//[^\\n]*").r
+    def code(src: String): String = token.replaceAllIn(src, m =>
+      if (m.matched.startsWith("/")) ""
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { f =>
+        root.relativize(f).toString -> code(java.nio.file.Files.readString(f))
+      }.toMap
+    } finally walk.close()
+    for (needle <- Seq(".localCheckpoint(", "ParquetFileReader"))
+      assert(sources.filter(_._2.contains(needle)).keySet == Set("graft/util/Fs.scala"),
+        s"$needle outside graft.util.Fs: route it through Fs.materialize / Fs.footerRows")
+  }
 }
