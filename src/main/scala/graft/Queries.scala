@@ -2988,7 +2988,8 @@ object Queries {
     */
   private def dedupJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val parts = math.max(32L, math.min(512L, docs.count() / 10000L)).toInt
+    val parts = math.max(32L, math.min(512L,
+      graft.util.Fs.footerRows(docs).getOrElse(docs.count()) / 10000L)).toInt
     Dedup.jaccardPrefixPairs(docs, tNum = 7, tDen = 10, parts = parts)
   }
 
@@ -3210,11 +3211,16 @@ object Queries {
   private def dedupMinhashLshSubset(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(Dedup.subsetDocs(t(s, dir, "documents")), bands = 32)
 
+  /** Prefix-filtered exact-Jaccard pairs (Dedup.jaccardPrefixPairs) over
+    * the Dedup.subsetDocs subset, its shuffle width sized from the
+    * documents' footer count over SubsetK.
+    */
   private def dedupJaccardPrefixSubset(s: SparkSession, dir: String): DataFrame = {
     val full = t(s, dir, "documents")
     // self-size from the SUBSET row count the filter implies (footer/K)
     val parts = math.max(32L,
-      math.min(512L, full.count() / graft.ops.Dedup.SubsetK / 10000L)).toInt
+      math.min(512L, graft.util.Fs.footerRows(full).getOrElse(full.count()) /
+        graft.ops.Dedup.SubsetK / 10000L)).toInt
     Dedup.jaccardPrefixPairs(Dedup.subsetDocs(full), tNum = 7, tDen = 10,
       parts = parts)
   }
@@ -5477,7 +5483,7 @@ object Queries {
           col("v").cast(IntegerType).as("v"), col("quality"), col("source"),
           md5(col("text")).as("fp"))
         .orderBy(col("doc_id")),
-      rowsHint = docs.count())
+      rowsHint = graft.util.Fs.footerRows(docs).getOrElse(docs.count()))
     rmTreeQuiet(out)
     res
   }

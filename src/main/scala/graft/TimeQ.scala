@@ -46,7 +46,8 @@ object TimeQ {
             .flatMap(p => Option(p.getProperty("spark.job.description")))
             .getOrElse("")
           j.stageInfos.foreach(si =>
-            stageJob.put(si.stageId, s"job${j.jobId} ${desc.take(60)}"))
+            stageJob.put(si.stageId,
+              s"job${j.jobId} ${desc.replaceAll("\\s+", " ").take(60)}"))
         }
         override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
           val i = sc.stageInfo

@@ -1,12 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sketch expressions over pre-hashed token/shingle arrays (array<long>).
   *
@@ -14,34 +15,45 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   * 64 `size(filter(...))` bit votes — pays interpreted-lambda dispatch per
   * ELEMENT per permutation/bit (~38M boxed calls on a 5k-doc corpus). These
   * expressions make one eval call per ROW and run tight JVM loops inside:
-  * the per-element work is primitive long arithmetic. Each also generates
-  * code (one call into its compiled compute method): a CodegenFallback
-  * marker anywhere in a Project's expressions drops the WHOLE stage out of
-  * WholeStageCodegen, so the fused single-scan queries that mix these with
-  * dozens of built-in expressions were silently running interpreted
-  * projections (r11 VERDICT #5 headroom, generalized from the ANN pair).
+  * the per-element work is primitive long arithmetic.
   */
+
+/** The one shape of graft's row-wise native expressions: one input of a
+  * fixed type (checked by `ExpectsInputTypes`, never implicitly cast) and
+  * one generated call into the concrete class's typed `compute`.
+  *
+  * The generated code is what keeps a projection inside WholeStageCodegen:
+  * a CodegenFallback marker anywhere in a Project's expressions drops the
+  * WHOLE stage to interpreted eval, so the fused single-scan queries that
+  * mix these with dozens of built-in expressions would silently run
+  * interpreted projections. The per-row work is one already-compiled JVM
+  * method either way. `compute` stays a typed method on each subclass, not
+  * a generic one here: the generated Java calls it through the concrete
+  * class, so a `long` result stays primitive instead of boxing per row.
+  * (Serializable because it holds `input`: Java deserialization of a task's
+  * plan needs a no-argument constructor on the first class that is not.)
+  */
+abstract class NativeUnary(input: DataType)
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
+
+  override def inputTypes: Seq[DataType] = Seq(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj(prettyName, this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
+  }
+}
 
 /** k-permutation MinHash signature: sig[p] = min over h in child of
   * XXH64(h, seed=p). Input array<long> (pre-hashed shingles), output
   * array<long> of length k.
   */
 case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends NativeUnary(ArrayType(LongType)) {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_minhash_sig requires array<bigint> of element hashes, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
   def compute(xs: ArrayData): ArrayData = {
     val n = xs.numElements()
@@ -60,11 +72,6 @@ case class MinHashSig(child: Expression, k: Int)
     new GenericArrayData(sig)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashSig", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -73,21 +80,11 @@ case class MinHashSig(child: Expression, k: Int)
   * array<long>, output long.
   */
 case class SimHash(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary(ArrayType(LongType)) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_simhash requires array<bigint> of token hashes, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    java.lang.Long.valueOf(compute(a.asInstanceOf[ArrayData]))
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
   def compute(xs: ArrayData): Long = {
     val n = xs.numElements()
@@ -111,62 +108,32 @@ case class SimHash(child: Expression)
     sig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhash", this, classOf[SimHash].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Per-token MD5 low-64: little-endian read of digest bytes [8,16) — the
-  * exact bits DuckDB's `md5_number_lower(tok)` returns, which is what makes
-  * a simhash built on it CROSS-ENGINE REPLAYABLE (xxhash64 has no DuckDB
-  * equivalent). Input array<string>, output array<long>; one eval per row,
-  * one reused MessageDigest per thread.
+/** Per-token MD5 low-64 ([[HashOps.md5Low64Bytes]] of each token's UTF-8
+  * bytes) — the exact bits DuckDB's `md5_number_lower(tok)` returns, which
+  * is what makes a simhash built on it CROSS-ENGINE REPLAYABLE (xxhash64
+  * has no DuckDB equivalent). Input array<string>, output array<long>; one
+  * eval per row.
   */
 case class Md5TokensLow64(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary(ArrayType(StringType)) {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_md5_low64 requires array<string>, got ${other.simpleString}")
-    }
-
-  @transient private lazy val md5 =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
   def compute(xs: ArrayData): ArrayData = {
     val n = xs.numElements()
     val out = new Array[Long](n)
-    val d = md5.get()
     var i = 0
     while (i < n) {
-      d.reset()
-      val dig = d.digest(xs.getUTF8String(i).getBytes)
-      var h = 0L
-      var b = 15
-      while (b >= 8) { h = (h << 8) | (dig(b) & 0xFFL); b -= 1 }
-      out(i) = h
+      out(i) = HashOps.md5Low64Bytes(xs.getUTF8String(i).getBytes)
       i += 1
     }
-    new GenericArrayData(out.map(java.lang.Long.valueOf(_): Any))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("md5Toks", this, classOf[Md5TokensLow64].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -180,41 +147,13 @@ case class Md5TokensLow64(child: Expression)
   * run-order-dependent and xxhash64 has no oracle-side equivalent.
   */
 case class Md5Low64(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary(StringType) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_md5_low64 requires a string column, got ${other.simpleString}")
-    }
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
 
-  @transient private lazy val md5 =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
-  override def nullSafeEval(a: Any): Any =
-    java.lang.Long.valueOf(
-      compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]))
-
-  def compute(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val d = md5.get()
-    d.reset()
-    val dig = d.digest(s.getBytes)
-    var h = 0L
-    var b = 15
-    while (b >= 8) { h = (h << 8) | (dig(b) & 0xFFL); b -= 1 }
-    h
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("md5Low", this, classOf[Md5Low64].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
-  }
+  def compute(s: UTF8String): Long = HashOps.md5Low64Bytes(s.getBytes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -227,24 +166,13 @@ case class Md5Low64(child: Expression)
   * lower-casing matches Spark's `lower` on this corpus.
   */
 case class NgramShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends NativeUnary(StringType) {
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_shingles requires a string column, got ${other.simpleString}")
-    }
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val text = s.toString.trim.toLowerCase(java.util.Locale.ROOT)
     val toks = text.split("\\s+")
     val out = new java.util.LinkedHashSet[String]()
@@ -269,15 +197,10 @@ case class NgramShingles(child: Expression, n: Int)
     val it = out.iterator()
     var i = 0
     while (it.hasNext) {
-      arr(i) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next())
+      arr(i) = UTF8String.fromString(it.next())
       i += 1
     }
     new GenericArrayData(arr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("shingles", this, classOf[NgramShingles].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -293,24 +216,13 @@ case class NgramShingles(child: Expression, n: Int)
   * corpus; a multibyte corpus would hash UTF-8 bytes.
   */
 case class RollingPolyHash(child: Expression)
-    extends UnaryExpression {
+    extends NativeUnary(StringType) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_rolling_hash requires a string column, got ${other.simpleString}")
-    }
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
 
-  override def nullSafeEval(a: Any): Any =
-    java.lang.Long.valueOf(
-      compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]))
-
-  def compute(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+  def compute(s: UTF8String): Long = {
     val bytes = s.getBytes
     var acc = 0L
     var i = 0
@@ -319,11 +231,6 @@ case class RollingPolyHash(child: Expression)
       i += 1
     }
     acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("rollHash", this, classOf[RollingPolyHash].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -351,22 +258,11 @@ object RollingPolyHash {
   * profile order).
   */
 case class LangIdFeatures(child: Expression, profiles: Seq[(String, Seq[String])])
-    extends UnaryExpression {
-
-  import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+    extends NativeUnary(StringType) {
 
   override def dataType: DataType = StructType(Seq(
     StructField("lang_pred", StringType, nullable = false),
     StructField("scores", ArrayType(DoubleType, containsNull = false), nullable = false)))
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lang-id requires a string column, got ${other.simpleString}")
-    }
 
   private def countOccurrences(hay: String, needle: String): Int = {
     var n = 0
@@ -375,10 +271,9 @@ case class LangIdFeatures(child: Expression, profiles: Seq[(String, Seq[String])
     n
   }
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[UTF8String])
 
-  def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+  def compute(s: UTF8String): InternalRow = {
     val padded = " " + s.toString.toLowerCase(java.util.Locale.ROOT) + " "
     val scores = new Array[Double](profiles.length)
     var best = 0
@@ -390,14 +285,8 @@ case class LangIdFeatures(child: Expression, profiles: Seq[(String, Seq[String])
       if (s > scores(best)) best = i // strict > = first-wins tie-break
       i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(
-      org.apache.spark.unsafe.types.UTF8String.fromString(profiles(best)._1),
-      new GenericArrayData(scores.map(java.lang.Double.valueOf(_): Any)))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("langId", this, classOf[LangIdFeatures].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
+    InternalRow(UTF8String.fromString(profiles(best)._1),
+      new GenericArrayData(scores))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -405,6 +294,24 @@ case class LangIdFeatures(child: Expression, profiles: Seq[(String, Seq[String])
 }
 
 object HashOps {
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+    java.security.MessageDigest.getInstance("MD5"))
+
+  /** DuckDB `md5_number_lower` bits of `b`: the little-endian read of MD5
+    * digest bytes [8,16), reinterpreted signed. The one implementation
+    * every cross-engine hash in graft goes through — the native
+    * expressions above and the typed-code [[graft.ops.Sketches.md5Low64String]].
+    */
+  def md5Low64Bytes(b: Array[Byte]): Long = {
+    val d = md5.get()
+    d.reset()
+    val dig = d.digest(b)
+    var h = 0L
+    var i = 15
+    while (i >= 8) { h = (h << 8) | (dig(i) & 0xFFL); i -= 1 }
+    h
+  }
+
   /** Distinct word n-gram shingles straight from a text column. */
   def ngramShingles(text: Column, n: Int): Column =
     Bridge.column(NgramShingles(Bridge.expression(text), n))

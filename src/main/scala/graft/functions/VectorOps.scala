@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{array_size, coalesce, lit, sqrt => ssqrt}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lit, sqrt => ssqrt}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Native Catalyst expressions for dense-vector math over array<double>
   * columns.
@@ -23,19 +23,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * list_sum(list_transform(...)) replay.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_dot requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   // Length mismatch yields NULL — zip_with pads the shorter array with nulls,
   // so the HOF fold this expression replaces returns NULL there; the rewrite
@@ -80,18 +72,10 @@ case class DotProduct(left: Expression, right: Expression)
 
 /** Squared L2 norm with the same loop shape (codegen'd). */
 case class SquaredNorm(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_squared_norm requires array<double>, got ${other.simpleString}")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   override def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -137,25 +121,16 @@ case class SquaredNorm(child: Expression)
   * near-duplicates (cosine→1) collide in some band with overwhelming
   * probability while random pairs scatter across 2^bitsPerBand buckets.
   *
-  * One eval per row with a tight primitive loop (the MinHashSig rationale);
-  * the ±1 plane matrix is materialized once per task and reused across rows.
+  * One eval per row with a tight primitive loop (the [[NativeUnary]]
+  * shape); the ±1 plane matrix is materialized once per task and reused
+  * across rows.
   */
 case class SignRandomProjection(child: Expression, bands: Int, bitsPerBand: Int)
-    extends UnaryExpression {
+    extends NativeUnary(ArrayType(DoubleType)) {
   require(bands >= 1 && bitsPerBand >= 1 && bitsPerBand <= 64,
     "bands >= 1 and 1 <= bitsPerBand <= 64 required")
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_sign_rp requires array<double>, got ${other.simpleString}")
-    }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   // per-task cache of the ±1 plane matrix (flattened planes x dim); rebuilt
   // only if the vector dimensionality changes. A benign race on rebuild is
@@ -172,7 +147,7 @@ case class SignRandomProjection(child: Expression, bands: Int, bitsPerBand: Int)
         var d = 0
         while (d < dim) {
           arr(p * dim + d) =
-            if ((org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(d.toLong, p) & 1L) == 0L) 1.0
+            if ((XXH64.hashLong(d.toLong, p) & 1L) == 0L) 1.0
             else -1.0
           d += 1
         }
@@ -184,15 +159,8 @@ case class SignRandomProjection(child: Expression, bands: Int, bitsPerBand: Int)
     cachedSigns
   }
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
-  /** The per-row loop, shared by interpreted eval and generated code — the
-    * work is one already-compiled JVM method either way; what doGenCode buys
-    * is keeping the SURROUNDING operators in one WholeStageCodegen span
-    * (a CodegenFallback marker anywhere in a Project's expressions drops
-    * the whole stage out of codegen).
-    */
   def compute(v: ArrayData): ArrayData = {
     val dim = v.numElements()
     val signs = signsFor(dim)
@@ -215,13 +183,7 @@ case class SignRandomProjection(child: Expression, bands: Int, bitsPerBand: Int)
       out(b) = key
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("signRp", this,
-      classOf[SignRandomProjection].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -244,29 +206,21 @@ case class SignRandomProjection(child: Expression, bands: Int, bitsPerBand: Int)
   * every operator that references the bucketed frame more than once
   * (the approx_count_distinct planning lesson).
   *
-  * One eval per row with a tight primitive loop (the SignRandomProjection
-  * rationale); a vector whose length differs from the sign rows yields
-  * null (the zip_with null-pad would have zeroed the bits — such rows
-  * don't exist, and null is the louder outcome).
+  * One eval per row with a tight primitive loop; a vector whose length
+  * differs from the sign rows yields null (the zip_with null-pad would
+  * have zeroed the bits — such rows don't exist, and null is the louder
+  * outcome), so the generated code checks the length before its call.
   */
 case class SrpPackedBits(child: Expression, signs: Array[Array[Double]],
     mask: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(signs.nonEmpty && signs.forall(_.length == signs(0).length),
     "rectangular sign matrix required")
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def dataType: DataType = IntegerType
   // null on a length mismatch, even for a non-null input (doGenCode sets isNull)
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_srp_bits requires array<double>, got ${other.simpleString}")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   override def nullSafeEval(a: Any): Any = {
     val v = a.asInstanceOf[ArrayData]
@@ -274,8 +228,7 @@ case class SrpPackedBits(child: Expression, signs: Array[Array[Double]],
     computeBits(v)
   }
 
-  /** The per-row fold loop (dim already validated — see doGenCode / the
-    * SignRandomProjection.compute rationale). */
+  /** The per-row fold loop (dim already validated — see doGenCode). */
   def computeBits(v: ArrayData): Int = {
     val dim = signs(0).length
     var bits = 0
@@ -292,8 +245,7 @@ case class SrpPackedBits(child: Expression, signs: Array[Array[Double]],
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("srpBits", this,
-      classOf[SrpPackedBits].getName)
+    val self = ctx.addReferenceObj(prettyName, this, getClass.getName)
     nullSafeCodeGen(ctx, ev, x =>
       s"""
          |if ($x.numElements() != ${signs(0).length}) {
@@ -331,31 +283,17 @@ case class SrpPackedBits(child: Expression, signs: Array[Array[Double]],
   */
 case class ArgmaxCosine(child: Expression, buckets: Array[Long],
     cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends NativeUnary(ArrayType(DoubleType)) {
   require(buckets.length == cents.length && buckets.nonEmpty,
     "one bucket id per centroid required")
 
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("sim", DoubleType, nullable = true),
-    org.apache.spark.sql.types.StructField("nb",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.LongType, nullable = false)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("sim", DoubleType, nullable = true),
+    StructField("nb", LongType, nullable = false),
+    StructField("bucket", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_argmax_cosine requires array<double>, got ${other.simpleString}")
-    }
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  /** The per-row argmax loop (see SignRandomProjection.compute's rationale
-    * for the shared-method codegen shape). */
   def compute(v: ArrayData): InternalRow = {
     val n = v.numElements()
     var vs = 0.0
@@ -407,12 +345,6 @@ case class ArgmaxCosine(child: Expression, buckets: Array[Long],
     }
     InternalRow(if (bestNull) null else java.lang.Double.valueOf(bestSim),
       bestNb, bestB)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("argmaxCos", this,
-      classOf[ArgmaxCosine].getName)
-    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $self.compute($x);")
   }
 
   override def stringArgs: Iterator[Any] =

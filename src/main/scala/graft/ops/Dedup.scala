@@ -696,14 +696,13 @@ object Dedup {
     * ≤ maxMemory/2 even on a 1 GB default driver, and 5M edges stays the
     * ceiling — past that the distributed loop wins on elapsed anyway.
     *
-    * The GRAFT_CC_DRIVER_CAP env var overrides the derived cap — the
-    * measurement hook for sweeping the DISTRIBUTED valve at scale
-    * (`GRAFT_CC_DRIVER_CAP=0 runMain graft.TimeQ dedup_clusters`) without
-    * threading a parameter through every registered query.
+    * The distributed valve is measured through the `driverEdgeCap`
+    * parameter of [[connectedComponents]]: `runMain graft.CcScale`
+    * passes 0 to time the large-star/small-star loop at over-cap scale
+    * (the specs pass 0 to cover it).
     */
   private[graft] val ccDriverEdgeCap: Long =
-    sys.env.get("GRAFT_CC_DRIVER_CAP").flatMap(_.toLongOption).getOrElse(
-      math.min(5000000L, Runtime.getRuntime.maxMemory() / 256L))
+    math.min(5000000L, Runtime.getRuntime.maxMemory() / 256L)
 
   /** Component-min labels of an edge stream via primitive union-find:
     * node ids are index-compressed through an open-addressed long→int

@@ -327,24 +327,13 @@ object HyperLogLog extends Aggregator[(String, Long), Array[Long], Array[Long]] 
 
 object Sketches {
 
-  /** JVM-side twin of the native [[graft.functions.Md5Low64]] expression
-    * (little-endian read of MD5 digest bytes [8,16) over the UTF-8 bytes) —
-    * DuckDB md5_number_lower reinterpreted signed. Used where the hash is
-    * needed inside typed Aggregator code rather than a Column.
+  /** DuckDB md5_number_lower of `s`'s UTF-8 bytes, reinterpreted signed
+    * ([[graft.functions.HashOps.md5Low64Bytes]], the bits the native
+    * [[graft.functions.Md5Low64]] expression returns). Used where the hash
+    * is needed inside typed Aggregator code rather than a Column.
     */
-  private val md5Local =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
-  def md5Low64String(s: String): Long = {
-    val d = md5Local.get()
-    d.reset()
-    val dig = d.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var b = 15
-    while (b >= 8) { h = (h << 8) | (dig(b) & 0xFFL); b -= 1 }
-    h
-  }
+  def md5Low64String(s: String): Long =
+    graft.functions.HashOps.md5Low64Bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Exact top-N token counts audited against the Count-Min sketch: emits
     * (token, cnt, est, overcount, sketch_ok) where est is the CM point

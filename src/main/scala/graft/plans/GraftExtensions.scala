@@ -62,55 +62,44 @@ object RewriteVectorHofs extends Rule[LogicalPlan] {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
+  // an integer argument that must be a literal (k, n, bands, bitsPerBand)
+  private def intLiteral(args: Seq[Expression], i: Int): Int = args(i) match {
+    case Literal(v, _) => v.toString.toInt
+    case other => throw new IllegalArgumentException(s"argument $i must be a literal, got $other")
+  }
+
+  private def cosine(a: Expression, b: Expression): Expression = {
+    val den = Multiply(Sqrt(SquaredNorm(a)), Sqrt(SquaredNorm(b)))
+    // cosine undefined at zero norm -> null (ANSI divide-by-zero guard)
+    If(EqualTo(den, Literal(0.0)), Literal.create(null, DoubleType),
+      Divide(DotProduct(a, b), den))
+  }
+
+  /** (name, usage, builder): the SQL surface, one row per function. */
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", "graft_dot(a, b) - dot product of two array<double>",
+      args => DotProduct(args(0), args(1))),
+    ("graft_squared_norm", "graft_squared_norm(a) - squared L2 norm",
+      args => SquaredNorm(args(0))),
+    ("graft_shingles", "graft_shingles(text, n) - distinct word n-grams",
+      args => NgramShingles(args(0), intLiteral(args, 1))),
+    ("graft_minhash_sig", "graft_minhash_sig(hashes, k) - minhash signature",
+      args => MinHashSig(args(0), intLiteral(args, 1))),
+    ("graft_simhash", "graft_simhash(hashes) - 64-bit simhash",
+      args => SimHash(args(0))),
+    ("graft_md5_low64", "graft_md5_low64(s) - signed low 64 bits of md5 (DuckDB md5_number_lower); deterministic bucketing/splits",
+      args => Md5Low64(args(0))),
+    ("graft_rolling_hash", "graft_rolling_hash(text) - modular byte-level rolling fingerprint",
+      args => RollingPolyHash(args(0))),
+    ("graft_sign_rp", "graft_sign_rp(v, bands, bitsPerBand) - random-hyperplane LSH band keys",
+      args => SignRandomProjection(args(0), intLiteral(args, 1), intLiteral(args, 2))),
+    ("graft_cosine", "graft_cosine(a, b) - cosine similarity (null for zero norms)",
+      args => cosine(args(0), args(1))))
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two array<double>"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("graft_squared_norm"),
-      info("graft_squared_norm", "graft_squared_norm(a) - squared L2 norm"),
-      (args: Seq[Expression]) => SquaredNorm(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(text, n) - distinct word n-grams"),
-      (args: Seq[Expression]) => NgramShingles(args(0), args(1) match {
-        case Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(s"n must be a literal, got $other")
-      })))
-    e.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "graft_minhash_sig(hashes, k) - minhash signature"),
-      (args: Seq[Expression]) => MinHashSig(args(0), args(1) match {
-        case Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(s"k must be a literal, got $other")
-      })))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(hashes) - 64-bit simhash"),
-      (args: Seq[Expression]) => SimHash(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_md5_low64"),
-      info("graft_md5_low64", "graft_md5_low64(s) - signed low 64 bits of md5 (DuckDB md5_number_lower); deterministic bucketing/splits"),
-      (args: Seq[Expression]) => Md5Low64(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_rolling_hash"),
-      info("graft_rolling_hash", "graft_rolling_hash(text) - modular byte-level rolling fingerprint"),
-      (args: Seq[Expression]) => RollingPolyHash(args.head)))
-    e.injectFunction((FunctionIdentifier("graft_sign_rp"),
-      info("graft_sign_rp", "graft_sign_rp(v, bands, bitsPerBand) - random-hyperplane LSH band keys"),
-      (args: Seq[Expression]) => {
-        def lit(i: Int): Int = args(i) match {
-          case Literal(v, _) => v.toString.toInt
-          case other => throw new IllegalArgumentException(s"argument ${i} must be a literal, got $other")
-        }
-        SignRandomProjection(args(0), lit(1), lit(2))
-      }))
-    e.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity (null for zero norms)"),
-      (args: Seq[Expression]) => {
-        val (a, b) = (args(0), args(1))
-        val den = Multiply(Sqrt(SquaredNorm(a)), Sqrt(SquaredNorm(b)))
-        // cosine undefined at zero norm -> null (ANSI divide-by-zero guard)
-        If(EqualTo(den, Literal(0.0)), Literal.create(null, org.apache.spark.sql.types.DoubleType),
-          Divide(DotProduct(a, b), den))
-      }))
+    for ((name, usage, builder) <- functions)
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), builder))
     e.injectOptimizerRule(_ => RewriteVectorHofs)
   }
 }

@@ -488,7 +488,7 @@ object StreamingOps {
     */
   private[graft] def stagedDocsCorpus(spark: SparkSession, dir: String): (java.nio.file.Path, Int) = {
     val docs = stagedDocsFrame(spark, dir)
-    val nDocs = docs.count()
+    val nDocs = Fs.footerRows(docs).getOrElse(docs.count())
     val nChunks = math.max(3L, math.min(96L, nDocs / 5000L)).toInt
     (stagedCorpus(dir, "docs3") { t =>
       stageParts(docs, t, "chunk", nChunks, col("doc_id"))
@@ -1875,7 +1875,8 @@ object StreamingOps {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val v1 = PipelineOps.v1Fingerprints(docs).persist()
       val v2 = PipelineOps.v2Fingerprints(docs)
-      val nV2 = docs.count() // v2 cardinality ~ corpus (19/20 carried + adds)
+      // v2 cardinality ~ corpus (19/20 carried + adds)
+      val nV2 = Fs.footerRows(docs).getOrElse(docs.count())
       val nChunks = math.max(3L, math.min(96L, nV2 / 50000L)).toInt
       val tmp = stagedCorpus(dir, "diffv2") { t =>
         stageParts(v2, t, "chunk", nChunks, col("doc_id"))
@@ -1975,7 +1976,8 @@ object StreamingOps {
       val log = graft.Queries.cdcLog(o)
       // chunk count scales with feed size; hash on (k, seq) so one key's
       // ops split across micro-batches and exercise cross-batch folding
-      val nChunks = math.max(4L, math.min(64L, o.count() / 40000L)).toInt
+      val nChunks = math.max(4L, math.min(64L,
+        Fs.footerRows(o).getOrElse(o.count()) / 40000L)).toInt
       val tmp = stagedCorpus(dir, "cdclog") { t =>
         stageParts(log, t, "chunk", nChunks, xxhash64(col("k"), col("seq")))
       }
@@ -2534,7 +2536,7 @@ object StreamingOps {
       // a pre-partitioned frame; past the threshold it becomes a bucketed
       // external table whose scan reports HashPartitioning, so per-batch
       // joins read buckets in place and only the batch side moves.
-      val nCust = customer.count() // footer-only
+      val nCust = Fs.footerRows(customer).getOrElse(customer.count())
       val keyedParts = math.max(fullParallelism(outer).toLong,
         math.min(512L, nCust * 12L / 2000000L)).toInt
       // Only worth staging past the bucketed-table threshold: at base

@@ -617,17 +617,22 @@ class PlanInvariantsSpec extends AnyFunSuite {
           HashOps.md5TokensLow64(split(col("text"), " ")), 4).as("mh"),
         VectorOps.srpPackedBits(col("v"), IndexedSeq(Seq(1.0, -1.0)), 1).as("srp"),
         VectorOps.argmaxCosine(col("v"), Seq((0L, Seq(1.0, 0.0)))).as("am"),
-        VectorOps.signProjectionBands(col("v"), 2, 4).as("bands"))
+        VectorOps.signProjectionBands(col("v"), 2, 4).as("bands"),
+        VectorOps.dot(col("v"), col("v")).as("dot"),
+        VectorOps.squaredNorm(col("v")).as("ssq"),
+        graft.ops.TextOps.langIdFeatures(col("text")).as("lang"))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*(1)"),
       s"custom-expression projection fell out of WholeStageCodegen:\n$p")
     assert(df.collect().length == 4)
   }
 
-  test("one materialization rule: localCheckpoint and parquet footer reads only in util/Fs.scala") {
-    // src/main code with // and /* */ comments removed; string and char
-    // literals are matched first and kept, so a "//" inside one is not
-    // taken for a comment (Bridge.scala's scaladoc names localCheckpoint)
+  /** src/main code by path relative to src/main/scala, with // and /* */
+    * comments removed; string and char literals are matched first and
+    * kept, so a "//" inside one is not taken for a comment (Bridge.scala's
+    * scaladoc names localCheckpoint).
+    */
+  private lazy val mainSources: Map[String, String] = {
     val token = ("(?s)\"\"\".*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"|'(?:\\\\.|[^'\\\\])'" +
       "|/\\*.*?\\*/|//[^\\n]*").r
     def code(src: String): String = token.replaceAllIn(src, m =>
@@ -635,14 +640,33 @@ class PlanInvariantsSpec extends AnyFunSuite {
       else scala.util.matching.Regex.quoteReplacement(m.matched))
     val root = java.nio.file.Paths.get("src/main/scala")
     val walk = java.nio.file.Files.walk(root)
-    val sources = try {
+    try {
       import scala.jdk.CollectionConverters._
       walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { f =>
         root.relativize(f).toString -> code(java.nio.file.Files.readString(f))
       }.toMap
     } finally walk.close()
+  }
+
+  private def occurrences(needle: String): Int =
+    mainSources.values.map(java.util.regex.Pattern.quote(needle).r.findAllMatchIn(_).size).sum
+
+  test("one materialization rule: localCheckpoint and parquet footer reads only in util/Fs.scala") {
     for (needle <- Seq(".localCheckpoint(", "ParquetFileReader"))
-      assert(sources.filter(_._2.contains(needle)).keySet == Set("graft/util/Fs.scala"),
+      assert(mainSources.filter(_._2.contains(needle)).keySet == Set("graft/util/Fs.scala"),
         s"$needle outside graft.util.Fs: route it through Fs.materialize / Fs.footerRows")
+  }
+
+  test("one native-expression shape: no hand-written type checks, one MD5 low-64 digest") {
+    // graft's Catalyst expressions type-check through ExpectsInputTypes and
+    // generate code through graft.functions.NativeUnary (SrpPackedBits keeps
+    // its own length-checked call); every DuckDB md5_number_lower hash goes
+    // through HashOps.md5Low64Bytes and its one thread-local digest
+    assert(occurrences("checkInputDataTypes") == 0,
+      "a hand-written checkInputDataTypes: declare inputTypes (ExpectsInputTypes)")
+    assert(occurrences("addReferenceObj") <= 2,
+      "an expression with its own codegen call: extend graft.functions.NativeUnary")
+    assert(occurrences("ThreadLocal.withInitial[java.security.MessageDigest]") == 1,
+      "a second MD5 digest: hash through graft.functions.HashOps.md5Low64Bytes")
   }
 }
