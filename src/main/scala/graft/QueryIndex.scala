@@ -1,12 +1,12 @@
 package graft
 
 /** Generates QUERIES.md — the authoritative query inventory — from
-  * `Queries.all` itself (r5 VERDICT #8: COVERAGE.md/README counts were
+  * `Queries.table` itself (r5 VERDICT #8: COVERAGE.md/README counts were
   * hand-maintained and went stale twice). One row per registered query:
   * name, the first scaladoc line of its implementing method (parsed from
   * the checked-in sources), oracle kind, and the test files that mention
   * it. Regenerated by every full `graft.Verify` run, so the file can never
-  * drift from the registration map; hand-edited counts are gone.
+  * drift from the registration table; hand-edited counts are gone.
   */
 object QueryIndex {
 
@@ -63,46 +63,18 @@ object QueryIndex {
     }
   }
 
-  /** Method names called in the first ~40 lines of `def <sym>`'s body —
-    * the fallback doc source for thin wrappers that delegate to a
-    * documented op method (e.g. dedupClusters → Dedup.connectedComponents).
+  /** Resolve a table row's run function to the symbol whose scaladoc
+    * describes the query: `fooBar _` → fooBar; a lambda → the first method
+    * it calls.
     */
-  private def bodyCalls(sources: Seq[(String, String)], sym: String): Seq[String] = {
-    val re = (s"""(?s)def\\s+${java.util.regex.Pattern.quote(sym)}\\b(.{0,1600})""").r
-    // the window must stop at the NEXT object member: a fixed 1600 chars
-    // slides past a one-line wrapper body into the following def and
-    // attributes ITS calls (r6: the three source_*_roundtrip wrappers
-    // picked up joinFuzzyQuote's quoteAttribution call)
-    val boundary = """\n  (?:private(?:\[\w+\])?\s+)?(?:def|val|lazy val|final val)\s""".r
-    sources.iterator
-      .flatMap(s => re.findFirstMatchIn(s._2).map(_.group(1)))
-      .toSeq.headOption.map { window =>
-        val body = boundary.findFirstMatchIn(window)
-          .map(m => window.take(m.start)).getOrElse(window)
-        // qualified calls first (Op.method), then unqualified helper calls
-        // (thin wrappers like sourceJsonlRoundtrip -> sourceRoundtrip)
-        val qualified = """[A-Za-z][A-Za-z0-9_.]*\.([a-z][A-Za-z0-9_]*)\s*\(""".r
-        val unqualified = """(?<![\w.])([a-z][A-Za-z0-9_]*)\s*\(""".r
-        val stop = Set("col", "lit", "t", "s", "when", "concat", "pmod",
-          "size", "sum", "count", "max", "min", "require", "expr")
-        (qualified.findAllMatchIn(body).map(_.group(1)).toSeq ++
-          unqualified.findAllMatchIn(body).map(_.group(1)).toSeq
-            .filterNot(stop)).distinct
-      }.getOrElse(Nil)
-  }
-
-  /** Resolve a registration's right-hand side to the symbol whose scaladoc
-    * describes the query: `fooBar _` → fooBar; a lambda → the first
-    * qualified method it calls.
-    */
-  private def targetSym(rhs: String): Option[String] = {
-    val eta = """^\s*([A-Za-z0-9_.]+)\s+_\s*,?\s*$""".r
-    rhs.trim match {
-      case eta(sym) => Some(sym.split('.').last)
-      case other =>
+  private def targetSym(run: String): Option[String] = {
+    val eta = """^\s*([A-Za-z0-9_.]+)\s+_\s*,""".r
+    eta.findPrefixMatchOf(run) match {
+      case Some(m) => Some(m.group(1).split('.').last)
+      case None =>
         // lambda: pick the first method call that isn't a builder verb
         val call = """([A-Za-z][A-Za-z0-9_]*)\s*\(""".r
-        call.findAllMatchIn(other).map(_.group(1))
+        call.findAllMatchIn(run).map(_.group(1))
           .find(m => !Set("col", "lit", "t", "s").contains(m))
     }
   }
@@ -116,46 +88,31 @@ object QueryIndex {
       case (n, text) if n == "Queries.scala" => text
     }.getOrElse("")
 
-    // registration lines inside the `val all` map (and any helper maps):
-    // "<name>" -> <rhs up to end of line; lambdas continue — grab 3 lines>
-    val lines = queriesSrc.linesIterator.toVector
-    val reg = """^\s*"([a-z0-9_]+)"\s*->\s*(.*)$""".r
-    // FIRST registration wins: each name appears twice (query map, then
-    // oracle-SQL map) and the query one comes first
-    val rhsByName: Map[String, String] = lines.zipWithIndex.collect {
-      case (reg(name, rhs), i) =>
-        name -> (if (rhs.trim.endsWith("_,") || rhs.trim.endsWith("_"))
-          rhs else (rhs +: lines.slice(i + 1, i + 4)).mkString(" "))
-    }.foldLeft(Map.empty[String, String]) { case (m, (k, v)) =>
-      if (m.contains(k)) m else m + (k -> v)
+    // the text after `Query("<name>",` in Queries.table: the row's run
+    // function (a lambda may continue onto the next line)
+    def runOf(name: String): Option[String] = {
+      val at = queriesSrc.indexOf("Query(\"" + name + "\",")
+      if (at < 0) None
+      else Some(queriesSrc.substring(at + name.length + 9).take(200))
     }
 
-    val oracles = Queries.oracles
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = Queries.table.map(_.name).sorted
     val rows = names.map { name =>
       // regex scaladoc extraction can StackOverflow on pathological
       // backtracking; a lost doc line must never lose the whole inventory
       val doc = try {
-        val sym = rhsByName.get(name).flatMap(targetSym)
-        sym.flatMap(s => docOf(mainSources, s))
-          .orElse(sym.toSeq.flatMap(s => bodyCalls(mainSources, s)).iterator
-            .flatMap(c => docOf(mainSources, c)).to(LazyList).headOption)
-          .orElse(docOf(mainSources, name))
+        runOf(name).flatMap(targetSym).flatMap(s => docOf(mainSources, s))
           .getOrElse("—")
       } catch { case _: Throwable => "—" }
-      val kind =
-        if (oracles.contains(name)) "DuckDB value-exact"
-        else "rows-only (documented)"
       val tests = testSources.collect {
         case (file, text) if text.contains("\"" + name + "\"") => file
       }.distinct.sorted.mkString(", ")
-      s"| `$name` | $doc | $kind | ${if (tests.isEmpty) "—" else tests} |"
+      s"| `$name` | $doc | DuckDB value-exact | ${if (tests.isEmpty) "—" else tests} |"
     }
-    val oracleCount = names.count(oracles.contains)
     "# Query inventory (generated — do not edit)\n\n" +
-      "Generated by `graft.QueryIndex` from `Queries.all` on every full\n" +
-      s"`graft.Verify` run. ${names.size} queries, $oracleCount with a\n" +
-      s"value-exact DuckDB oracle, ${names.size - oracleCount} rows-only.\n\n" +
+      "Generated by `graft.QueryIndex` from `Queries.table` on every full\n" +
+      s"`graft.Verify` run. ${names.size} queries, each with a value-exact\n" +
+      "DuckDB oracle.\n\n" +
       "| query | what it does | correctness gate | mentioned in tests |\n" +
       "|---|---|---|---|\n" +
       rows.mkString("\n") + "\n"

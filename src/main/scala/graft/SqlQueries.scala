@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Spark-SQL-dialect formulations of the §2.A relational inventory — the
-  * same queries as Queries.all's DataFrame plans, runnable through
+  * same queries as Queries.table's DataFrame plans, runnable through
   * `spark.sql` against temp views of the testdata tables (SURVEY §7.8:
   * every relational operator must also be expressible as SQL text). The
-  * DuckDB oracle strings live in Queries.oracles; these differ only where
-  * the dialects do (epoch_us vs unix_micros, list vs array functions).
+  * DuckDB oracle strings live on the same Queries.table rows; these differ
+  * only where the dialects do (epoch_us vs unix_micros, list vs array
+  * functions).
   */
 object SqlQueries {
 

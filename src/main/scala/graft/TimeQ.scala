@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Time selected queries in isolation and profile their stages:
   * `SPARK_GRAFT_SF_DIR=... runMain graft.TimeQ [warmRuns] <query> [query...]`
@@ -60,11 +61,13 @@ object TimeQ {
           ()
         }
       }
+      // drained on both sides: no event of the earlier runs reaches the
+      // listener, and every event of this run does
+      Bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.addSparkListener(listener)
       val sec = Bench.query(spark, sfDir, name)
+      Bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
-      // listener bus is async; give the final stage events a moment to land
-      Thread.sleep(500)
       import scala.jdk.CollectionConverters._
       val all = stages.asScala.toVector
       println(f"TIMEQ $name%-30s cold=$cold%.3f warm=$sec%.3f")

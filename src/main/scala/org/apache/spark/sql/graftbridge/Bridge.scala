@@ -13,6 +13,13 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until every listener event posted so far has been delivered
+    * (the bus is asynchronous), so what a listener has counted is final
+    * when this returns.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Re-declare the physical layout of a just-`localCheckpoint`ed frame.
     *
     * On Spark 4.1 with AQE, `repartition(parts, keys).localCheckpoint()`

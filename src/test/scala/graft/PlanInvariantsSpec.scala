@@ -669,4 +669,45 @@ class PlanInvariantsSpec extends AnyFunSuite {
     assert(occurrences("ThreadLocal.withInitial[java.security.MessageDigest]") == 1,
       "a second MD5 digest: hash through graft.functions.HashOps.md5Low64Bytes")
   }
+
+  test("one query table: 193 distinct names, each with a non-empty oracle") {
+    val names = Queries.table.map(_.name)
+    assert(names.size == 193, s"${names.size} registered queries")
+    val twice = names.diff(names.distinct)
+    assert(twice.isEmpty, s"names registered twice: $twice")
+    assert(Queries.table.forall(_.oracle.trim.nonEmpty),
+      s"empty oracles: ${Queries.table.filter(_.oracle.trim.isEmpty).map(_.name)}")
+    assert(SqlQueries.sql.keySet.subsetOf(names.toSet),
+      s"Spark-SQL texts for unregistered names: ${SqlQueries.sql.keySet -- names}")
+    assert(Queries.rawDisagg.keySet.subsetOf(names.toSet),
+      s"raw disagg dumps for unregistered names: ${Queries.rawDisagg.keySet -- names}")
+  }
+
+  test("one query table: no query name is registered through a map literal") {
+    // `"<name>" -> …` in src/main code: only rawDisagg's raw-series rows
+    // and SqlQueries' Spark-SQL texts, each name once; the plan and the
+    // oracle of a query live on its one Queries.table row
+    val names = Queries.table.map(_.name).toSet
+    val arrow = "\"([a-z0-9_]+)\"\\s*->".r
+    val hits = mainSources.toSeq.flatMap { case (file, code) =>
+      arrow.findAllMatchIn(code).map(_.group(1)).filter(names).map(file -> _)
+    }
+    def in(file: String) = hits.collect { case (`file`, n) => n }.sorted
+    assert(hits.map(_._1).toSet.subsetOf(Set("graft/Queries.scala", "graft/SqlQueries.scala")),
+      s"query names as map keys outside Queries/SqlQueries: $hits")
+    assert(in("graft/Queries.scala") == Queries.rawDisagg.keys.toSeq.sorted,
+      "a query registered through a map literal: add one Queries.table row instead")
+    assert(in("graft/SqlQueries.scala") == SqlQueries.sql.keys.toSeq.sorted)
+  }
+
+  test("QUERIES.md: every registered query has its own description") {
+    val row = """^\| `([a-z0-9_]+)` \| (.*) \| DuckDB value-exact \| .* \|$""".r
+    val rows = QueryIndex.generate(".").linesIterator.collect {
+      case row(name, doc) => name -> doc
+    }.toSeq
+    assert(rows.map(_._1) == Queries.table.map(_.name).sorted)
+    assert(rows.size == 193)
+    val undocumented = rows.collect { case (name, "—") => name }
+    assert(undocumented.isEmpty, s"queries without a scaladoc: $undocumented")
+  }
 }

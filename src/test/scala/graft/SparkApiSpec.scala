@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -162,10 +162,10 @@ class SparkApiSpec extends AnyFunSuite {
       override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
     def jobsOf(run: => Any): Int = {
-      ListenerBusDrain(spark.sparkContext)
+      Bridge.drainListenerBus(spark.sparkContext)
       jobs.set(0)
       run
-      ListenerBusDrain(spark.sparkContext)
+      Bridge.drainListenerBus(spark.sparkContext)
       jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
