@@ -156,7 +156,7 @@ object Bench {
     // regenerated 2026-08-16 01:38 with a new row-group layout — visible
     // in the JSON instead of silently moving readings.
     val scaleDir = sys.env.get("SPARK_GRAFT_SCALE_DIR")
-      .orElse(Some("/root/repo/target/testdata_10x"))
+      .orElse(Some("target/testdata_10x"))
       .filter(d => java.nio.file.Files.exists(
         java.nio.file.Paths.get(d, "documents.parquet")))
     val scaleFp = scaleDir.map { d =>

@@ -50,22 +50,11 @@ object PlanAudit {
       org.apache.spark.sql.execution.FormattedMode)
 
   private[graft] def plannedFrame(spark: SparkSession, dir: String,
-      name: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    def t(n: String) = spark.read.parquet(s"$dir/$n.parquet")
-    lazy val liRows = t("lineitem").count()
-    name match {
-      case "__pagerank_loop" =>
-        val fwd = t("lineitem").select(col("l_orderkey"), col("l_suppkey"))
-          .join(t("orders").select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("l_suppkey") * 2).as("src"),
-            (col("o_custkey") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        graft.ops.Graph.pageRank(edges, damping = 85, maxIter = 3,
-          parts = 32, rowsHint = 2L * liRows)
-      case _ => SparkEntry.queries(name)(spark, dir)
-    }
+      name: String): org.apache.spark.sql.DataFrame = name match {
+    case "__pagerank_loop" =>
+      val (edges, w) = Queries.pagerankEdges(spark, dir)
+      graft.ops.Graph.pageRank(edges, damping = 85, maxIter = 3,
+        parts = w.parts, rowsHint = 2L * w.liRows)
+    case _ => SparkEntry.queries(name)(spark, dir)
   }
 }

@@ -26,6 +26,14 @@ object Queries {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Rows of a base table, read from its footers by
+    * [[graft.util.Fs.rowCount]]. The empty read schema matters: opening a
+    * parquet table infers its schema in a Spark job, and a count reads no
+    * column.
+    */
+  private def tableRows(spark: SparkSession, dir: String, name: String): Long =
+    graft.util.Fs.rowCount(spark.read.schema(StructType(Nil)).parquet(s"$dir/$name.parquet"))
+
   /** Exact sum of a double column: per-row decimal cast, exact decimal sum,
     * result as double.
     */
@@ -1468,25 +1476,52 @@ object Queries {
     * convergence knobs on graphs that need them.
     */
   private def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    // Loop width is THE scale knob (r5 verdict): a fixed 32 puts the whole
-    // per-iteration hash aggregation of a 100x corpus into 32 concurrent
-    // tasks and OOMs a local[32]/8g session (caught by the r6 full-registry
-    // sweep). Self-size from the fact-table row count — a parquet
-    // footer-only count (~ms), no data scan; integer-exact ranks make the
-    // result partitioning-invariant, so the oracle is untouched.
-    val liRows = cachedCount(s, dir, "lineitem")
-    val parts = math.max(32L, math.min(512L, liRows / 250000L)).toInt
-    // The EDGE DERIVATION needs the same width discipline as the loop
-    // (r7: at the 1000× decade the session-width join/distinct over a
-    // 6×10⁸-row fact table OOMed on 128 MB hash-map doublings — 32 tasks
-    // × ~2×10⁷-entry aggregate state): explicit repartitions on the join
-    // and distinct keys satisfy their ClusteredDistribution, so every
-    // edge-building exchange runs `parts` wide. ONLY when the self-sized
-    // width exceeds the session width — at base scale the extra exchanges
-    // are pure cost (measured +1.3 s at sf0.1, the r6→r7 regression class).
-    val widen = parts > s.conf.get("spark.sql.shuffle.partitions").toInt
-    def w(df: DataFrame, keys: Column*): DataFrame =
+    val (edges, gw) = pagerankEdges(s, dir)
+    // rowsHint = 2·|lineitem| bounds |edges| (distinct pairs + reversal):
+    // past Fs.materialize's threshold the loop frames go to scratch parquet
+    // instead of memory-pinned localCheckpoint blocks (the 1000× OOM class)
+    // finalizeAndFree (r8): materialize the final node-scale ranks once and
+    // free the edge-scale e/nd scratch before returning — without it each
+    // bench/verify invocation leaves a 2·|lineitem|-row scratch frame until
+    // JVM exit (the r7 VERDICT #8 class, closed for triangles/label-prop in
+    // r8 but previously impossible here because the returned plan was lazy)
+    graft.ops.Graph.pageRank(edges, damping = 85, maxIter = 3, parts = gw.parts,
+      rowsHint = 2L * gw.liRows, finalizeAndFree = true)
+      .select(col("node"), expr("node div 2").as("entity_key"),
+        when(col("node") % 2 === 0, "supplier").otherwise("customer").as("kind"),
+        col("outdeg"), col("r").as("rank_raw"),
+        (col("r") / lit(1000000000.0)).as("rank"))
+      .orderBy(col("rank_raw").desc, col("node"))
+  }
+
+  /** The lineitem-sized width rule of the graph queries (r5 verdict: loop
+    * width is THE scale knob — a fixed 32 puts a 100× corpus's whole
+    * per-iteration aggregation into 32 tasks and OOMs a local[32]/8g
+    * session). `parts` self-sizes from the lineitem rows; integer-exact
+    * results make every consumer partitioning-invariant, so the oracles
+    * are untouched. [[apply]] repartitions an edge-derivation step to
+    * `parts` on its keys (r7: at the 1000× decade the session-width
+    * join/distinct over a 6×10⁸-row fact table OOMed on 128 MB hash-map
+    * doublings), satisfying the step's ClusteredDistribution — ONLY when
+    * `parts` exceeds the session width; at base scale the extra exchanges
+    * are pure cost (measured +1.3 s at sf0.1, the r6→r7 regression class).
+    */
+  private[graft] final case class GraphWidth(liRows: Long, parts: Int, widen: Boolean) {
+    def apply(df: DataFrame, keys: Column*): DataFrame =
       if (widen) df.repartition(parts, keys: _*) else df
+  }
+
+  private def graphWidth(s: SparkSession, dir: String): GraphWidth = {
+    val liRows = tableRows(s, dir, "lineitem")
+    val parts = math.max(32L, math.min(512L, liRows / 250000L)).toInt
+    GraphWidth(liRows, parts, parts > s.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
+  /** graph_pagerank's edges — both directions of every distinct
+    * (supplier, customer) trade — with the width they were derived at.
+    */
+  private[graft] def pagerankEdges(s: SparkSession, dir: String): (DataFrame, GraphWidth) = {
+    val w = graphWidth(s, dir)
     val fwd = w(
       w(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
         col("l_orderkey"))
@@ -1498,22 +1533,7 @@ object Queries {
       col("src"), col("dst"))
       .distinct()
     // reversed copy: src parities disjoint, so plain union stays duplicate-free.
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    // rowsHint = 2·|lineitem| bounds |edges| (distinct pairs + reversal):
-    // past Fs.materialize's threshold the loop frames go to scratch parquet
-    // instead of memory-pinned localCheckpoint blocks (the 1000× OOM class)
-    // finalizeAndFree (r8): materialize the final node-scale ranks once and
-    // free the edge-scale e/nd scratch before returning — without it each
-    // bench/verify invocation leaves a 2·|lineitem|-row scratch frame until
-    // JVM exit (the r7 VERDICT #8 class, closed for triangles/label-prop in
-    // r8 but previously impossible here because the returned plan was lazy)
-    graft.ops.Graph.pageRank(edges, damping = 85, maxIter = 3, parts = parts,
-      rowsHint = 2L * liRows, finalizeAndFree = true)
-      .select(col("node"), expr("node div 2").as("entity_key"),
-        when(col("node") % 2 === 0, "supplier").otherwise("customer").as("kind"),
-        col("outdeg"), col("r").as("rank_raw"),
-        (col("r") / lit(1000000000.0)).as("rank"))
-      .orderBy(col("rank_raw").desc, col("node"))
+    (fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))), w)
   }
 
   private val graphPagerankSql =
@@ -1864,18 +1884,6 @@ object Queries {
     * (pure function of the edge), so it runs BEFORE the dedup shuffle;
     * localCheckpointed because every consumer reads it several times.
     */
-  /** Row count of a base table, cached per (dir, table) — the graph family
-    * (pagerank, triangles, label propagation, node jaccard) each self-size
-    * from the lineitem count, and within a JVM the testdata dir is static,
-    * so the count job runs once instead of once per query (r7 VERDICT #2:
-    * part of the graph_triangles regression budget).
-    */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
-  private def cachedCount(s: SparkSession, dir: String, name: String): Long =
-    rowCountCache.computeIfAbsent((dir, name),
-      _ => java.lang.Long.valueOf(t(s, dir, name).count())).longValue
-
   /** The materialized edge handle + the sizing facts its consumers reuse. */
   private final case class EdgeSet(handle: graft.util.Fs.Materialized,
       liRows: Long, parts: Int) {
@@ -1883,16 +1891,7 @@ object Queries {
   }
 
   private def coPurchaseEdges(s: SparkSession, dir: String): EdgeSet = {
-    // The graph_pagerank edge-derivation width discipline (r7): at the
-    // 1000× decade the session-width self-join/distinct over ~6×10⁸
-    // lineitems OOMs on spill-read buffers + partial-agg doublings; widen
-    // every derivation exchange to the self-sized parts — only when that
-    // exceeds the session width (pure cost at base scale otherwise).
-    val liRows = cachedCount(s, dir, "lineitem")
-    val parts = math.max(32L, math.min(512L, liRows / 250000L)).toInt
-    val widen = parts > s.conf.get("spark.sql.shuffle.partitions").toInt
-    def w(df: DataFrame, keys: Column*): DataFrame =
-      if (widen) df.repartition(parts, keys: _*) else df
+    val w = graphWidth(s, dir)
     val li = w(t(s, dir, "lineitem").select(col("l_orderkey").as("ok"),
       col("l_partkey").as("pk")), col("ok"), col("pk")).distinct()
     val liJ = w(li, col("ok"))
@@ -1916,9 +1915,9 @@ object Queries {
     // VERDICT #2); the keyed layout only pays for itself when the loop
     // actually runs wider than the session.
     val h =
-      if (widen) graft.util.Fs.materializeTrackedKeyed(edges, parts, Seq("u"), liRows)
-      else graft.util.Fs.materializeTracked(edges, liRows)
-    EdgeSet(h, liRows, parts)
+      if (w.widen) graft.util.Fs.materializeTrackedKeyed(edges, w.parts, Seq("u"), w.liRows)
+      else graft.util.Fs.materializeTracked(edges, w.liRows)
+    EdgeSet(h, w.liRows, w.parts)
   }
 
   /** The matching DuckDB CTE chain (li, e0, e) for [[coPurchaseEdges]]. */
@@ -1970,7 +1969,7 @@ object Queries {
     // (guide §3.1). Gated on the part-table footer count — the 100 TB
     // shape (billions of parts) keeps the shuffle joins.
     val degB: DataFrame => DataFrame =
-      if (cachedCount(s, dir, "part") <= 5000000L) df => broadcast(df)
+      if (tableRows(s, dir, "part") <= 5000000L) df => broadcast(df)
       else df => df
     val oriented = e
       .join(degB(deg.select(col("x").as("u"), col("d").as("du"))), "u")
@@ -2029,7 +2028,7 @@ object Queries {
     // join_fuzzy_quote / graph_pagerank discipline): ~1.5 pair rows per
     // lineitem would otherwise squeeze through the fixed session width
     // (GC-pressure at the 100x decade under 32 partitions)
-    val nLi = cachedCount(s, dir, "lineitem")
+    val nLi = tableRows(s, dir, "lineitem")
     val parts = math.max(32L, nLi / 500000L).toInt
     // repartition BEFORE distinct: HashPartitioning(ok) is a subset of the
     // distinct's (ok, pk) clustering, so the dedup runs at `parts` width
@@ -2053,7 +2052,7 @@ object Queries {
     // Gated on the part-table footer count so the 100 TB shape (billions of
     // parts — too big to broadcast) keeps the shuffle plan; ≤5M keys is
     // ~80 MB built, well inside the broadcast envelope through decade 4.
-    val degSmall = cachedCount(s, dir, "part") <= 5000000L
+    val degSmall = tableRows(s, dir, "part") <= 5000000L
     val attach =
       if (degSmall)
         co.join(broadcast(deg.select(col("pk").as("u"), col("d").as("du"))), "u")
@@ -2977,7 +2976,7 @@ object Queries {
   private def dedupJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val parts = math.max(32L, math.min(512L,
-      graft.util.Fs.footerRows(docs).getOrElse(docs.count()) / 10000L)).toInt
+      graft.util.Fs.rowCount(docs) / 10000L)).toInt
     Dedup.jaccardPrefixPairs(docs, tNum = 7, tDen = 10, parts = parts)
   }
 
@@ -3207,7 +3206,7 @@ object Queries {
     val full = t(s, dir, "documents")
     // self-size from the SUBSET row count the filter implies (footer/K)
     val parts = math.max(32L,
-      math.min(512L, graft.util.Fs.footerRows(full).getOrElse(full.count()) /
+      math.min(512L, graft.util.Fs.rowCount(full) /
         graft.ops.Dedup.SubsetK / 10000L)).toInt
     Dedup.jaccardPrefixPairs(Dedup.subsetDocs(full), tNum = 7, tDen = 10,
       parts = parts)
@@ -5463,7 +5462,7 @@ object Queries {
           col("v").cast(IntegerType).as("v"), col("quality"), col("source"),
           md5(col("text")).as("fp"))
         .orderBy(col("doc_id")),
-      rowsHint = graft.util.Fs.footerRows(docs).getOrElse(docs.count()))
+      rowsHint = graft.util.Fs.rowCount(docs))
     rmTreeQuiet(out)
     res
   }
@@ -7338,7 +7337,7 @@ object Queries {
     // repo's scratch discipline (localCheckpoint below 2e7 rows, pruned
     // parquet above) — this is the "checkpoint the post-filter stage"
     // deployment shape the scaladoc above already prescribes at 100 TB.
-    val nDocs = cachedCount(s, dir, "documents")
+    val nDocs = tableRows(s, dir, "documents")
     val feat = graft.util.Fs.materialize(
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"),

@@ -79,7 +79,7 @@ object QueryIndex {
     }
   }
 
-  def generate(root: String = "/root/repo"): String = {
+  def generate(root: String = "."): String = {
     val mainSources = walk(java.nio.file.Paths.get(root, "src/main/scala"))
       .map(p => (p.getFileName.toString, readFile(p)))
     val testSources = walk(java.nio.file.Paths.get(root, "src/test/scala"))
@@ -118,7 +118,7 @@ object QueryIndex {
       rows.mkString("\n") + "\n"
   }
 
-  def write(root: String = "/root/repo"): Unit = {
+  def write(root: String = "."): Unit = {
     val out = java.nio.file.Paths.get(root, "QUERIES.md")
     java.nio.file.Files.write(out,
       generate(root).getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -73,8 +73,8 @@ object ScaleSweep {
   def main(args: Array[String]): Unit = {
     val dirs = Seq(
       "base" -> sys.env.getOrElse("SWEEP_BASE", "/root/testdata/sf0.1"),
-      "x10" -> sys.env.getOrElse("SWEEP_10X", "/root/repo/target/testdata_10x"),
-      "x100" -> sys.env.getOrElse("SWEEP_100X", "/root/repo/target/testdata_100x"),
+      "x10" -> sys.env.getOrElse("SWEEP_10X", "target/testdata_10x"),
+      "x100" -> sys.env.getOrElse("SWEEP_100X", "target/testdata_100x"),
     ).filter { case (_, d) =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(d, "documents.parquet"))
     }

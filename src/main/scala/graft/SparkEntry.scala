@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.disagg.Disaggregate
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The fixed entry points `entry`, `queries` and `oracleSql` (SURVEY.md §7). */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

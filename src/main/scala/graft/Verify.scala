@@ -20,10 +20,10 @@ object Verify {
     }
     // raw disaggregated series for tools/reference_parity.py (the driver
     // gate reads the consistency views above; parity diffs ŷ itself).
-    // Fixed path OUTSIDE outDir: anything under outDir is scanned by the
-    // driver as a query result and would surface as a spurious
-    // "no_oracle" row in the correctness file.
-    val rawDir = "/root/repo/target/verify_raw"
+    // Fixed path OUTSIDE outDir, under the working directory's target/:
+    // anything under outDir is read back as a query result and would
+    // surface as a spurious "no_oracle" row in the correctness file.
+    val rawDir = "target/verify_raw"
     // Under a query filter, still refresh the raw dumps the filter names
     // (raw names share the disagg query names) so tools/reference_parity.py
     // never diffs a filtered run against stale outputs; warn about the rest.

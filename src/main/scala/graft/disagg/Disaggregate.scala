@@ -1,7 +1,6 @@
 package graft.disagg
 
-import java.sql.Timestamp
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{LocalDate, LocalDateTime}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,15 +52,9 @@ object Disaggregate {
   // Time columns are routed through TIMESTAMP_NTZ before leaving Spark:
   // the NTZ external type is wall-clock (LocalDateTime), so the calendar
   // day a user sees is preserved no matter what spark.sql.session.timeZone
-  // or the JVM default is. The Timestamp/Instant fallbacks below are only
-  // reachable for values that bypassed the NTZ cast and interpret the
-  // instant in UTC (the pinned session zone of this repo's harnesses).
+  // or the JVM default is.
   private[graft] def toLocalDate(v: Any): LocalDate = v match {
-    case t: Timestamp => t.toInstant.atZone(ZoneOffset.UTC).toLocalDate
-    case d: java.sql.Date => d.toLocalDate
-    case d: LocalDate => d
-    case dt: java.time.LocalDateTime => dt.toLocalDate // TIMESTAMP_NTZ external type
-    case i: java.time.Instant => i.atZone(ZoneOffset.UTC).toLocalDate
+    case dt: LocalDateTime => dt.toLocalDate
     case other => throw new IllegalArgumentException(s"Unsupported time value $other")
   }
 

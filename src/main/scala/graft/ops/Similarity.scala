@@ -347,11 +347,11 @@ object Similarity {
   def knnGraphBucketed(
       embeddings: DataFrame, k: Int = 3, targetBlock: Int = 160,
       nBits: Int = 16, dim: Int = 64, blockCol: String = "label"): DataFrame = {
-    // footer-only count: the one driver-side scalar the blocking width
-    // derives from (same pattern as graph_pagerank's loop-width self-sizing)
+    // the one scalar the blocking width derives from (same pattern as
+    // graph_pagerank's loop-width self-sizing)
     val e0 = embeddings.select(col("vec_id"), col(blockCol).as("block"),
       asDouble(col("embedding")).as("v"))
-    val bucketed = withAdaptiveSrpBucket(e0, embeddings.count(),
+    val bucketed = withAdaptiveSrpBucket(e0, graft.util.Fs.rowCount(embeddings),
       targetBlock, nBits, dim, "bucket")
     val a = bucketed.select(col("vec_id"), col("block"), col("bucket"),
       col("v").as("va"))
@@ -435,7 +435,7 @@ object Similarity {
     // bucket — wider signatures would silently alias into the bucket field
     require(nBits <= 16, "block id reserves 16 bits for the SRP refinement")
     val assigned = assignBuckets(embeddings, nBuckets) // (vec_id, v, bucket)
-    val srp = withAdaptiveSrpBucket(assigned, embeddings.count(),
+    val srp = withAdaptiveSrpBucket(assigned, graft.util.Fs.rowCount(embeddings),
       targetBlock, nBits, dim, "srp")
     val blocked = srp.select(col("vec_id"),
       (col("bucket").cast(LongType) * lit(1L << 16) +

@@ -770,7 +770,7 @@ object Sketches {
     val k = setAlgebraK
     // events-scale distinct sized by the repartition-before-distinct rule:
     // HashPartitioning(e) is a subset of the (t, e) clustering
-    val parts = math.max(32L, events.count() / 2000000L).toInt
+    val parts = math.max(32L, graft.util.Fs.rowCount(events) / 2000000L).toInt
     val flags = setElements(events).repartition(parts, col("e")).distinct()
       .groupBy(col("e")).agg(
         max(when(col("t") === "view", 1).otherwise(0)).as("fv"),
@@ -900,7 +900,7 @@ object Sketches {
     // the fixed session width at the 100× decade, e₂ 1.21 before sizing);
     // HashPartitioning(w, e) satisfies the distinct-aggregate's first
     // phase, so the countDistinct adds no session-width exchange
-    val nEv = events.count()
+    val nEv = graft.util.Fs.rowCount(events)
     val parts = math.max(32L, nEv * 7L / 2000000L).toInt
     // distinct (day, element) universe, materialized ONCE (r12): the day
     // spine AND the exploded exact count both consume it — un-materialized,

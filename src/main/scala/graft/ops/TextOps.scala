@@ -282,11 +282,11 @@ object TextOps {
     // self-sizing discipline): the exploded shingle index is ~50 rows/doc
     // and the 4th-decade sweep measured e₃=1.12 from spilling 250M-row
     // shuffles through the session's fixed 32 partitions — size from the
-    // footer-only doc count instead. Explicit repartition on a SUBSET of
+    // doc count instead. Explicit repartition on a SUBSET of
     // every downstream key set (distinct, join, groupBy) means no
     // operator adds its own session-width exchange after it.
     val parts = math.max(32L,
-      math.min(512L, docs.count() / 10000L)).toInt
+      math.min(512L, graft.util.Fs.rowCount(docs) / 10000L)).toInt
     val idx = Dedup.withShingles(docs, "doc_id", "text", 3)
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
       .select(col("doc_id"),

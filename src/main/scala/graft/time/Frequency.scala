@@ -1,6 +1,6 @@
 package graft.time
 
-import java.time.{DayOfWeek, LocalDate, YearMonth}
+import java.time.{LocalDate, YearMonth}
 
 /** Frequency class: yearly / quarterly / monthly (the only classes the
   * reference supports — /root/reference/tsdisagg/time_conversion.py:17-33).
@@ -12,7 +12,6 @@ object FreqClass {
   case object Monthly extends FreqClass("monthly", "M", 8)
 
   val all: Seq[FreqClass] = Seq(Yearly, Quarterly, Monthly)
-  def fromOrder(o: Int): Option[FreqClass] = all.find(_.order == o)
 }
 
 /** A parsed pandas-style frequency alias for the Y/Q/M family.
@@ -85,23 +84,6 @@ final case class Frequency(
     case FreqClass.Monthly   => 1
   }
 
-  /** Is `d` an on-offset date for this frequency? (pandas `is_on_offset`).
-    * Start-anchored: first (business) day of an anchor-compatible month;
-    * end-anchored: last (business) day of such a month.
-    */
-  def isOnOffset(d: LocalDate): Boolean = {
-    anchorMonthOk(d.getMonthValue) && {
-      val ym = YearMonth.of(d.getYear, d.getMonthValue)
-      if (isStart) {
-        val first = LocalDate.of(d.getYear, d.getMonthValue, 1)
-        d == (if (business) Calendar.rollWeekendForward(first) else first)
-      } else {
-        val last = ym.atEndOfMonth()
-        d == (if (business) Calendar.rollWeekendBack(last) else last)
-      }
-    }
-  }
-
   /** The on-offset date within the month containing `ym`'s anchor-valid month.
     * Caller must pass an anchor-compatible month.
     */
@@ -114,8 +96,8 @@ final case class Frequency(
       if (business) Calendar.rollWeekendBack(last) else last
     }
 
-  /** Is `m` a valid month for this frequency's anchor? (shared by the date
-    * iterator and isOnOffset).
+  /** Is `m` a valid month for this frequency's anchor? (the date iterator's
+    * month filter).
     */
   private def anchorMonthOk(month: Int): Boolean = cls match {
     case FreqClass.Monthly   => true

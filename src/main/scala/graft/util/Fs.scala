@@ -40,20 +40,51 @@ object Fs {
     * plan has no parquet file leaf (a checkpointed, cached, local or
     * non-parquet source); callers with no tighter bound then pass
     * `footerRows(input).getOrElse(0L)`, which keeps `localCheckpoint`.
+    * To size work by the frame's own rows, use [[rowCount]].
     */
   def footerRows(df: org.apache.spark.sql.DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val files = df.queryExecution.optimizedPlan.collectLeaves()
-      .collect { case l: LogicalRelation => l.relation }
-      .collect { case h: HadoopFsRelation if h.fileFormat.isInstanceOf[
-        org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-        h.location.inputFiles }.flatten.distinct
+      .flatMap(parquetFiles).flatten.distinct
+    if (files.isEmpty) None else Some(footerSum(df, files))
+  }
+
+  /** The rows of `df`, the one way `src/main` counts rows to size work.
+    * When the optimized plan is only `Project`s over one parquet scan the
+    * footer sum is exact and is read with no Spark job; any other plan (a
+    * filter, join, generator, range, cache or checkpoint) runs `count()`.
+    */
+  def rowCount(df: org.apache.spark.sql.DataFrame): Long = {
+    @scala.annotation.tailrec
+    def scan(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[Seq[String]] =
+      p match {
+        case org.apache.spark.sql.catalyst.plans.logical.Project(_, child) => scan(child)
+        case leaf => parquetFiles(leaf)
+      }
+    scan(df.queryExecution.optimizedPlan).fold(df.count())(footerSum(df, _))
+  }
+
+  /** The files behind a parquet `HadoopFsRelation` leaf; `None` for any other node. */
+  private def parquetFiles(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[Seq[String]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    p match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[
+          org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
+          Some(h.location.inputFiles.toSeq)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  private def footerSum(df: org.apache.spark.sql.DataFrame, files: Seq[String]): Long = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    if (files.isEmpty) None else Some(files.map { f =>
+    files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet
         .hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
       try r.getRecordCount finally r.close()
-    }.sum)
+    }.sum
   }
 
   /** Live deferred scratch dirs — the observable for the no-leak

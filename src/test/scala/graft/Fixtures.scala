@@ -80,6 +80,27 @@ object Fixtures {
   def withConstant(f: TsFrame, name: String = "constant"): TsFrame =
     TsFrame(f.ts, f.columns :+ name, f.data :+ Array.fill(f.nRows)(1.0))
 
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the listener is added and again before it is removed, so the
+    * count holds exactly the jobs of `body`.
+    */
+  def jobsOf(spark: org.apache.spark.sql.SparkSession)(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   def assertAllClose(got: Array[Double], want: Array[Double], rtol: Double, what: String): Unit = {
     assert(got.length == want.length, s"$what: length ${got.length} != ${want.length}")
     val bad = got.indices.filter { i =>

@@ -232,32 +232,25 @@ class OpsSpec extends AnyFunSuite {
     // budget, so with the guard off they must not pay the sum(length(text))
     // scan; an explicit budget still runs it. The frames are built, never
     // run, so the only jobs in each window are the scan's and the
-    // operator's own sizing (quoteAttribution's docs.count()).
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobsOf(build: => Any): Int = {
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      jobs.set(0)
-      build
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
-    }
+    // operator's own sizing (quoteAttribution's Fs.rowCount, which reads
+    // this projected parquet read's footers with no job).
+    def jobsOf(build: => Any): Int = Fixtures.jobsOf(spark)(build)
     val d = docs.drop("n_chars")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val ops = Seq[(String, Long => DataFrame)](
-        "noveltySignals" -> (b => TextOps.noveltySignals(d, maxSpillBytes = b)),
-        "quoteAttribution" -> (b => TextOps.quoteAttribution(d, maxSpillBytes = b)),
-        "ngramJaccardPairs" -> (b => Dedup.ngramJaccardPairs(d, maxSpillBytes = b)))
-      val scan = jobsOf(Dedup.measureIndexSpill(d, "text", "scan", "none", 0L))
-      assert(scan > 0)
-      for ((name, op) <- ops)
-        assert(jobsOf(op(Long.MaxValue)) - jobsOf(op(0L)) == scan, name)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ops = Seq[(String, Long => DataFrame)](
+      "noveltySignals" -> (b => TextOps.noveltySignals(d, maxSpillBytes = b)),
+      "quoteAttribution" -> (b => TextOps.quoteAttribution(d, maxSpillBytes = b)),
+      "ngramJaccardPairs" -> (b => Dedup.ngramJaccardPairs(d, maxSpillBytes = b)))
+    val scan = jobsOf(Dedup.measureIndexSpill(d, "text", "scan", "none", 0L))
+    assert(scan > 0)
+    for ((name, op) <- ops)
+      assert(jobsOf(op(Long.MaxValue)) - jobsOf(op(0L)) == scan, name)
+  }
+
+  test("quoteAttribution over a parquet read builds with no Spark job when the spill guard is off") {
+    // its shuffle width comes from Fs.rowCount, which reads a bare parquet
+    // read's footers without a Spark job
+    val d = docs
+    assert(Fixtures.jobsOf(spark)(TextOps.quoteAttribution(d, maxSpillBytes = 0L)) == 0)
   }
 
   test("spill guard default (-1) audits against measured scratch dirs (r10 ADVICE)") {
@@ -3739,28 +3732,37 @@ class OpsSpec extends AnyFunSuite {
 
   test("Fs.footerRows reads the parquet footer count with no Spark job, None without a parquet leaf") {
     import graft.util.Fs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val d = docs
     val n = d.count()
-    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val rows = try {
-      val r = Fs.footerRows(d)
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var rows = Option.empty[Long]
+    assert(Fixtures.jobsOf(spark) { rows = Fs.footerRows(d) } == 0)
     assert(rows.contains(n))
-    assert(jobs.get() == 0)
     // it counts the files behind the leaf, not the filtered frame
     assert(Fs.footerRows(d.select(col("doc_id")).where(col("doc_id") < 3)).contains(n))
     assert(Fs.footerRows(spark.range(5).toDF()).isEmpty)
     val m = Fs.materializeTracked(d.select(col("doc_id")), rowsHint = n)
-    try assert(Fs.footerRows(m.df).isEmpty) finally m.free()
+    try {
+      assert(Fs.footerRows(m.df).isEmpty)
+      // Fs.rowCount equals count() on every plan, and reads the footers
+      // with no job only where the plan is Projects over one parquet scan
+      val inputs = Seq(
+        ("bare parquet read", d, true),
+        ("projection", d.select(col("doc_id"), length(col("text")).as("len")), true),
+        ("empty read schema", spark.read.schema(org.apache.spark.sql.types.StructType(Nil))
+          .parquet(s"$dir/documents.parquet"), true),
+        ("filter", d.where(col("doc_id") < 3), false),
+        ("join", d.join(d.select(col("doc_id")), "doc_id"), false),
+        ("explode", d.select(col("doc_id"), explode(split(col("text"), " ")).as("w")), false),
+        ("spark.range", spark.range(5).toDF(), false),
+        ("materializeTracked", m.df, false))
+      for ((what, df, footers) <- inputs) {
+        val want = df.count()
+        var got = -1L
+        val jobs = Fixtures.jobsOf(spark) { got = Fs.rowCount(df) }
+        assert(got == want, what)
+        if (footers) assert(jobs == 0, what) else assert(jobs >= 1, what)
+      }
+    } finally m.free()
   }
 
   test("an Observation on the frame handed to Fs.materializeTracked fires on both branches") {

@@ -657,6 +657,19 @@ class PlanInvariantsSpec extends AnyFunSuite {
         s"$needle outside graft.util.Fs: route it through Fs.materialize / Fs.footerRows")
   }
 
+  test("one row-count rule: sizing counts go through Fs.rowCount, with no count cache") {
+    // a footer read with a count() fallback is Fs.rowCount written by hand,
+    // and a per-table count cache hides the count job from every run after
+    // the first
+    val handCount = """getOrElse\(\s*[\w.()]*\.count\(\)\s*\)""".r
+    val countCache = """ConcurrentHashMap\[[^\]]*,\s*(?:java\.lang\.)?Long\]""".r
+    for ((what, re) <- Seq("getOrElse(….count())" -> handCount, "a count cache" -> countCache)) {
+      val hits = mainSources.filter(f => re.findFirstIn(f._2).isDefined).keySet
+      assert(hits.isEmpty, s"$what in $hits: size work with graft.util.Fs.rowCount")
+    }
+    assert(occurrences("rowCountCache") == 0, "a per-table row-count cache")
+  }
+
   test("one native-expression shape: no hand-written type checks, one MD5 low-64 digest") {
     // graft's Catalyst expressions type-check through ExpectsInputTypes and
     // generate code through graft.functions.NativeUnary (SrpPackedBits keeps

@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -157,26 +155,13 @@ class SparkApiSpec extends AnyFunSuite {
     localDf(Fixtures.withConstant(Fixtures.exportsQ)).write.parquet(s"$dir/high")
     val low = spark.read.parquet(s"$dir/low")
     val high = spark.read.parquet(s"$dir/high")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    def jobsOf(run: => Any): Int = {
-      Bridge.drainListenerBus(spark.sparkContext)
-      jobs.set(0)
-      run
-      Bridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
-      assert(jobsOf(Disaggregate.seriesOutput(low, Some(high), params = chowLin)) == 2,
-        "seriesOutput(low, high): one job per input")
-      val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
-      assert(jobsOf(Disaggregate.series(low, None, params = dc).collect()) == 1,
-        "series(low).collect(): one job for the input, none for the output")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def jobsOf(run: => Any): Int = Fixtures.jobsOf(spark)(run)
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    assert(jobsOf(Disaggregate.seriesOutput(low, Some(high), params = chowLin)) == 2,
+      "seriesOutput(low, high): one job per input")
+    val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
+    assert(jobsOf(Disaggregate.series(low, None, params = dc).collect()) == 1,
+      "series(low).collect(): one job for the input, none for the output")
   }
 
   test("series output does not depend on input row order or partitioning") {

@@ -1,7 +1,7 @@
 import duckdb, json, glob, os, sys
 import pandas as pd
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
-out = sys.argv[2] if len(sys.argv) > 2 else '/root/repo/target/verify_out'
+out = sys.argv[2] if len(sys.argv) > 2 else 'target/verify_out'
 # Optional comma-separated skip list (3rd arg) for large-dir replays where
 # a DuckDB oracle is itself super-linear (all-pairs / recursive-CTE dedup
 # family): the full gate runs at sf0.01; a scoped sf0.1 gate skips only

@@ -26,7 +26,7 @@ import numpy as np
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
-    ap.add_argument("--scaled", default="/root/repo/target/testdata_10x")
+    ap.add_argument("--scaled", default="target/testdata_10x")
     ap.add_argument("--copies", type=int, default=10)
     a = ap.parse_args()
     con = duckdb.connect()

@@ -320,7 +320,7 @@ def scale_embeddings_stream(src, dst, copies):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--dst", default="/root/repo/target/testdata_10x")
+    ap.add_argument("--dst", default="target/testdata_10x")
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument("--tables", default="",
                     help="comma-separated subset (e.g. documents,embeddings) "

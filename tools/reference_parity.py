@@ -74,7 +74,7 @@ import pandas as pd
 from tsdisagg import disaggregate_series
 
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
-out = sys.argv[2] if len(sys.argv) > 2 else '/root/repo/target/verify_out'
+out = sys.argv[2] if len(sys.argv) > 2 else 'target/verify_out'
 
 orders = pd.read_parquet(f'{sf}/orders.parquet')
 lineitem = pd.read_parquet(f'{sf}/lineitem.parquet')
@@ -126,7 +126,7 @@ for method, agg, name, lf, hf in cases:
     # view for the DuckDB gate; Verify dumps the raw series separately
     # Verify dumps raw series to a fixed path outside the driver-scanned
     # outDir (see Verify.scala); fall back to the legacy in-outDir location
-    raw_base = '/root/repo/target/verify_raw'
+    raw_base = 'target/verify_raw'
     if not os.path.isdir(f'{raw_base}/{name}'):
         raw_base = f'{out}/raw'
     ours = pd.read_parquet(f'{raw_base}/{name}').sort_values('ts')

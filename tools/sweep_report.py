@@ -9,7 +9,7 @@ Usage: python3 tools/sweep_report.py [--md]
 import json, math, sys
 
 acc = {}
-for line in open('/root/repo/target/scalesweep.jsonl'):
+for line in open('target/scalesweep.jsonl'):
     r = json.loads(line)
     # last entry wins, but never let a -1 overwrite a real measurement
     cur = acc.setdefault(r['query'], {})
@@ -28,7 +28,7 @@ for q, m in sorted(acc.items()):
         'base_sec': b, 'x10_sec': t10, 'x100_sec': t100,
         'e1': expo(b, t10), 'e2': expo(t10, t100),
     }
-json.dump(rows, open('/root/repo/target/scalesweep_final.json', 'w'), indent=1)
+json.dump(rows, open('target/scalesweep_final.json', 'w'), indent=1)
 
 have_e2 = [(v['e2'], q) for q, v in rows.items() if v['e2'] is not None]
 have_e1 = [(v['e1'], q) for q, v in rows.items() if v['e1'] is not None]
