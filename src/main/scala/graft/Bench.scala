@@ -36,7 +36,11 @@ object Bench {
 
   /** Many-series throughput — the 100 TB scale shape: N independent yearly
     * series disaggregated to quarterly inside cogroup tasks (one shuffle,
-    * kernels run where the data is). Returns wall seconds, −1 on failure.
+    * kernels run where the data is). The cogroup stage runs
+    * `spark.sql.shuffle.partitions` tasks at every N: `manySeries` fixes
+    * that width itself, because the stage's cost is kernel CPU per series,
+    * which AQE's byte-based coalescing cannot see. Returns wall seconds, −1
+    * on failure.
     */
   private[graft] def manySeriesSec(spark: SparkSession, nSeries: Int): Double =
     seconds(s"manySeries n=$nSeries") {

@@ -4,8 +4,10 @@ import java.time.{LocalDate, LocalDateTime}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 // Row shapes for the many-series mode. Top-level and public: Catalyst's
@@ -28,11 +30,13 @@ case class KeyedOut(series_id: Long, ts: LocalDateTime, value: Double)
   *    back as a local relation, which `collect()` reads without a job. Spark's
   *    job here is I/O + validation pushdown, not the O(n^3) solve.
   *  - [[manySeries]]: millions of independent series keyed by an id column.
-  *    Both inputs are co-partitioned by the key via `groupByKey.cogroup`
-  *    (ONE shuffle each, then embarrassingly parallel kernels inside
-  *    executors; no driver collect) — this is the 100 TB design: scale comes
-  *    from series-parallelism, never from distributing one series' linear
-  *    algebra (SURVEY.md §7.8).
+  *    Both inputs are hash-partitioned by the key into a width fixed at the
+  *    operator and cogrouped (ONE shuffle each, then embarrassingly parallel
+  *    kernels inside executors; no driver collect) — this is the 100 TB
+  *    design: scale comes from series-parallelism, never from distributing
+  *    one series' linear algebra (SURVEY.md §7.8). The width is fixed
+  *    because the kernel stage costs CPU per series, not bytes: AQE would
+  *    coalesce its ~130 B per series onto one or two cores.
   */
 object Disaggregate {
 
@@ -142,7 +146,18 @@ object Disaggregate {
     * tsCol, indicatorCols...). Each side shuffles ONCE on the series key;
     * the per-series kernel (tiny dense solves) runs inside `cogroup` tasks,
     * so throughput scales linearly with executors and no O(n^2) matrix ever
-    * crosses the wire. Series whose kernel fails (bad calendar, singular
+    * crosses the wire.
+    *
+    * The kernel stage runs `spark.sql.shuffle.partitions` tasks, fixed here
+    * by `repartition(n, series_id)` on each side: AQE never coalesces that
+    * exchange. Left to AQE, the stage would be sized by its shuffle bytes
+    * (~130 B per series), while its cost is kernel CPU per series (~30 µs
+    * for denton-cholette, milliseconds for GLS), so 20 000 series would run
+    * as 2 tasks and 100 GLS series as 1. Grouping on the column (not a key
+    * lambda) lets the cogroup reuse that hash partitioning, so there is
+    * still one exchange per side.
+    *
+    * Series whose kernel fails (bad calendar, singular
     * system) are skipped — at pipeline scale one poisoned series must not
     * kill the job — but never SILENTLY: every skip increments
     * `skippedSeries` (a named accumulator, visible in the Spark UI per
@@ -181,7 +196,17 @@ object Disaggregate {
     val indNames = indicatorCols.toIndexedSeq
     val p = params
 
-    val out = lowDs.groupByKey(_.series_id).cogroup(highDs.groupByKey(_.series_id)) {
+    // The key is declared nullable on both sides: cogroup needs equal key
+    // schemas, and the inputs (or the empty high side) may disagree. A null
+    // id still fails the key's not-null check, as it always has.
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def bySeries[T: Encoder](ds: Dataset[T]): KeyValueGroupedDataset[Long, T] = {
+      val id = Bridge.column(KnownNullable(Bridge.expression(col("series_id"))))
+      ds.withColumn("series_id", id).repartition(width, col("series_id"))
+        .groupBy(col("series_id")).as[Long, T]
+    }
+
+    val out = bySeries(lowDs).cogroup(bySeries(highDs)) {
       (key, lowIt, highIt) =>
         // the ENTIRE per-series pipeline sits inside the try: a malformed
         // series (null timestamps, ragged indicators, bad calendar) is

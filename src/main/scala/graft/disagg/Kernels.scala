@@ -327,48 +327,57 @@ object Kernels {
     */
   def sparseRowProduct(c: DenseMatrix[Double], m: DenseMatrix[Double]): DenseMatrix[Double] = {
     require(c.cols == m.rows, s"dim mismatch ${c.cols} vs ${m.rows}")
-    // raw column-major access (the per-element apply() of the generic path
-    // costs more than the arithmetic on the O(nl*n) zero-scan); views are
-    // materialized once rather than paying strided apply() per element
-    val cm = if (c.isTranspose || c.offset != 0 || c.majorStride != c.rows) c.copy else c
-    val mm = if (m.isTranspose || m.offset != 0 || m.majorStride != m.rows) m.copy else m
+    val cm = plain(c); val mm = plain(m)
     val nr = cm.rows; val nc = cm.cols; val mc = mm.cols
     val cd = cm.data; val md = mm.data
     val out = DenseMatrix.zeros[Double](nr, mc)
     val od = out.data
-    var i = 0
-    while (i < nr) {
-      var j = 0
-      while (j < nc) {
-        val w = cd(j * nr + i)
+    // j outer: the zero scan walks C's columns contiguously; every output
+    // element still sums its j terms in ascending order
+    var j = 0
+    while (j < nc) {
+      val base = j * nr
+      var i = 0
+      while (i < nr) {
+        val w = cd(base + i)
         if (w != 0.0) {
           var k = 0
           while (k < mc) { od(k * nr + i) += w * md(k * nc + j); k += 1 }
         }
-        j += 1
+        i += 1
       }
-      i += 1
+      j += 1
     }
     out
   }
 
-  /** `c * v` for a vector, same sparsity argument as [[sparseRowProduct]]. */
+  /** `c * v` for a vector, same sparsity argument and term order as
+    * [[sparseRowProduct]]. */
   def sparseRowProductVec(c: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] = {
-    val out = DenseVector.zeros[Double](c.rows)
-    var i = 0
-    while (i < c.rows) {
-      var j = 0
-      var acc = 0.0
-      while (j < c.cols) {
-        val w = c(i, j)
-        if (w != 0.0) acc += w * v(j)
-        j += 1
+    require(c.cols == v.length, s"dim mismatch ${c.cols} vs ${v.length}")
+    val cm = plain(c)
+    val nr = cm.rows; val cd = cm.data
+    val od = new Array[Double](nr)
+    var j = 0
+    while (j < cm.cols) {
+      val base = j * nr
+      val vj = v(j)
+      var i = 0
+      while (i < nr) {
+        val w = cd(base + i)
+        if (w != 0.0) od(i) += w * vj
+        i += 1
       }
-      out(i) = acc
-      i += 1
+      j += 1
     }
-    out
+    DenseVector(od)
   }
+
+  /** `m` itself when its `data` is plain column-major from index 0, else a
+    * copy that is: raw `data` reads cost less than the per-element apply()
+    * of the generic path on the O(nl·n) zero scan. */
+  private def plain(m: DenseMatrix[Double]): DenseMatrix[Double] =
+    if (m.isTranspose || m.offset != 0 || m.majorStride != m.rows) m.copy else m
 
   /** `C S C'` alone — the only covariance product the ML objective needs.
     * Skips scaling the nl x n `C S`; the full [[covProducts]] runs once per

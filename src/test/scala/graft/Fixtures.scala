@@ -3,6 +3,11 @@ package graft
 import java.time.LocalDate
 
 import scala.io.Source
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 import graft.disagg.TsFrame
 import graft.time.Frequency
@@ -80,26 +85,79 @@ object Fixtures {
   def withConstant(f: TsFrame, name: String = "constant"): TsFrame =
     TsFrame(f.ts, f.columns :+ name, f.data :+ Array.fill(f.nRows)(1.0))
 
-  /** Spark jobs started while `body` runs. The listener bus is drained
-    * before the listener is added and again before it is removed, so the
-    * count holds exactly the jobs of `body`.
+  /** Runs `body` with `listener` on the bus. The bus is drained before the
+    * listener is added and again before it is removed, so the listener sees
+    * exactly the events of `body`.
     */
-  def jobsOf(spark: org.apache.spark.sql.SparkSession)(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
+  private def listening(spark: SparkSession, listener: SparkListener)(body: => Any): Unit = {
     val sc = spark.sparkContext
     org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
       body
       org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
-      jobs.get()
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Spark jobs started while `body` runs. */
+  def jobsOf(spark: SparkSession)(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    listening(spark, new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })(body)
+    jobs.get()
+  }
+
+  /** One completed stage: its task count and the shuffle bytes it read. */
+  final case class StageRun(tasks: Int, shuffleReadBytes: Long)
+
+  /** Spark stages completed while `body` runs, in completion order. */
+  def stageTasksOf(spark: SparkSession)(body: => Any): Seq[StageRun] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRun]()
+    listening(spark, new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val read = Option(s.stageInfo.taskMetrics).map(_.shuffleReadMetrics.totalBytesRead).getOrElse(0L)
+        stages.add(StageRun(s.stageInfo.numTasks, read)); ()
+      }
+    })(body)
+    stages.asScala.toSeq
+  }
+
+  /** `n` keyed series for the many-series tests: series `s` has 10 yearly
+    * values from 2000 and a 40-quarter indicator, each with a per-series
+    * phase so no two series are alike. Returns (id, low, high).
+    */
+  def keyedSeries(n: Int): Seq[(Long, TsFrame, TsFrame)] = {
+    val years = freqDates("2000-01-01", "YS", 10)
+    val quarters = freqDates("2000-01-01", "QS", 40)
+    (0 until n).map { s =>
+      val x = Array.tabulate(40)(q => 50.0 + s % 7 + 2.0 * q + 3.0 * math.sin(0.7 * q + s))
+      val y = Array.tabulate(10)(t =>
+        1.1 * (0 until 4).map(q => x(4 * t + q)).sum + 5.0 * math.sin(1.3 * s + t))
+      (s.toLong, frame(years, "value" -> y), frame(quarters, "indicator" -> x))
+    }
+  }
+
+  /** [[keyedSeries]] as the (series_id, ts, value) low frame and the
+    * (series_id, ts, indicator) high frame that `manySeries` reads. */
+  def keyedFrames(spark: SparkSession,
+      series: Seq[(Long, TsFrame, TsFrame)]): (DataFrame, DataFrame) = {
+    def df(valueCol: String, rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("series_id", LongType), StructField("ts", TimestampNTZType),
+        StructField(valueCol, DoubleType))))
+    def rows(id: Long, f: TsFrame): Seq[Row] =
+      f.ts.indices.map(i => Row(id, f.ts(i).atStartOfDay(), f.data(0)(i)))
+    (df("value", series.flatMap { case (id, low, _) => rows(id, low) }),
+      df("indicator", series.flatMap { case (id, _, high) => rows(id, high) }))
+  }
+
+  /** The two `manySeries` shapes the keyed-series tests run: chow-lin on
+    * the indicator, and denton-cholette with no high side. */
+  def manySeriesCases(high: DataFrame): Seq[(graft.disagg.Disaggregate.Params, Option[DataFrame])] = Seq(
+    graft.disagg.Disaggregate.Params(method = "chow-lin", aggFunc = "sum") -> Some(high),
+    graft.disagg.Disaggregate.Params(method = "denton-cholette", aggFunc = "sum",
+      targetFreq = Some("QS")) -> None)
 
   def assertAllClose(got: Array[Double], want: Array[Double], rtol: Double, what: String): Unit = {
     assert(got.length == want.length, s"$what: length ${got.length} != ${want.length}")

@@ -206,6 +206,53 @@ class KernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("sparse C products are bit-identical to a naive triple loop") {
+    val n = 48
+    val rnd = new scala.util.Random(20261019)
+    def blockC(nl: Int)(fill: (Int, Int) => Seq[(Int, Double)]): DenseMatrix[Double] = {
+      val c = DenseMatrix.zeros[Double](nl, n)
+      for (r <- 0 until nl; (j, v) <- fill(r, 4)) c(r, j) = v
+      c
+    }
+    val fills: Seq[(String, (Int, Int) => Seq[(Int, Double)])] = Seq(
+      "sum" -> ((r, f) => (0 until f).map(j => (r * f + j, 1.0))),
+      "mean" -> ((r, f) => (0 until f).map(j => (r * f + j, 1.0 / f))),
+      "first" -> ((r, f) => Seq((r * f, 1.0))),
+      "last" -> ((r, f) => Seq((r * f + f - 1, 1.0))))
+    // the same matrix as a transposed view and as an offset slice
+    def views(c: DenseMatrix[Double]): Seq[(String, DenseMatrix[Double])] = {
+      val big = DenseMatrix.fill(c.rows + 3, c.cols + 2)(rnd.nextGaussian())
+      big(2 until 2 + c.rows, 1 until 1 + c.cols) := c
+      Seq("plain" -> c, "transposed" -> c.t.copy.t,
+        "offset" -> big(2 until 2 + c.rows, 1 until 1 + c.cols))
+    }
+    val bits = (a: Iterable[Double]) => a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    for ((agg, fill) <- fills; dropped <- Seq(false, true)) {
+      val full = blockC(12)(fill)
+      // a dropped row, as DisaggCore drops an incomplete period's row
+      val c0 = if (dropped) DenseMatrix.vertcat(full(0 until 5, ::), full(6 until 12, ::)) else full
+      for ((view, c) <- views(c0); k <- Seq(1, 3)) {
+        val what = s"agg=$agg dropped=$dropped view=$view k=$k"
+        assert(c(0, 0) == c0(0, 0) && c.rows == c0.rows && c.cols == n, what)
+        val m = DenseMatrix.fill(n, k)(rnd.nextGaussian() * 100.0)
+        val v = DenseVector.fill(n)(rnd.nextGaussian() * 100.0)
+        val want = DenseMatrix.tabulate(c.rows, k) { (i, kk) =>
+          var acc = 0.0
+          for (j <- 0 until n) acc += c(i, j) * m(j, kk)
+          acc
+        }
+        val wantVec = DenseVector.tabulate(c.rows) { i =>
+          var acc = 0.0
+          for (j <- 0 until n) acc += c(i, j) * v(j)
+          acc
+        }
+        assert(bits(Kernels.sparseRowProduct(c, m).toArray) == bits(want.toArray), what)
+        assert(bits(Kernels.sparseRowProduct(c, m.t.copy.t).toArray) == bits(want.toArray), s"$what, m transposed")
+        assert(bits(Kernels.sparseRowProductVec(c, v).toArray) == bits(wantVec.toArray), s"$what, vector")
+      }
+    }
+  }
+
   /** Every banded production kernel against its dense oracle, over a seeded
     * sweep of real calendars: frequency ratio 3 (Q->M), 4 (Y->Q) and 12
     * (Y->M), with and without a trailing incomplete low period (whose

@@ -18,8 +18,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  private def countExchanges(p: String): Int =
-    p.linesIterator.count(l => l.contains("Exchange") && !l.contains("ReusedExchange"))
+  private def exchanges(p: String): Seq[String] =
+    p.linesIterator.filter(l => l.contains("Exchange") && !l.contains("ReusedExchange")).toSeq
+
+  private def countExchanges(p: String): Int = exchanges(p).length
 
   // Every O(N²)-capable operator the optimizer could silently fall back to.
   private val forbidden = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
@@ -157,6 +159,29 @@ class PlanInvariantsSpec extends AnyFunSuite {
       assert(!jp.contains("Sort "),
         s"key join must be sort-free over the sorted checkpoint:\n$jp")
     } finally m.free()
+  }
+
+  test("manySeries: one exchange per input at the session's width, never coalesced") {
+    // the kernel stage's width is fixed at the operator (repartition by
+    // series_id), and the cogroup reuses that partitioning instead of
+    // planning a second exchange; collect() runs the dataset's own plan,
+    // so the adaptive plan below is AQE's final one
+    import graft.disagg.Disaggregate
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val (low, high) = Fixtures.keyedFrames(spark, Fixtures.keyedSeries(100))
+    for ((params, h) <- Fixtures.manySeriesCases(high)) {
+      val out = Disaggregate.manySeries(low, h, params = params)
+      assert(out.collect().nonEmpty)
+      val p = out.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+        case other => other.toString
+      }
+      val ex = exchanges(p)
+      assert(ex.length == 2, s"${params.method}: expected one exchange per input:\n$p")
+      assert(ex.forall(l => l.contains("hashpartitioning(series_id#") && l.contains(s", $width)")),
+        s"${params.method}: exchanges not at width $width by series_id:\n$p")
+      assert(!p.contains("coalesced"), s"${params.method}: AQE coalesced the kernel stage:\n$p")
+    }
   }
 
   test("compaction planner: manifest-sized window, single lineitem scan") {

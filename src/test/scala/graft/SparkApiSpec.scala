@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.{Disaggregate, TsFrame}
+import graft.disagg.{DisaggCore, Disaggregate, TsFrame}
 
 /** Drives the DataFrame-level API end-to-end, including the reference's CSV
   * source shape (A1: R-export CSVs with an unnamed index column) read through
@@ -200,6 +200,50 @@ class SparkApiSpec extends AnyFunSuite {
       Disaggregate.series(localDf(Fixtures.salesA), Some(asText)))
     assert(high.getMessage ==
       "No datetime index found on the dataframe passed as argument to high_freq_df.")
+  }
+
+  test("manySeries runs its kernel stage on spark.sql.shuffle.partitions tasks") {
+    // the stage costs kernel CPU per series, not shuffle bytes: 100 series
+    // shuffle a few KB, which AQE alone would coalesce into one task
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (low, high) = Fixtures.keyedFrames(spark, Fixtures.keyedSeries(100))
+    for ((params, h) <- Fixtures.manySeriesCases(high)) {
+      val stages = Fixtures.stageTasksOf(spark)(Disaggregate.manySeries(low, h, params = params)
+        .write.mode("overwrite").format("noop").save())
+      val kernel = stages.filter(_.shuffleReadBytes > 0)
+      assert(kernel.map(_.tasks) == Seq(width), s"${params.method}: stages $stages")
+    }
+  }
+
+  test("manySeries output is bit-identical to DisaggCore.run per series, however its input is split") {
+    val series = Fixtures.keyedSeries(100)
+    val (low, high) = Fixtures.keyedFrames(spark, series)
+    val dir = java.nio.file.Files.createTempDirectory("graft_many_split").toString
+    val bits = (a: Seq[Double]) => a.map(java.lang.Double.doubleToRawLongBits)
+    for (files <- Seq(1, 7)) {
+      def written(name: String, df: DataFrame): DataFrame = {
+        val path = s"$dir/$name$files"
+        df.repartition(files).write.parquet(path)
+        val parts = new java.io.File(path).list().count(_.endsWith(".parquet"))
+        assert(parts == files, s"$name written as $parts files")
+        spark.read.parquet(path)
+      }
+      val lowIn = written("low", low)
+      val highIn = written("high", high)
+      for ((p, h) <- Fixtures.manySeriesCases(highIn)) {
+        val got = Disaggregate.manySeries(lowIn, h, params = p).collect().groupBy(_.getLong(0))
+        assert(got.keySet == series.map(_._1).toSet, s"${p.method} over $files files")
+        series.foreach { case (id, l, hf) =>
+          val want = DisaggCore.run(l, h.map(_ => hf), p.targetFreq, None, p.aggFunc,
+            p.method, p.criterion, p.h, p.optimizerMethod, verbose = false,
+            p.lowFreq, p.highFreq, p.optimizerOptions)
+          val rows = got(id).sortBy(_.getAs[java.time.LocalDateTime](1))
+          val what = s"${p.method} over $files files, series $id"
+          assert(rows.map(_.getAs[java.time.LocalDateTime](1).toLocalDate).toSeq == want.ts, what)
+          assert(bits(rows.map(_.getDouble(2)).toSeq) == bits(want.values.toSeq), what)
+        }
+      }
+    }
   }
 
   // Stops the suite's session, so it must stay the last test here.
