@@ -2,6 +2,8 @@ package graft.disagg
 
 import java.time.LocalDate
 
+import scala.collection.immutable.ArraySeq
+
 import breeze.linalg.{DenseMatrix, DenseVector}
 
 import graft.time.{Calendar, FreqClass, Frequency}
@@ -61,17 +63,47 @@ object DisaggCore {
   def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
   /** Full outer equi-join of the two frames on ts (pd.merge how="outer",
-    * ts_disagg.py:298); unmatched cells become NaN.
+    * ts_disagg.py:298); unmatched cells become NaN. A merge over the two
+    * sorted `ts` runs (the TsFrame contract, checked here): a date repeated
+    * on one side takes that side's LAST row, as a date -> row map would.
     */
   def outerJoin(low: TsFrame, high: TsFrame): TsFrame = {
-    val allTs = (low.ts ++ high.ts).distinct.sorted
-    val lowPos = low.ts.zipWithIndex.toMap
-    val highPos = high.ts.zipWithIndex.toMap
-    def expand(frame: TsFrame, pos: Map[LocalDate, Int]): IndexedSeq[Array[Double]] =
-      frame.data.map { colArr =>
-        allTs.map(t => pos.get(t).map(colArr).getOrElse(Double.NaN)).toArray
+    val lt = low.ts
+    val ht = high.ts
+    val nLow = lt.length
+    val nHigh = ht.length
+    val ts = new Array[LocalDate](nLow + nHigh)
+    val lowRow = new Array[Int](nLow + nHigh)
+    val highRow = new Array[Int](nLow + nHigh)
+    var a = 0
+    var b = 0
+    var m = 0
+    while (a < nLow || b < nHigh) {
+      val d = if (b == nHigh || (a < nLow && lt(a).compareTo(ht(b)) <= 0)) lt(a) else ht(b)
+      if (m > 0 && !d.isAfter(ts(m - 1))) fail("TsFrame rows must be sorted by ts")
+      var la = -1
+      while (a < nLow && lt(a) == d) { la = a; a += 1 }
+      var hb = -1
+      while (b < nHigh && ht(b) == d) { hb = b; b += 1 }
+      ts(m) = d; lowRow(m) = la; highRow(m) = hb
+      m += 1
+    }
+    val nCols = low.columns.length + high.columns.length
+    val columns = new Array[String](nCols)
+    val data = new Array[Array[Double]](nCols)
+    def expand(frame: TsFrame, row: Array[Int], first: Int): Unit =
+      frame.columns.indices.foreach { f =>
+        val src = frame.data(f)
+        val out = new Array[Double](m)
+        var i = 0
+        while (i < m) { val r = row(i); out(i) = if (r < 0) Double.NaN else src(r); i += 1 }
+        columns(first + f) = frame.columns(f)
+        data(first + f) = out
       }
-    TsFrame(allTs, low.columns ++ high.columns, expand(low, lowPos) ++ expand(high, highPos))
+    expand(low, lowRow, 0)
+    expand(high, highRow, low.columns.length)
+    TsFrame(ArraySeq.unsafeWrapArray(java.util.Arrays.copyOf(ts, m)),
+      ArraySeq.unsafeWrapArray(columns), ArraySeq.unsafeWrapArray(data))
   }
 
   /** prepare_input_dataframes (ts_disagg.py:213-299). `lowFreqHint` /
@@ -100,54 +132,59 @@ object DisaggCore {
       }
     }
 
-    // Frequency resolution happens on alias STRINGS first and is only
-    // validated against the supported Y/Q/M family afterwards, mirroring the
-    // reference's ordering (ts_disagg.py:246-270) so the error-path messages
-    // fire in the same sequence.
-    // Inferable-but-unsupported spacings (daily, weekly) get a pandas-style
-    // name so parseValidated raises the reference's NotImplementedError
-    // analogue ("Only annual, quarterly and monthly frequencies are
-    // supported, found W-MON") instead of the missing-index message
-    // (validate_freqs, time_conversion.py:66-71).
-    def inferName(ts: IndexedSeq[LocalDate]): Option[String] =
-      Frequency.infer(ts).map(_.name).orElse {
-        if (ts.length < 3) None
-        else {
-          val diffs = ts.sliding(2).map { case Seq(a, b) =>
-            java.time.temporal.ChronoUnit.DAYS.between(a, b)
-          }.toSeq
-          if (diffs.forall(_ == 1L)) Some("D")
-          else if (diffs.forall(_ == 7L))
-            Some("W-" + ts.head.getDayOfWeek
-              .getDisplayName(java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
-              .toUpperCase(java.util.Locale.ENGLISH))
-          else None
-        }
+    // Frequency resolution mirrors the reference's ordering
+    // (ts_disagg.py:246-270): names are resolved first and only validated
+    // against the supported Y/Q/M family afterwards, so the error-path
+    // messages fire in the same sequence. A resolved frequency is parsed
+    // when it is in that family, else it is the name validate_freqs
+    // reports. Inferable-but-unsupported spacings (daily, weekly) get a
+    // pandas-style name so validation raises the reference's
+    // NotImplementedError analogue ("Only annual, quarterly and monthly
+    // frequencies are supported, found W-MON") instead of the missing-index
+    // message (validate_freqs, time_conversion.py:66-71).
+    type Resolved = Either[String, Frequency]
+    def named(s: String): Resolved = Frequency.parse(s).toRight(s)
+    def validated(f: Resolved): Frequency = f.fold(Frequency.parseValidated, identity)
+    def unsupportedSpacing(ts: IndexedSeq[LocalDate]): Option[String] =
+      if (ts.length < 3) None
+      else {
+        val diffs = ts.sliding(2).map { case Seq(a, b) =>
+          java.time.temporal.ChronoUnit.DAYS.between(a, b)
+        }.toSeq
+        if (diffs.forall(_ == 1L)) Some("D")
+        else if (diffs.forall(_ == 7L))
+          Some("W-" + ts.head.getDayOfWeek
+            .getDisplayName(java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
+            .toUpperCase(java.util.Locale.ENGLISH))
+        else None
       }
+    def inferred(ts: IndexedSeq[LocalDate]): Option[Resolved] =
+      Frequency.infer(ts).map(Right(_)).orElse(unsupportedSpacing(ts).map(Left(_)))
 
-    val lowFreqStr = lowFreqHint.orElse(inferName(low.ts)).getOrElse(fail(
+    val lowResolved = lowFreqHint.map(named).orElse(inferred(low.ts)).getOrElse(fail(
       "Low frequency dataframe does not have a valid time index with frequency information"))
 
-    val highFreqStr: String = (high, targetFreq) match {
-      case (None, None) => Frequency.parseValidated(lowFreqStr).stepDown.name
-      case (None, Some(t)) => t
+    val highResolved: Resolved = (high, targetFreq) match {
+      case (None, None) => Right(validated(lowResolved).stepDown)
+      case (None, Some(t)) => named(t)
       case (Some(h), Some(t)) =>
-        val inferred = highFreqHint.orElse(inferName(h.ts))
-        val matches = (Frequency.parse(t), inferred.flatMap(Frequency.parse)) match {
-          case (Some(a), Some(b)) => a == b
-          case _                  => inferred.contains(t)
+        val target = named(t)
+        val matches = (target, highFreqHint.map(named).orElse(inferred(h.ts))) match {
+          case (Right(a), Some(Right(b))) => a == b
+          case (_, Some(Left(name)))      => name == t
+          case _                          => false
         }
         if (!matches)
           fail("User provided target_freq does not match frequency information found on indicator data high_freq_df.")
-        t
+        target
       case (Some(h), None) =>
-        highFreqHint.orElse(inferName(h.ts)).getOrElse(fail(
+        highFreqHint.map(named).orElse(inferred(h.ts)).getOrElse(fail(
           "Indicator data high_freq_df does not have a valid time index with frequency information"))
     }
 
     // validate_freqs (time_conversion.py:66-71)
-    val lowFreq = Frequency.parseValidated(lowFreqStr)
-    val highFreq = Frequency.parseValidated(highFreqStr)
+    val lowFreq = validated(lowResolved)
+    val highFreq = validated(highResolved)
     val factor = lowFreq.factorTo(highFreq).getOrElse(fail(
       s"Unsupported frequency conversion ${lowFreq.cls.longName} -> ${highFreq.cls.longName}; " +
         "only yearly->quarterly, yearly->monthly and quarterly->monthly are supported."))
@@ -183,38 +220,72 @@ object DisaggCore {
       factor: Int,
       aggFunc: String): DenseMatrix[Double] = {
     val useYear = lowFreq.cls == FreqClass.Yearly
-    def key(d: LocalDate): (Int, Int) =
-      if (useYear) (d.getYear, 0) else (d.getYear, (d.getMonthValue - 1) / 3)
+    // calendar period as one Long: year, or year * 4 + quarter
+    def keys(ts: IndexedSeq[LocalDate]): Array[Long] = {
+      val out = new Array[Long](ts.length)
+      var i = 0
+      while (i < out.length) {
+        val d = ts(i)
+        out(i) = if (useYear) d.getYear.toLong else d.getYear * 4L + (d.getMonthValue - 1) / 3
+        i += 1
+      }
+      out
+    }
+    val lowKey = keys(lowTs)
+    val highKey = keys(highTs)
+    val lowOrder = stableOrder(lowKey)
+    val highOrder = stableOrder(highKey)
 
     val nLow = lowTs.length
-    val nHigh = highTs.length
-    // last low row wins on duplicate period keys, like the reference's dict
-    // comprehension (ts_disagg.py:64-66)
-    val periodToRow = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Int]
-    lowTs.zipWithIndex.foreach { case (d, i) => periodToRow(key(d)) = i }
-
-    val groups = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Int]]
-    highTs.zipWithIndex.foreach { case (d, j) =>
-      groups.getOrElseUpdate(key(d), scala.collection.mutable.ArrayBuffer.empty[Int]) += j
+    val cd = new Array[Double](nLow * highTs.length) // column-major
+    lazy val fill = aggFunc match {
+      case "sum" | "first" | "last" => 1.0
+      case "mean"                   => 1.0 / factor
+      case _                        => fail("Invalid method")
     }
-
-    val c = DenseMatrix.zeros[Double](nLow, nHigh)
-    groups.foreach { case (k, idx) =>
-      periodToRow.get(k).foreach { row =>
-        var fill = aggFunc match {
-          case "sum" | "first" | "last" => 1.0
-          case "mean"                   => 1.0 / factor
-          case _                        => fail("Invalid method")
-        }
-        if (idx.length != factor) fill = 0.0
-        aggFunc match {
-          case "first" => c(row, idx.head) = fill
-          case "last"  => c(row, idx.last) = fill
-          case _       => idx.foreach(j => c(row, j) = fill)
+    // walk the high groups (runs of one key, members in time order) and the
+    // low rows in key order together
+    var a = 0
+    var g = 0
+    while (g < highOrder.length) {
+      val k = highKey(highOrder(g))
+      var e = g
+      while (e < highOrder.length && highKey(highOrder(e)) == k) e += 1
+      while (a < lowOrder.length && lowKey(lowOrder(a)) < k) a += 1
+      // last low row wins on duplicate period keys, like the reference's
+      // dict comprehension (ts_disagg.py:64-66)
+      var row = -1
+      while (a < lowOrder.length && lowKey(lowOrder(a)) == k) { row = lowOrder(a); a += 1 }
+      if (row >= 0) {
+        val v = fill // an unknown aggFunc fails on the first matched group
+        // groups with a member count != factor keep fill 0.0
+        if (e - g == factor) aggFunc match {
+          case "first" => cd(highOrder(g) * nLow + row) = v
+          case "last"  => cd(highOrder(e - 1) * nLow + row) = v
+          case _       => var j = g; while (j < e) { cd(highOrder(j) * nLow + row) = v; j += 1 }
         }
       }
+      g = e
     }
-    c
+    new DenseMatrix(nLow, highTs.length, cd)
+  }
+
+  /** Indices of `keys` in ascending key order, ties in index order. An
+    * insertion sort: linear on the sorted keys of sorted dates.
+    */
+  private def stableOrder(keys: Array[Long]): Array[Int] = {
+    val order = new Array[Int](keys.length)
+    var i = 0
+    while (i < order.length) { order(i) = i; i += 1 }
+    i = 1
+    while (i < order.length) {
+      val v = order(i)
+      var j = i - 1
+      while (j >= 0 && keys(order(j)) > keys(v)) { order(j + 1) = order(j); j -= 1 }
+      order(j + 1) = v
+      i += 1
+    }
+    order
   }
 
   /** disaggregate_series (ts_disagg.py:302-472) minus the DataFrame I/O. */
@@ -248,9 +319,22 @@ object DisaggCore {
     import prep.{merged, factor}
 
     val c0 = buildConversionMatrix(prep.low.ts, prep.lowFreq, prep.high.ts, factor, aggFunc)
-    val dropMask: Array[Boolean] =
-      Array.tabulate(c0.rows)(i => (0 until c0.cols).forall(j => c0(i, j) == 0.0))
-    val dropped = prep.low.ts.zipWithIndex.collect { case (d, i) if dropMask(i) => d }
+    val nLow = c0.rows
+    val nHigh = c0.cols
+    val cd = c0.data // column-major, offset 0
+    val rowUsed = new Array[Boolean](nLow)
+    var j = 0
+    while (j < nHigh) {
+      var r = 0
+      while (r < nLow) { if (cd(j * nLow + r) != 0.0) rowUsed(r) = true; r += 1 }
+      j += 1
+    }
+    val keepAll = new Array[Int](nLow)
+    var nKept = 0
+    var r = 0
+    while (r < nLow) { if (rowUsed(r)) { keepAll(nKept) = r; nKept += 1 }; r += 1 }
+    val keep = java.util.Arrays.copyOf(keepAll, nKept)
+    val dropped = (0 until nLow).filterNot(rowUsed).map(prep.low.ts)
     if (dropped.nonEmpty)
       System.err.println(
         s"Insufficent high-frequency data to decompose the following dates: ${dropped.mkString(", ")}")
@@ -261,11 +345,16 @@ object DisaggCore {
     val yFull = mergedTarget.filterNot(_.isNaN)
     if (yFull.length != prep.low.nRows)
       fail("low-frequency observations did not align onto the high-frequency grid")
-    val keep = (0 until yFull.length).filterNot(dropMask)
-    val y = DenseVector(keep.map(yFull).toArray)
+    val y = new DenseVector(keep.map(yFull(_)))
     val c = if (dropped.isEmpty) c0 else {
-      val rows = keep
-      DenseMatrix.tabulate(rows.length, c0.cols)((i, j) => c0(rows(i), j))
+      val kept = new Array[Double](keep.length * nHigh)
+      j = 0
+      while (j < nHigh) {
+        var i = 0
+        while (i < keep.length) { kept(j * keep.length + i) = cd(j * nLow + keep(i)); i += 1 }
+        j += 1
+      }
+      new DenseMatrix(keep.length, nHigh, kept)
     }
 
     // X: every merged column except the target (ts_disagg.py:408)
@@ -275,7 +364,9 @@ object DisaggCore {
     if (n != prep.high.nRows)
       fail("low-frequency timestamps do not align onto the high-frequency grid; " +
         "indicator rows and merged rows differ")
-    val x = DenseMatrix.tabulate(n, k)((i, j) => merged.data(xCols(j))(i))
+    val xData = new Array[Double](n * k)
+    xCols.indices.foreach(i => System.arraycopy(merged.data(xCols(i)), 0, xData, i * n, n))
+    val x = new DenseMatrix(n, k, xData)
     val nl = y.length
 
     var optim: Option[Optimizer.Result] = None

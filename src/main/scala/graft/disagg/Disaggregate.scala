@@ -2,7 +2,9 @@ package graft.disagg
 
 import java.time.{LocalDate, LocalDateTime}
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
@@ -140,6 +142,21 @@ object Disaggregate {
 
   // ---------------------------------------------------------------- manySeries
 
+  /** A group's rows that carry a timestamp, stably sorted by it. */
+  private def sortedByTs[T <: AnyRef: ClassTag](rows: Iterator[T])(ts: T => LocalDateTime): Array[T] = {
+    val out = rows.filter(ts(_) != null).toArray
+    java.util.Arrays.sort(out, (a: T, b: T) => ts(a).compareTo(ts(b)))
+    out
+  }
+
+  /** The calendar days of sorted rows, as a TsFrame's `ts`. */
+  private def dates[T](rows: Array[T])(ts: T => LocalDateTime): IndexedSeq[LocalDate] = {
+    val out = new Array[LocalDate](rows.length)
+    var i = 0
+    while (i < rows.length) { out(i) = ts(rows(i)).toLocalDate; i += 1 }
+    ArraySeq.unsafeWrapArray(out)
+  }
+
   /** Disaggregate many independent series in one distributed pass.
     *
     * `low`: (seriesCol, tsCol, valueCol); `high` (optional): (seriesCol,
@@ -151,11 +168,13 @@ object Disaggregate {
     * The kernel stage runs `spark.sql.shuffle.partitions` tasks, fixed here
     * by `repartition(n, series_id)` on each side: AQE never coalesces that
     * exchange. Left to AQE, the stage would be sized by its shuffle bytes
-    * (~130 B per series), while its cost is kernel CPU per series (~30 µs
-    * for denton-cholette, milliseconds for GLS), so 20 000 series would run
-    * as 2 tasks and 100 GLS series as 1. Grouping on the column (not a key
-    * lambda) lets the cogroup reuse that hash partitioning, so there is
-    * still one exchange per side.
+    * (~130 B per series), while its cost is kernel CPU per series
+    * (milliseconds for GLS; for a 5-9-year denton-cholette series, 9 µs of
+    * `DisaggCore.run` on one core of a 4-core host, down from 22 µs before
+    * its steps became merge joins and primitive array fills), so 20 000
+    * series would run as 2 tasks and 100 GLS series as 1. Grouping on the
+    * column (not a key lambda) lets the cogroup reuse that hash
+    * partitioning, so there is still one exchange per side.
     *
     * Series whose kernel fails (bad calendar, singular
     * system) are skipped — at pipeline scale one poisoned series must not
@@ -213,28 +232,22 @@ object Disaggregate {
         // skipped — at pipeline scale one poisoned series must not kill
         // the job
         try {
-          implicit val ldtOrd: Ordering[LocalDateTime] = byDateTime
-          val lowRows = lowIt.toArray.filter(_.ts != null).sortBy(_.ts)
+          val lowRows = sortedByTs(lowIt)(_.ts)
           if (lowRows.isEmpty) Iterator.empty
           else {
-            val lowFrame = TsFrame(
-              lowRows.map(r => toLocalDate(r.ts)).toIndexedSeq,
-              IndexedSeq(valueCol),
+            val lowFrame = TsFrame(dates(lowRows)(_.ts), IndexedSeq(valueCol),
               IndexedSeq(lowRows.map(_.value)))
             val highFrame: Option[TsFrame] = if (!hasHigh) None else {
-              val hr = highIt.toArray.filter(_.ts != null).sortBy(_.ts)
+              val hr = sortedByTs(highIt)(_.ts)
               if (hr.isEmpty) None
-              else Some(TsFrame(
-                hr.map(r => toLocalDate(r.ts)).toIndexedSeq,
-                indNames,
+              else Some(TsFrame(dates(hr)(_.ts), indNames,
                 indNames.indices.map(j => hr.map(_.values(j)))))
             }
             val res = DisaggCore.run(lowFrame, highFrame, p.targetFreq, None, p.aggFunc,
               p.method, p.criterion, p.h, p.optimizerMethod, verbose = false,
               p.lowFreq, p.highFreq, p.optimizerOptions)
-            res.ts.zip(res.values).iterator.map { case (d, v) =>
-              KeyedOut(key, d.atStartOfDay(), v)
-            }
+            Iterator.tabulate(res.values.length)(i =>
+              KeyedOut(key, res.ts(i).atStartOfDay(), res.values(i)))
           }
         } catch {
           // counted, not silent: accumulators from retried/speculative

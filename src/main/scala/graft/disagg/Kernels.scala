@@ -42,16 +42,20 @@ object Kernels {
       first: Int, w: Int): Array[Array[Double]] = {
     val s = new Array[Double](n)
     if (proportional) {
-      val m = breeze.stats.mean(x)
+      val xd = x.data
+      // breeze.stats.mean's running mean, step for step
+      var m = 0.0
       var j = 0
-      while (j < n) { s(j) = 1.0 / x(j) / m; j += 1 }
+      while (j < n) { m += (xd(x.offset + j * x.stride) - m) / (j + 1).toDouble; j += 1 }
+      j = 0
+      while (j < n) { s(j) = 1.0 / xd(x.offset + j * x.stride) / m; j += 1 }
     } else java.util.Arrays.fill(s, 1.0)
     val coef = new Array[Double](h + 1)
     coef(0) = 1.0
     var k = 1
     while (k <= h) { coef(k) = -coef(k - 1) * (h - k + 1).toDouble / k; k += 1 }
     // only the lower triangle (k1 <= k2 => row i-k1 >= col i-k2) is stored
-    val band = Array.ofDim[Double](w + 1, n)
+    val band = Array.fill(w + 1)(new Array[Double](n))
     var i = first
     while (i < n) {
       val kMax = math.min(h, i)
@@ -82,41 +86,60 @@ object Kernels {
   private def dentonCholetteBand(
       n: Int, nl: Int, c: DenseMatrix[Double], x: DenseVector[Double],
       h: Int, proportional: Boolean): Array[Array[Double]] = {
+    // C's nonzeros row by row, columns ascending: row r holds the columns
+    // cols(rowStart(r) until rowStart(r + 1)), read from C's raw
+    // column-major buffer in one zero scan
+    val cd = plain(c).data
+    val rowStart = new Array[Int](nl + 1)
+    var j = 0
+    while (j < n) {
+      var r = 0
+      while (r < nl) { if (cd(j * nl + r) != 0.0) rowStart(r + 1) += 1; r += 1 }
+      j += 1
+    }
+    var r = 0
+    while (r < nl) { rowStart(r + 1) += rowStart(r); r += 1 }
+    val cols = new Array[Int](rowStart(nl))
+    val next = java.util.Arrays.copyOf(rowStart, nl)
+    j = 0
+    while (j < n) {
+      r = 0
+      while (r < nl) {
+        if (cd(j * nl + r) != 0.0) { cols(next(r)) = j; next(r) += 1 }
+        r += 1
+      }
+      j += 1
+    }
     // bandwidth: D'D contributes h; C'C the widest row support
     var wC = 0
-    var r = 0
+    r = 0
     while (r < nl) {
-      var lo = -1; var hi = -1
-      var j = 0
-      while (j < n) {
-        if (c(r, j) != 0.0) { if (lo < 0) lo = j; hi = j }
-        j += 1
-      }
-      if (lo >= 0 && hi - lo > wC) wC = hi - lo
+      if (rowStart(r + 1) > rowStart(r))
+        wC = math.max(wC, cols(rowStart(r + 1) - 1) - cols(rowStart(r)))
       r += 1
     }
     val w = math.max(h, wC)
     val band = stencilGram(n, x, h, proportional, h, w)
     // scale-balancing rho (cancels in W; conditions M)
     var diagSum = 0.0
-    var j = 0
+    j = 0
     while (j < n) { diagSum += band(0)(j); j += 1 }
     val rho = if (diagSum > 0.0) diagSum / n else 1.0
-    // + rho C'C (block-diagonal band fill, lower triangle: j1 >= j2)
+    // + rho C'C (block-diagonal band fill, lower triangle: j1 >= j2); a
+    // row's nonzeros lie within w of each other
     r = 0
     while (r < nl) {
-      var j1 = 0
-      while (j1 < n) {
-        val v1 = c(r, j1)
-        if (v1 != 0.0) {
-          var j2 = math.max(0, j1 - w)
-          while (j2 <= j1) {
-            val v2 = c(r, j2)
-            if (v2 != 0.0) band(j1 - j2)(j2) += rho * v1 * v2
-            j2 += 1
-          }
+      var a = rowStart(r)
+      while (a < rowStart(r + 1)) {
+        val j1 = cols(a)
+        val v1 = cd(j1 * nl + r)
+        var b = rowStart(r)
+        while (b <= a) {
+          val j2 = cols(b)
+          band(j1 - j2)(j2) += rho * v1 * cd(j2 * nl + r)
+          b += 1
         }
-        j1 += 1
+        a += 1
       }
       r += 1
     }
@@ -237,43 +260,58 @@ object Kernels {
     require(cm.cols == n, s"conversion matrix cols ${cm.cols} != n $n")
     val cd = cm.data // column-major nl x n: column j (= C(:, j)) contiguous
     val wArr = cd.clone()
-    // banded Cholesky factor, column-oriented: l(d)(j) = L(j+d, j)
-    val l = Array.ofDim[Double](w + 1, n)
+    // banded Cholesky factor, column-oriented and flat: l(d * n + j) = L(j+d, j)
+    val l = new Array[Double]((w + 1) * n)
     var j = 0
     while (j < n) {
       var s = band(0)(j)
       var k = math.max(0, j - w)
-      while (k < j) { val v = l(j - k)(k); s -= v * v; k += 1 }
+      while (k < j) { val v = l((j - k) * n + k); s -= v * v; k += 1 }
       val djj = math.sqrt(s)
-      l(0)(j) = djj
+      l(j) = djj
       var d = 1
       while (d <= w && j + d < n) {
         var s2 = band(d)(j)
         var k2 = math.max(0, j + d - w)
-        while (k2 < j) { s2 -= l(j + d - k2)(k2) * l(j - k2)(k2); k2 += 1 }
-        l(d)(j) = s2 / djj
+        while (k2 < j) { s2 -= l((j + d - k2) * n + k2) * l((j - k2) * n + k2); k2 += 1 }
+        l(d * n + j) = s2 / djj
         d += 1
       }
       j += 1
     }
     val invDiag = new Array[Double](n)
     var ii = 0
-    while (ii < n) { invDiag(ii) = 1.0 / l(0)(ii); ii += 1 }
+    while (ii < n) { invDiag(ii) = 1.0 / l(ii); ii += 1 }
+    // Column k of C' is +0.0 above its first other entry, and forward
+    // substitution keeps such a prefix +0.0 (0 - f*0, then times a positive
+    // 1/L(i, i)). So row i of the forward pass only touches the columns
+    // k < live(i), the last column whose prefix has ended, plus one.
+    val live = new Array[Int](n)
+    var k0 = 0
+    while (k0 < nl) {
+      var i0 = 0
+      while (i0 < n && java.lang.Double.doubleToRawLongBits(cd(i0 * nl + k0)) == 0L) i0 += 1
+      if (i0 < n) live(i0) = k0 + 1
+      k0 += 1
+    }
+    ii = 1
+    while (ii < n) { live(ii) = math.max(live(ii), live(ii - 1)); ii += 1 }
     // L Y = C' (forward), then L' X = Y (backward)
     var i = 0
     while (i < n) {
       val base = i * nl
+      val kEnd = live(i)
       var d = 1
       while (d <= w && i - d >= 0) {
-        val f = l(d)(i - d)
+        val f = l(d * n + i - d)
         val src = (i - d) * nl
         var k = 0
-        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
+        while (k < kEnd) { wArr(base + k) -= f * wArr(src + k); k += 1 }
         d += 1
       }
       val r = invDiag(i)
       var k = 0
-      while (k < nl) { wArr(base + k) *= r; k += 1 }
+      while (k < kEnd) { wArr(base + k) *= r; k += 1 }
       i += 1
     }
     i = n - 1
@@ -281,7 +319,7 @@ object Kernels {
       val base = i * nl
       var d = 1
       while (d <= w && i + d < n) {
-        val f = l(d)(i)
+        val f = l(d * n + i)
         val src = (i + d) * nl
         var k = 0
         while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
@@ -298,8 +336,7 @@ object Kernels {
     // still arrive in ascending order. A conversion-matrix column has at
     // most one nonzero (each high-freq period maps to one low period), so
     // this is O(n nl).
-    val out = DenseMatrix.zeros[Double](nl, nl)
-    val od = out.data
+    val od = new Array[Double](nl * nl)
     j = 0
     while (j < n) {
       val base = j * nl
@@ -314,7 +351,7 @@ object Kernels {
       }
       j += 1
     }
-    (new DenseMatrix(nl, n, wArr), out)
+    (new DenseMatrix(nl, n, wArr), new DenseMatrix(nl, nl, od))
   }
 
   /** `c * m` exploiting C's row sparsity: each conversion-matrix row has

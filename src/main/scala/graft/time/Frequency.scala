@@ -2,6 +2,8 @@ package graft.time
 
 import java.time.{LocalDate, YearMonth}
 
+import scala.collection.immutable.ArraySeq
+
 /** Frequency class: yearly / quarterly / monthly (the only classes the
   * reference supports — /root/reference/tsdisagg/time_conversion.py:17-33).
   */
@@ -105,26 +107,36 @@ final case class Frequency(
     case FreqClass.Yearly    => month == anchorOrDefault
   }
 
-  /** Infinite stream of on-offset dates, starting at the first one >= start
-    * (the `pd.date_range` roll-forward rule). Single source of truth for all
-    * spine generation.
+  /** The month of the first on-offset date >= `start` (the `pd.date_range`
+    * roll-forward rule). Single source of truth for all spine generation.
     */
-  def onOffsetFrom(start: LocalDate): Iterator[LocalDate] = {
+  private def firstOnOffsetMonth(start: LocalDate): YearMonth = {
     var ym = YearMonth.of(start.getYear, start.getMonthValue)
     while (!anchorMonthOk(ym.getMonthValue)) ym = ym.plusMonths(1)
-    var d = dateInMonth(ym)
-    while (d.isBefore(start)) { ym = ym.plusMonths(stepMonths); d = dateInMonth(ym) }
-    val first = d
-    val firstYm = ym
-    Iterator.iterate((first, firstYm)) { case (_, m) =>
-      val nm = m.plusMonths(stepMonths)
-      (dateInMonth(nm), nm)
-    }.map(_._1)
+    while (dateInMonth(ym).isBefore(start)) ym = ym.plusMonths(stepMonths)
+    ym
   }
 
+  /** Infinite stream of on-offset dates, starting at the first one >= start. */
+  def onOffsetFrom(start: LocalDate): Iterator[LocalDate] =
+    Iterator.iterate(firstOnOffsetMonth(start))(_.plusMonths(stepMonths)).map(dateInMonth)
+
   /** All on-offset dates in [start, end] inclusive. */
-  def dateRange(start: LocalDate, end: LocalDate): IndexedSeq[LocalDate] =
-    onOffsetFrom(start).takeWhile(!_.isAfter(end)).toIndexedSeq
+  def dateRange(start: LocalDate, end: LocalDate): IndexedSeq[LocalDate] = {
+    var ym = firstOnOffsetMonth(start)
+    // every date lies in its own month, so the months up to end's bound the count
+    val months = (end.getYear - ym.getYear) * 12 + (end.getMonthValue - ym.getMonthValue)
+    val out = new Array[LocalDate](math.max(0, months / stepMonths + 1))
+    var m = 0
+    var d = dateInMonth(ym)
+    while (!d.isAfter(end)) {
+      out(m) = d
+      m += 1
+      ym = ym.plusMonths(stepMonths)
+      d = dateInMonth(ym)
+    }
+    ArraySeq.unsafeWrapArray(if (m == out.length) out else java.util.Arrays.copyOf(out, m))
+  }
 
   def nDatesFrom(start: LocalDate, n: Int): IndexedSeq[LocalDate] =
     onOffsetFrom(start).take(n).toIndexedSeq
@@ -135,23 +147,34 @@ object Frequency {
     IndexedSeq("JAN", "FEB", "MAR", "APR", "MAY", "JUN",
                "JUL", "AUG", "SEP", "OCT", "NOV", "DEC")
 
-  private val Pattern = "^(B?)(Y|Q|M)(E|S)(?:-([A-Z]{3}))?$".r
-
   /** Parse a pandas alias from the reference's valid token sets
-    * (time_conversion.py:17-24). Monthly aliases take no anchor.
+    * (time_conversion.py:17-24): the whole string must match
+    * `B?(Y|Q|M)(E|S)(-MMM)?` with MMM one of [[MONTHS]], and monthly aliases
+    * take no anchor. A character scan, so the per-series target alias costs
+    * no regex match.
     */
-  def parse(s: String): Option[Frequency] = s match {
-    case Pattern(b, c, es, anchorStr) =>
-      val cls = c match {
-        case "Y" => FreqClass.Yearly
-        case "Q" => FreqClass.Quarterly
-        case "M" => FreqClass.Monthly
-      }
-      val anchor = Option(anchorStr).map(a => MONTHS.indexOf(a) + 1)
-      if (anchor.contains(0)) None // unknown month token
-      else if (cls == FreqClass.Monthly && anchor.isDefined) None
-      else Some(Frequency(cls, es == "S", b == "B", anchor))
-    case _ => None
+  def parse(s: String): Option[Frequency] = {
+    val business = s.startsWith("B")
+    val i = if (business) 1 else 0
+    if (s.length < i + 2) return None
+    val cls = s.charAt(i) match {
+      case 'Y' => FreqClass.Yearly
+      case 'Q' => FreqClass.Quarterly
+      case 'M' => FreqClass.Monthly
+      case _   => return None
+    }
+    val isStart = s.charAt(i + 1) match {
+      case 'S' => true
+      case 'E' => false
+      case _   => return None
+    }
+    val rest = s.length - (i + 2)
+    if (rest == 0) Some(Frequency(cls, isStart, business, None))
+    else if (rest != 4 || s.charAt(i + 2) != '-' || cls == FreqClass.Monthly) None
+    else {
+      val month = MONTHS.indexOf(s.substring(i + 3))
+      if (month < 0) None else Some(Frequency(cls, isStart, business, Some(month + 1)))
+    }
   }
 
   /** validate_freqs equivalent (time_conversion.py:66-71). */
@@ -170,21 +193,32 @@ object Frequency {
     * Returns None for anything else (including sub-monthly spacings).
     */
   def infer(dates: IndexedSeq[LocalDate]): Option[Frequency] = {
-    if (dates.length < 3) return None
-    val allFirst = dates.forall(_.getDayOfMonth == 1)
-    val allLast = dates.forall(d => d.getDayOfMonth == YearMonth.from(d).lengthOfMonth)
-    // business variants: every date is the first/last WEEKDAY of its month
-    val allFirstBiz = !allFirst &&
+    val n = dates.length
+    if (n < 3) return None
+    var allFirst = true
+    var allLast = true
+    var step = 0
+    var i = 0
+    while (i < n) {
+      val d = dates(i)
+      val day = d.getDayOfMonth
+      if (day != 1) allFirst = false
+      if (day != d.lengthOfMonth) allLast = false
+      if (i > 0) {
+        val p = dates(i - 1)
+        val diff = (d.getYear - p.getYear) * 12 + (d.getMonthValue - p.getMonthValue)
+        if (i == 1) step = diff
+        else if (diff != step) return None
+      }
+      i += 1
+    }
+    // business variants: every date is the first/last WEEKDAY of its month.
+    // A first-of-month run is never a last-weekday run and vice versa.
+    val allFirstBiz = !allFirst && !allLast &&
       dates.forall(d => d == Calendar.rollWeekendForward(d.withDayOfMonth(1)))
-    val allLastBiz = !allLast &&
-      dates.forall(d => d == Calendar.rollWeekendBack(
-        d.withDayOfMonth(YearMonth.from(d).lengthOfMonth)))
+    val allLastBiz = !allFirst && !allLast && !allFirstBiz &&
+      dates.forall(d => d == Calendar.rollWeekendBack(d.withDayOfMonth(d.lengthOfMonth)))
     if (!allFirst && !allLast && !allFirstBiz && !allLastBiz) return None
-    val monthDiffs = dates.sliding(2).map { case Seq(a, b) =>
-      (b.getYear - a.getYear) * 12 + (b.getMonthValue - a.getMonthValue)
-    }.toSeq
-    val step = monthDiffs.head
-    if (!monthDiffs.forall(_ == step)) return None
     val isStart = allFirst || allFirstBiz
     val business = allFirstBiz || allLastBiz
     val m0 = dates.head.getMonthValue

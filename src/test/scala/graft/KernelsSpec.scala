@@ -4,7 +4,7 @@ import breeze.linalg.{DenseMatrix, DenseVector, cholesky, logdet, max}
 import breeze.numerics.abs
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.{AggFunc, DisaggCore, Kernels}
+import graft.disagg.{AggFunc, DisaggCore, Kernels, Optimizer, TsFrame}
 import graft.time.Frequency
 
 /** Kernel unit tests against the reference's inline R-derived goldens
@@ -354,6 +354,85 @@ class KernelsSpec extends AnyFunSuite {
         Array(1e-5, 1e-5), Array(1 - 1e-5, 1e10))
       assert(math.abs(r.x(0) - 0.3) < 1e-5, s"$m rho: ${r.x(0)}")
       assert(math.abs(r.x(1) - 2.0) < 1e-5, s"$m sigma: ${r.x(1)}")
+    }
+  }
+
+  /** `DisaggCore.run`'s public steps, composed in its order the way the
+    * benchmark's traced replay composes them (prepareInputs,
+    * buildConversionMatrix, the all-zero-row drop with NaN-free y and X,
+    * then the denton-cholette apply or the Nelder-Mead ML fit, covProducts,
+    * the GLS beta and the GLS apply). A traced benchmark run is only valid
+    * while this is `run`, bit for bit.
+    */
+  def replaySteps(low: TsFrame, high: Option[TsFrame], method: String,
+      targetFreq: Option[String]): Array[Double] = {
+    val prep = DisaggCore.prepareInputs(low, high, targetFreq, method)
+    val c0 = DisaggCore.buildConversionMatrix(prep.low.ts, prep.lowFreq, prep.high.ts, prep.factor, "sum")
+    val drop = Array.tabulate(c0.rows)(i => (0 until c0.cols).forall(j => c0(i, j) == 0.0))
+    val yFull = prep.merged.data(0).filterNot(_.isNaN)
+    val keep = (0 until yFull.length).filterNot(drop)
+    val c = if (!drop.contains(true)) c0
+      else DenseMatrix.tabulate(keep.length, c0.cols)((i, j) => c0(keep(i), j))
+    val xCols = prep.merged.columns.indices.drop(1)
+    val x = DenseMatrix.tabulate(prep.merged.nRows, xCols.length)((i, j) => prep.merged.data(xCols(j))(i))
+    val y = DenseVector(keep.map(yFull).toArray)
+    val n = x.rows
+    val (p, applyD) = method match {
+      case "denton-cholette" =>
+        val xv = x(::, 0)
+        (xv.copy, (ul: DenseVector[Double]) => Kernels.dentonCholetteApply(n, y.length, c, xv, 1, true, ul))
+      case _ =>
+        val kind = if (method == "chow-lin") Kernels.ChowLinCov else Kernels.LittermanCov
+        val res = Optimizer.minimize("nelder-mead",
+          (params: Array[Double]) => Kernels.negLogLikObjective(params(0), params(1), y, x, c, kind),
+          Array(0.8, 0.8), lower = Array(1e-5, 1e-5), upper = Array(1.0 - 1e-5, 1e300))
+        val prod = Kernels.covProducts(kind, res.x(0), res.x(1), n, c)
+        val beta = Kernels.glsBetaHatFromCsct(prod.csct, y, x, c)
+        (x * beta, (ul: DenseVector[Double]) => prod.cSigma.t * (prod.csct \ ul))
+    }
+    val ul = y - Kernels.sparseRowProductVec(c, p)
+    (p + applyD(ul)).toArray
+  }
+
+  test("DisaggCore.run is its public steps composed, bit for bit") {
+    val bits = (a: Array[Double]) => a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val rnd = new scala.util.Random(20261020)
+    def walk(n: Int, start: Double, drift: Double, vol: Double): Array[Double] =
+      Array.iterate(start * math.exp(drift + vol * rnd.nextGaussian()), n)(
+        v => v * math.exp(drift + vol * rnd.nextGaussian()))
+    // BASELINE.md's shapes: 36 annual values; denton-cholette A->Q n=144,
+    // chow-lin A->Q n=158 k=2, litterman A->M n=474 k=2
+    val years = Fixtures.freqDates("1980-01-01", "YS", 36)
+    def indicatorShape(n: Int, factor: Int, highFreq: String, integrated: Boolean): (TsFrame, TsFrame) = {
+      val ind = walk(n, 100.0, 0.008 * 4 / factor, 0.02)
+      var e = 0.0
+      var u = 0.0
+      val hf = ind.map { v =>
+        e = 0.5 * e + rnd.nextGaussian()
+        u = if (integrated) u + e else e
+        2.5 * v + u
+      }
+      val low = Fixtures.frame(years, "value" -> Array.tabulate(36)(yr => hf.slice(yr * factor, (yr + 1) * factor).sum))
+      val high = Fixtures.frame(Fixtures.freqDates("1980-01-01", highFreq, n),
+        "indicator" -> ind, "constant" -> Array.fill(n)(1.0))
+      (low, high)
+    }
+    val (clLow, clHigh) = indicatorShape(158, 4, "QS", integrated = false)
+    val (ltLow, ltHigh) = indicatorShape(474, 12, "MS", integrated = true)
+    // manySeries-style series: 5-9 years from 1990-2009 to quarterly
+    val many = (0 until 200).map { i =>
+      val nyr = 5 + rnd.nextInt(5)
+      val v = Array.tabulate(nyr)(pos => 100.0 + rnd.nextInt(10000) / 100.0 + pos * 5.0)
+      (s"many[$i]", Fixtures.frame(Fixtures.freqDates(s"${1990 + rnd.nextInt(20)}-01-01", "YS", nyr), "value" -> v),
+        None, "denton-cholette", Some("QS"))
+    }
+    val cases = Seq(
+      ("dc A->Q", Fixtures.frame(years, "value" -> walk(36, 1000.0, 0.03, 0.05)), None, "denton-cholette", Some("QS")),
+      ("chow-lin A->Q", clLow, Some(clHigh), "chow-lin", None),
+      ("litterman A->M", ltLow, Some(ltHigh), "litterman", None)) ++ many
+    for ((name, low, high, method, targetFreq) <- cases) {
+      val want = DisaggCore.run(low, high, targetFreq, aggFunc = "sum", method = method).values
+      assert(bits(replaySteps(low, high, method, targetFreq)) == bits(want), name)
     }
   }
 }

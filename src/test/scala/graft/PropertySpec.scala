@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.disagg.DisaggCore
+import graft.disagg.{AggFunc, DisaggCore, TsFrame}
 import graft.time.{Calendar, FreqClass, Frequency}
 
 /** Property tests mirroring the reference's hypothesis strategies
@@ -167,5 +167,85 @@ class PropertySpec extends AnyFunSuite {
       assert(f.get.name == tok)
       assert(Frequency.parse(f.get.name).contains(f.get))
     }
+  }
+
+  /** The merge join, the primitive C fill, loop-based inference and the
+    * plain-loop companion spine against their map-and-tuple forms
+    * ([[MapSteps]]), exactly: the same dates, and the same raw bits in
+    * every C entry and every merged cell. Inputs are Y->Q, Y->M and Q->M
+    * calendars with start, end and business anchors, then perturbed: gaps,
+    * repeated dates on either side (the last row of a repeat wins the
+    * join), and a short trailing period whose all-zero C row is dropped.
+    */
+  test("alignment steps are bit-identical to their map-and-tuple forms") {
+    val bits = (a: Array[Double]) => a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val pairs = Seq(("Y", "Q"), ("Y", "M"), ("Q", "M"))
+    var dropped, repeated, gapped, business, ends = 0
+    for (seed <- 0 until 400) {
+      val rnd = new scala.util.Random(seed)
+      val (lowBase, highBase) = pairs(seed % 3)
+      val prefix = if (rnd.nextInt(3) == 0) "B" else ""
+      val suffix = if (rnd.nextBoolean()) "S" else "E"
+      val month = months(rnd.nextInt(12))
+      val low = Frequency.parseValidated(s"$prefix$lowBase$suffix-$month")
+      val high = Frequency.parseValidated(
+        prefix + highBase + suffix + (if (highBase == "Q") s"-$month" else ""))
+      val factor = low.factorTo(high).get
+      val start = LocalDate.of(1950 + rnd.nextInt(70), 1 + rnd.nextInt(12), 1 + rnd.nextInt(28))
+      val lowTs0 = low.nDatesFrom(start, 3 + rnd.nextInt(8))
+      val spine = Calendar.companionIndex(lowTs0, low, high)
+      assert(spine == MapSteps.companionIndex(lowTs0, low, high), s"seed $seed: companion spine")
+      for (ts <- Seq(lowTs0, spine))
+        assert(Frequency.infer(ts) == MapSteps.infer(ts), s"seed $seed: infer $ts")
+
+      // perturb: a short trailing period, interior gaps, repeated dates
+      def repeat(ts: IndexedSeq[LocalDate]): IndexedSeq[LocalDate] =
+        if (rnd.nextInt(3) > 0) ts
+        else ts.flatMap(d => if (rnd.nextInt(4) == 0) Seq(d, d) else Seq(d))
+      val trailing = if (rnd.nextBoolean()) spine.dropRight(1 + rnd.nextInt(factor - 1)) else spine
+      val gaps = if (rnd.nextInt(4) == 0) trailing.filter(_ => rnd.nextInt(8) > 0) else trailing
+      val highTs = repeat(gaps)
+      val lowTs = repeat(lowTs0)
+      for (ts <- Seq(lowTs, highTs))
+        assert(Frequency.infer(ts) == MapSteps.infer(ts), s"seed $seed: infer $ts")
+
+      for (agg <- AggFunc.all) {
+        val c = DisaggCore.buildConversionMatrix(lowTs, low, highTs, factor, agg)
+        val want = MapSteps.buildConversionMatrix(lowTs, low, highTs, factor, agg)
+        assert(c.rows == want.rows && c.cols == want.cols, s"seed $seed $agg: shape")
+        assert(bits(c.toArray) == bits(want.toArray), s"seed $seed $agg: C")
+        if (agg == "sum" && (0 until c.rows).exists(i => (0 until c.cols).forall(j => c(i, j) == 0.0)))
+          dropped += 1
+      }
+
+      val lowFrame = TsFrame(lowTs, IndexedSeq("y"), IndexedSeq(Array.fill(lowTs.length)(rnd.nextGaussian())))
+      val k = 1 + rnd.nextInt(2)
+      val highFrame = TsFrame(highTs, (0 until k).map(i => s"x$i"),
+        (0 until k).map(_ => Array.fill(highTs.length)(rnd.nextGaussian())))
+      val merged = DisaggCore.outerJoin(lowFrame, highFrame)
+      val wantMerged = MapSteps.outerJoin(lowFrame, highFrame)
+      assert(merged.ts == wantMerged.ts, s"seed $seed: merged dates")
+      assert(merged.columns == wantMerged.columns, s"seed $seed: merged columns")
+      merged.data.indices.foreach(i =>
+        assert(bits(merged.data(i)) == bits(wantMerged.data(i)), s"seed $seed: merged column $i"))
+
+      if (lowTs.length > lowTs0.length || highTs.length > gaps.length) repeated += 1
+      if (gaps.length < trailing.length) gapped += 1
+      if (prefix == "B") business += 1
+      if (suffix == "E") ends += 1
+    }
+    assert(Seq(dropped, repeated, gapped, business, ends).forall(_ >= 20),
+      s"coverage: dropped=$dropped repeated=$repeated gapped=$gapped business=$business end=$ends")
+  }
+
+  test("alias parsing is the regex grammar's, on valid and invalid tokens") {
+    val rnd = new scala.util.Random(20261020)
+    val alphabet = "BYQMESAJNFDOX-"
+    val valid = for (b <- Seq("", "B"); c <- Seq("Y", "Q", "M"); es <- Seq("E", "S");
+        a <- "" +: months.map("-" + _)) yield b + c + es + a
+    val random = Seq.fill(3000)(Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    val edits = valid.flatMap(v => Seq(v + "-", v.toLowerCase, v + "X", v.drop(1), v + "\n", " " + v))
+    for (tok <- valid ++ random ++ edits ++ Seq("", "B", "YS-", "QS-jan", "MS-JAN", "QE-JANX"))
+      assert(Frequency.parse(tok) == MapSteps.parse(tok), s"token '$tok'")
   }
 }
