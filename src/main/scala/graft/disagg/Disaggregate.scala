@@ -1,10 +1,12 @@
 package graft.disagg
 
 import java.time.{LocalDate, LocalDateTime}
+import java.util.concurrent.{ExecutorService, Executors}
 
 import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
@@ -28,9 +30,12 @@ case class KeyedOut(series_id: Long, ts: LocalDateTime, value: Double)
   * Two execution shapes:
   *  - [[series]]: one series. The frame is tiny (n = O(10^3)), so each input
   *    costs ONE Spark job: its projection is collected as it is and sorted on
-  *    the driver. The Breeze kernel runs on the driver, and the result comes
-  *    back as a local relation, which `collect()` reads without a job. Spark's
-  *    job here is I/O + validation pushdown, not the O(n^3) solve.
+  *    the driver. With an indicator the two jobs overlap, the indicator's on
+  *    a second driver thread: most of a one-task job is fixed set-up (codegen,
+  *    broadcasts, closure cleaning), not the scan. The kernel runs on the
+  *    driver, and the result comes back as a local relation, which
+  *    `collect()` reads without a job. Spark's job here is I/O + validation
+  *    pushdown, not the O(n^3) solve.
   *  - [[manySeries]]: millions of independent series keyed by an id column.
   *    Both inputs are hash-partitioned by the key into a width fixed at the
   *    operator and cogrouped (ONE shuffle each, then embarrassingly parallel
@@ -102,6 +107,14 @@ object Disaggregate {
     TsFrame(ts, valueCols, data)
   }
 
+  /** Daemon threads for [[seriesOutput]]'s indicator collect, one per
+    * concurrent call; a thread idle for a minute exits. */
+  private lazy val collectPool: ExecutorService = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-series-collect")
+    t.setDaemon(true)
+    t
+  }
+
   /** Single-series disaggregation: DataFrame in, DataFrame(ts, <target>) out. */
   def series(
       lowFreqDf: DataFrame,
@@ -122,8 +135,19 @@ object Disaggregate {
       highFreqDf: Option[DataFrame] = None,
       tsCol: String = "ts",
       params: Params = Params()): DisaggOutput = {
-    val low = collectTsFrame(lowFreqDf, tsCol, "low_freq_df")
-    val high = highFreqDf.map(collectTsFrame(_, tsCol, "high_freq_df"))
+    val (low, high) = highFreqDf match {
+      case None => (collectTsFrame(lowFreqDf, tsCol, "low_freq_df"), None)
+      case Some(hdf) =>
+        // the two one-task jobs overlap: high on a pool thread that carries
+        // the caller's job group, scheduler pool and session, low here. The
+        // high collect always ends before this returns or throws, and a
+        // failure of low wins over one of high, as when they ran in turn.
+        val pending = Bridge.withThreadLocalCaptured(hdf.sparkSession, collectPool)(
+          Try(collectTsFrame(hdf, tsCol, "high_freq_df")))
+        val lowTry = Try(collectTsFrame(lowFreqDf, tsCol, "low_freq_df"))
+        val highTry = pending.join()
+        (lowTry.get, Some(highTry.get))
+    }
     DisaggCore.run(low, high, params.targetFreq, params.targetColumn, params.aggFunc,
       params.method, params.criterion, params.h, params.optimizerMethod, params.verbose,
       params.lowFreq, params.highFreq, params.optimizerOptions)

@@ -23,7 +23,9 @@ import breeze.linalg._
   * R-golden outputs depend on it. The dense forms the reference computes
   * (explicit covariances, the dense KKT, the distribution matrix) live in
   * test scope as `graft.DenseKernels`, the oracle KernelsSpec checks this
-  * banded path against.
+  * banded path against; the likelihood as a chain of Breeze operators
+  * lives there as `graft.BreezeObjective`, the oracle of the flat
+  * [[negLogLikObjective]].
   */
 object Kernels {
 
@@ -229,38 +231,17 @@ object Kernels {
     band
   }
 
-  private def precisionBand(kind: MlCov, rho: Double, n: Int): Array[Array[Double]] = kind match {
+  private[graft] def precisionBand(kind: MlCov, rho: Double, n: Int): Array[Array[Double]] = kind match {
     case ChowLinCov   => chowLinPrecisionBand(rho, n)
     case LittermanCov => littermanPrecisionBand(rho, n)
   }
 
-  /** `C M^-1` and `C M^-1 C'` for a banded SPD M given as its packed lower
-    * band (band(d)(j) = M(j+d, j), d = 0..w) — the one solve behind every
-    * covariance family. The banded Cholesky factor costs O(n w^2); the two
-    * substitutions run VECTORIZED over the nl rows of C in a work buffer
-    * W(j*nl + k) = (M^-1 C')(j, k), which is exactly C's column-major buffer
-    * (one clone, no transpose): the substitution streams over nl-length
-    * runs instead of walking a transposed view with a row-sized stride. The
-    * same buffer, read as a column-major nl x n matrix, IS `C M^-1`
-    * (M is symmetric), so it is returned without a copy.
-    *
-    * The diagonal scaling multiplies by a precomputed reciprocal: the
-    * substitution is DIVISION-bound otherwise (2 n nl divides at 20-40
-    * cycles each, against ~1 ulp of accuracy — well inside every tolerance
-    * this kernel is checked at). Package-visible so the test-scope oracle
-    * can check it on general SPD bands with a dense right-hand side.
+  /** Banded Cholesky factor `M = L L'` of a banded SPD M given as its packed
+    * lower band, flat and column-oriented: l(d * n + j) = L(j+d, j). O(n w^2).
     */
-  private[graft] def bandedCmi(
-      band: Array[Array[Double]],
-      c0: DenseMatrix[Double]): (DenseMatrix[Double], DenseMatrix[Double]) = {
+  private def bandedCholesky(band: Array[Array[Double]]): Array[Double] = {
     val w = band.length - 1
     val n = band(0).length
-    val cm = if (c0.isTranspose || c0.offset != 0 || c0.majorStride != c0.rows) c0.copy else c0
-    val nl = cm.rows
-    require(cm.cols == n, s"conversion matrix cols ${cm.cols} != n $n")
-    val cd = cm.data // column-major nl x n: column j (= C(:, j)) contiguous
-    val wArr = cd.clone()
-    // banded Cholesky factor, column-oriented and flat: l(d * n + j) = L(j+d, j)
     val l = new Array[Double]((w + 1) * n)
     var j = 0
     while (j < n) {
@@ -279,28 +260,33 @@ object Kernels {
       }
       j += 1
     }
+    l
+  }
+
+  /** `W <- M^-1 W` in place, for the banded factor `l` of M
+    * ([[bandedCholesky]], half-bandwidth w) and a row-major n x nl work
+    * buffer W: forward `L Y = W`, then backward `L' X = Y`, each row a
+    * streaming update of nl-long runs. Row i of the forward pass touches only
+    * its first `fwd(i)` columns, which the caller may shorten where the
+    * columns past it are still +0.0 at row i; row i of the backward pass
+    * touches its first `back(i)` (non-decreasing in i), which the caller may
+    * shorten where nothing reads the columns past it.
+    *
+    * The diagonal scaling multiplies by a precomputed reciprocal: the
+    * substitution is DIVISION-bound otherwise (2 n nl divides at 20-40
+    * cycles each, against ~1 ulp of accuracy — well inside every tolerance
+    * this kernel is checked at).
+    */
+  private def bandedSubstitute(
+      l: Array[Double], w: Int, n: Int, nl: Int, wArr: Array[Double],
+      fwd: Array[Int], back: Array[Int]): Unit = {
     val invDiag = new Array[Double](n)
     var ii = 0
     while (ii < n) { invDiag(ii) = 1.0 / l(ii); ii += 1 }
-    // Column k of C' is +0.0 above its first other entry, and forward
-    // substitution keeps such a prefix +0.0 (0 - f*0, then times a positive
-    // 1/L(i, i)). So row i of the forward pass only touches the columns
-    // k < live(i), the last column whose prefix has ended, plus one.
-    val live = new Array[Int](n)
-    var k0 = 0
-    while (k0 < nl) {
-      var i0 = 0
-      while (i0 < n && java.lang.Double.doubleToRawLongBits(cd(i0 * nl + k0)) == 0L) i0 += 1
-      if (i0 < n) live(i0) = k0 + 1
-      k0 += 1
-    }
-    ii = 1
-    while (ii < n) { live(ii) = math.max(live(ii), live(ii - 1)); ii += 1 }
-    // L Y = C' (forward), then L' X = Y (backward)
     var i = 0
     while (i < n) {
       val base = i * nl
-      val kEnd = live(i)
+      val kEnd = fwd(i)
       var d = 1
       while (d <= w && i - d >= 0) {
         val f = l(d * n + i - d)
@@ -317,19 +303,61 @@ object Kernels {
     i = n - 1
     while (i >= 0) {
       val base = i * nl
+      val kEnd = back(i)
       var d = 1
       while (d <= w && i + d < n) {
         val f = l(d * n + i)
         val src = (i + d) * nl
         var k = 0
-        while (k < nl) { wArr(base + k) -= f * wArr(src + k); k += 1 }
+        while (k < kEnd) { wArr(base + k) -= f * wArr(src + k); k += 1 }
         d += 1
       }
       val r = invDiag(i)
       var k = 0
-      while (k < nl) { wArr(base + k) *= r; k += 1 }
+      while (k < kEnd) { wArr(base + k) *= r; k += 1 }
       i -= 1
     }
+  }
+
+  /** `C M^-1` and `C M^-1 C'` for a banded SPD M given as its packed lower
+    * band (band(d)(j) = M(j+d, j), d = 0..w) — the one solve behind every
+    * covariance family. The banded Cholesky factor costs O(n w^2); the two
+    * substitutions run VECTORIZED over the nl rows of C in a work buffer
+    * W(j*nl + k) = (M^-1 C')(j, k), which is exactly C's column-major buffer
+    * (one clone, no transpose): the substitution streams over nl-length
+    * runs instead of walking a transposed view with a row-sized stride. The
+    * same buffer, read as a column-major nl x n matrix, IS `C M^-1`
+    * (M is symmetric), so it is returned without a copy. Package-visible so
+    * the test-scope oracle can check it on general SPD bands with a dense
+    * right-hand side.
+    */
+  private[graft] def bandedCmi(
+      band: Array[Array[Double]],
+      c0: DenseMatrix[Double]): (DenseMatrix[Double], DenseMatrix[Double]) = {
+    val w = band.length - 1
+    val n = band(0).length
+    val cm = plain(c0)
+    val nl = cm.rows
+    require(cm.cols == n, s"conversion matrix cols ${cm.cols} != n $n")
+    val cd = cm.data // column-major nl x n: column j (= C(:, j)) contiguous
+    val wArr = cd.clone()
+    // Column k of C' is +0.0 above its first other entry, and forward
+    // substitution keeps such a prefix +0.0 (0 - f*0, then times a positive
+    // 1/L(i, i)). So row i of the forward pass only touches the columns
+    // k < live(i), the last column whose prefix has ended, plus one.
+    val live = new Array[Int](n)
+    var k0 = 0
+    while (k0 < nl) {
+      var i0 = 0
+      while (i0 < n && java.lang.Double.doubleToRawLongBits(cd(i0 * nl + k0)) == 0L) i0 += 1
+      if (i0 < n) live(i0) = k0 + 1
+      k0 += 1
+    }
+    var ii = 1
+    while (ii < n) { live(ii) = math.max(live(ii), live(ii - 1)); ii += 1 }
+    val all = new Array[Int](n)
+    java.util.Arrays.fill(all, nl)
+    bandedSubstitute(bandedCholesky(band), w, n, nl, wArr, live, all)
     // out(r, k) = sum_j C(r, j) * W(j, k). j OUTER: C's column j and W's
     // row j are both contiguous (the r-outer form reads cd with a row-sized
     // stride — pure cache misses), and out fits in L2. For each r the js
@@ -337,7 +365,7 @@ object Kernels {
     // most one nonzero (each high-freq period maps to one low period), so
     // this is O(n nl).
     val od = new Array[Double](nl * nl)
-    j = 0
+    var j = 0
     while (j < n) {
       val base = j * nl
       var r = 0
@@ -416,16 +444,6 @@ object Kernels {
   private def plain(m: DenseMatrix[Double]): DenseMatrix[Double] =
     if (m.isTranspose || m.offset != 0 || m.majorStride != m.rows) m.copy else m
 
-  /** `C S C'` alone — the only covariance product the ML objective needs.
-    * Skips scaling the nl x n `C S`; the full [[covProducts]] runs once per
-    * series for the final distribution step, this runs per optimizer
-    * evaluation.
-    */
-  def csctOnly(
-      kind: MlCov, rho: Double, sigmaSq: Double, n: Int,
-      c: DenseMatrix[Double]): DenseMatrix[Double] =
-    bandedCmi(precisionBand(kind, rho, n), c)._2 * sigmaSq
-
   def covProducts(
       kind: MlCov, rho: Double, sigmaSq: Double, n: Int,
       c: DenseMatrix[Double]): CovProducts = {
@@ -472,45 +490,48 @@ object Kernels {
     */
   def spdSolveMat(lo: DenseMatrix[Double], rhs: DenseMatrix[Double]): DenseMatrix[Double] = {
     val n = lo.rows
-    val ld = lo.data // lower-triangular, column-major, offset 0 (cholesky output)
     val out = DenseMatrix.zeros[Double](n, rhs.cols)
     val od = out.data
     var cidx = 0
     while (cidx < rhs.cols) {
-      val off = cidx * n
       var i = 0
-      while (i < n) { od(off + i) = rhs(i, cidx); i += 1 }
-      // L y = r
-      i = 0
-      while (i < n) {
-        var ss = od(off + i)
-        var k = 0
-        while (k < i) { ss -= ld(k * n + i) * od(off + k); k += 1 }
-        od(off + i) = ss / ld(i * n + i)
-        i += 1
-      }
-      // L' x = y
-      i = n - 1
-      while (i >= 0) {
-        var ss = od(off + i)
-        var k = i + 1
-        while (k < n) { ss -= ld(i * n + k) * od(off + k); k += 1 }
-        od(off + i) = ss / ld(i * n + i)
-        i -= 1
-      }
+      while (i < n) { od(cidx * n + i) = rhs(i, cidx); i += 1 }
       cidx += 1
     }
+    // lo is cholesky's output: lower-triangular, column-major, offset 0
+    spdSolveInPlace(lo.data, n, od, rhs.cols)
     out
   }
 
-  def spdSolveVec(lo: DenseMatrix[Double], v: DenseVector[Double]): DenseVector[Double] =
-    spdSolveMat(lo, v.toDenseMatrix.t)(::, 0)
-
-  def spdLogDet(lo: DenseMatrix[Double]): Double = {
-    var ldet = 0.0
-    var i = 0
-    while (i < lo.rows) { ldet += math.log(lo(i, i)); i += 1 }
-    2.0 * ldet
+  /** `B <- G^-1 B` in place for the `m` column-major columns of `b`, with G's
+    * Cholesky factor in the lower triangle of the column-major `l`: per
+    * column, forward then backward substitution, each entry's terms
+    * subtracted in ascending order and divided by the pivot.
+    */
+  private def spdSolveInPlace(l: Array[Double], nl: Int, b: Array[Double], m: Int): Unit = {
+    var q = 0
+    while (q < m) {
+      val zb = q * nl
+      var jj = 0
+      while (jj < nl) {
+        val cj = jj * nl
+        val z = b(zb + jj) / l(cj + jj)
+        b(zb + jj) = z
+        var p = jj + 1
+        while (p < nl) { b(zb + p) -= z * l(cj + p); p += 1 }
+        jj += 1
+      }
+      var i = nl - 1
+      while (i >= 0) {
+        val ci = i * nl
+        var s = b(zb + i)
+        var p = i + 1
+        while (p < nl) { s -= l(ci + p) * b(zb + p); p += 1 }
+        b(zb + i) = s / l(ci + i)
+        i -= 1
+      }
+      q += 1
+    }
   }
 
   /** GLS estimator (GLS_beta_hat, ts_disagg.py:117-131) from the Cholesky
@@ -539,6 +560,34 @@ object Kernels {
     * ts_disagg.py:84-87) at the GLS beta. The `(1+rho)` rescaling of sigma^2
     * (ts_disagg.py:140-144) is the reference's deliberate correction to
     * match R `tempdisagg` — replicated bit-for-bit.
+    *
+    * The optimizer calls this thousands of times per fit, so it is one flat
+    * pass over primitive arrays with no Breeze operator:
+    *  1. one scan of C for each column's nonzero (row, value), which also
+    *     fills `C X`. A column with two nonzeros fails a `require`
+    *     ([[DisaggCore.buildConversionMatrix]] puts at most one in each);
+    *  2. the banded Cholesky of the precision M and both substitutions,
+    *     `W = M^-1 C'`, only over the columns the lower triangle of
+    *     `C M^-1 C'` reads (see below);
+    *  3. `G = s2 C M^-1 C'` (lower triangle), and `G = L L'` by LAPACK
+    *     `dpotrf` on the flat buffer: the routine `breeze.linalg.cholesky`
+    *     calls, without its symmetry scan and copies, and the same
+    *     `NotConvergedException` where G is not positive definite;
+    *  4. one multi-RHS solve `G^-1 [C X | y]` for the GLS beta, then the
+    *     residual `y - C X beta`, its solve and its quadratic form.
+    *
+    * Every step does the arithmetic of the Breeze-operator chain it
+    * replaces (`graft.BreezeObjective` in test scope), in the same order and
+    * through the same BLAS and LAPACK calls for the k x k normal equations,
+    * so the value is the same to the bit and so is every fit's path through
+    * the optimizer: which fits run to the iteration limit depends on
+    * rounding at that level.
+    *
+    * Entry (r, k <= r) of `C M^-1 C'` reads W(j, k) only at the columns j of
+    * row r, so column k of W is needed from row jmin(k) = min over r >= k of
+    * the first column of row r on. Row i of both substitutions therefore
+    * touches only the columns k with jmin(k) <= i, a prefix since jmin is
+    * non-decreasing; above jmin(k), column k of `C'` is still +0.0.
     */
   def negLogLikObjective(
       rho: Double, sigmaSqRaw: Double,
@@ -546,14 +595,113 @@ object Kernels {
       kind: MlCov): Double = {
     val n = x.rows
     val nl = y.length
+    val k = x.cols
+    require(c.rows == nl && c.cols == n, s"conversion matrix ${c.rows}x${c.cols}, expected ${nl}x$n")
     val sigmaSq = (1.0 + rho) * sigmaSqRaw
-    val csct = csctOnly(kind, rho, sigmaSq, n, c)
-    val chol = cholesky(csct)
-    val beta = glsBetaHatFromChol(chol, y, x, c)
-    val p = x * beta
-    val ul = y - sparseRowProductVec(c, p)
-    val quad = ul dot spdSolveVec(chol, ul)
-    -(-nl / 2.0 * math.log(2.0 * math.Pi) - 0.5 * (spdLogDet(chol) + quad))
+    val cd = plain(c).data
+    val xd = plain(x).data
+    // 1. C's nonzeros, C X into the first k columns of the right-hand sides
+    val rowOf = new Array[Int](n)
+    val cv = new Array[Double](n)
+    val first = new Array[Int](nl) // first column of each row, n if none
+    java.util.Arrays.fill(first, n)
+    val nr = k + 1
+    val rhs = new Array[Double](nl * nr) // [C X | y], column-major
+    var j = 0
+    while (j < n) {
+      val base = j * nl
+      var row = -1
+      var r = 0
+      while (r < nl) {
+        if (cd(base + r) != 0.0) {
+          require(row < 0, s"conversion matrix column $j has more than one nonzero")
+          row = r
+        }
+        r += 1
+      }
+      rowOf(j) = row
+      if (row >= 0) {
+        val v = cd(base + row)
+        cv(j) = v
+        if (first(row) == n) first(row) = j
+        var q = 0
+        while (q < k) { rhs(q * nl + row) += v * xd(q * n + j); q += 1 }
+      }
+      j += 1
+    }
+    var i = 0
+    while (i < nl) { rhs(k * nl + i) = y(i); i += 1 }
+    // 2. W = M^-1 C' over the live prefix of each row
+    val live = new Array[Int](n)
+    var jmin = n
+    var r = nl - 1
+    while (r >= 0) {
+      jmin = math.min(jmin, first(r))
+      if (jmin < n) live(jmin) = math.max(live(jmin), r + 1)
+      r -= 1
+    }
+    i = 1
+    while (i < n) { live(i) = math.max(live(i), live(i - 1)); i += 1 }
+    val band = precisionBand(kind, rho, n)
+    val wArr = new Array[Double](n * nl) // row-major n x nl
+    j = 0
+    while (j < n) { if (rowOf(j) >= 0) wArr(j * nl + rowOf(j)) = cv(j); j += 1 }
+    bandedSubstitute(bandedCholesky(band), band.length - 1, n, nl, wArr, live, live)
+    // 3. G's lower triangle row by row, g(r * nl + q) = (C W)(r, q), summed
+    // over ascending j; then written, times s2, into the upper half as
+    // column-major lower, so each Cholesky column below is contiguous
+    val g = new Array[Double](nl * nl)
+    j = 0
+    while (j < n) {
+      val row = rowOf(j)
+      if (row >= 0) {
+        val v = cv(j)
+        val gb = row * nl
+        val wb = j * nl
+        var q = 0
+        while (q <= row) { g(gb + q) += v * wArr(wb + q); q += 1 }
+      }
+      j += 1
+    }
+    r = 0
+    while (r < nl) {
+      var q = 0
+      while (q < r) { g(q * nl + r) = g(r * nl + q) * sigmaSq; q += 1 }
+      g(r * nl + r) *= sigmaSq
+      r += 1
+    }
+    val lapack = dev.ludovic.netlib.lapack.LAPACK.getInstance()
+    val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
+    val info = new org.netlib.util.intW(0)
+    lapack.dpotrf("L", nl, g, nl, info)
+    if (info.`val` > 0) throw new NotConvergedException(NotConvergedException.Iterations)
+    var logDet = 0.0
+    i = 0
+    while (i < nl) { logDet += math.log(g(i * nl + i)); i += 1 }
+    // 4. beta from Z = G^-1 [C X | y]: A = (C X)' Z1, b = (C X)' z2, A \ b
+    val cx = java.util.Arrays.copyOf(rhs, nl * k)
+    spdSolveInPlace(g, nl, rhs, nr)
+    val a = new Array[Double](k * k)
+    blas.dgemm("T", "N", k, k, nl, 1.0, cx, 0, nl, rhs, 0, nl, 0.0, a, 0, k)
+    val beta = new Array[Double](k)
+    blas.dgemv("T", nl, k, 1.0, cx, 0, nl, rhs, k * nl, 1, 0.0, beta, 0, 1)
+    lapack.dgesv(k, 1, a, 0, k, new Array[Int](k), 0, beta, 0, k, info)
+    if (info.`val` > 0) throw new MatrixSingularException()
+    // 5. the residual ul = y - C (X beta) and its quadratic form ul' G^-1 ul
+    val p = new Array[Double](n)
+    blas.dgemv(if (x.isTranspose) "T" else "N", if (x.isTranspose) x.cols else x.rows,
+      if (x.isTranspose) x.rows else x.cols, 1.0, x.data, x.offset, x.majorStride, beta, 0, 1, 0.0, p, 0, 1)
+    val ul = new Array[Double](nl)
+    j = 0
+    while (j < n) { if (rowOf(j) >= 0) ul(rowOf(j)) += cv(j) * p(j); j += 1 }
+    i = 0
+    while (i < nl) { ul(i) = y(i) - ul(i); i += 1 }
+    val sol = ul.clone()
+    spdSolveInPlace(g, nl, sol, 1)
+    val quad =
+      if (nl < 8) breeze.linalg.operators.DenseVectorSupportMethods.smallDotProduct_Double(ul, sol, nl)
+      else breeze.linalg.operators.DenseVectorSupportMethods.dotProduct_Double(ul, 0, sol, 0, nl)
+    -(-nl / 2.0 * math.log(2.0 * math.Pi) - 0.5 * (2.0 * logDet + quad))
   }
 
   /** GLS standard errors `sqrt(diag((X' S^-1 X)^-1))` (ts_disagg.py:452-455),

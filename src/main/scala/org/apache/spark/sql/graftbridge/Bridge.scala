@@ -13,6 +13,18 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Runs `body` on `exec` with the caller's thread-locals: the active
+    * session, the SparkContext's local properties (job group, scheduler
+    * pool, ...) and the job artifact state. A plain pool thread carries none
+    * of them, or stale ones inherited from whichever thread created it.
+    * The pool thread gets its own state back after `body` returns, but not
+    * after it throws, so `body` should return its failure as a value.
+    */
+  def withThreadLocalCaptured[T](spark: org.apache.spark.sql.SparkSession,
+      exec: java.util.concurrent.ExecutorService)(body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
+
   /** Blocks until every listener event posted so far has been delivered
     * (the bus is asynchronous), so what a listener has counted is final
     * when this returns.

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import scala.io.Source
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -100,12 +100,21 @@ object Fixtures {
   }
 
   /** Spark jobs started while `body` runs. */
-  def jobsOf(spark: SparkSession)(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  def jobsOf(spark: SparkSession)(body: => Any): Int = jobRunsOf(spark)(body).length
+
+  /** One started job: its local properties and, if it ended while `body`
+    * ran, its end time (epoch ms, the scheduler's clock). */
+  final case class JobRun(properties: java.util.Properties, endedAt: Option[Long])
+
+  /** Spark jobs started while `body` runs, in start order. */
+  def jobRunsOf(spark: SparkSession)(body: => Any): Seq[JobRun] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     listening(spark, new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onJobStart(j: SparkListenerJobStart): Unit = { started.add(j); () }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = { ended.put(j.jobId, j.time); () }
     })(body)
-    jobs.get()
+    started.asScala.toSeq.map(j => JobRun(j.properties, Option(ended.get(j.jobId)).map(_.longValue)))
   }
 
   /** One completed stage: its task count and the shuffle bytes it read. */

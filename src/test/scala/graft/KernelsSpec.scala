@@ -142,9 +142,9 @@ class KernelsSpec extends AnyFunSuite {
       val errM = max(abs((a \ rhs) - Kernels.spdSolveMat(chol, rhs)))
       assert(errM < 1e-9, s"n=$n spdSolveMat diff $errM")
       val v = DenseVector.tabulate(n)(_ => rnd.nextDouble())
-      val errV = max(abs((a \ v) - Kernels.spdSolveVec(chol, v)))
+      val errV = max(abs((a \ v) - BreezeObjective.spdSolveVec(chol, v)))
       assert(errV < 1e-9, s"n=$n spdSolveVec diff $errV")
-      val ldErr = math.abs(logdet(a)._2 - Kernels.spdLogDet(chol))
+      val ldErr = math.abs(logdet(a)._2 - BreezeObjective.spdLogDet(chol))
       assert(ldErr < 1e-9, s"n=$n logdet diff $ldErr")
       // packed precision bands against their definitions
       for (rho <- Seq(0.3, 0.95)) {
@@ -310,6 +310,58 @@ class KernelsSpec extends AnyFunSuite {
         assert(errDc < tol, s"$what denton-cholette D ul rel diff $errDc")
       }
     }
+  }
+
+  /** The flat objective against the Breeze-operator chain it replaced, over
+    * both kinds, rho up to both bounds, sigma^2 from 1e-5 to 1e4, every agg
+    * func and three calendars at the benchmark's lengths, each with an
+    * incomplete trailing group whose all-zero C row is dropped (Q->M at
+    * n = 474 has none). The two agree to the bit, so the optimizer takes
+    * the same path through either.
+    */
+  test("flat ML objective equals the Breeze-operator oracle") {
+    val rnd = new scala.util.Random(20261021)
+    val calendars = Seq(("YS", "QS", 4), ("YS", "MS", 12), ("QS", "MS", 3))
+    for ((lowF, highF, f) <- calendars; n <- Seq(158, 474); agg <- AggFunc.all) {
+      val lowFreq = Frequency.parseValidated(lowF)
+      val lowTs = Fixtures.freqDates("1980-01-01", lowF, (n + f - 1) / f)
+      val highTs = Fixtures.freqDates("1980-01-01", highF, n)
+      val c0 = DisaggCore.buildConversionMatrix(lowTs, lowFreq, highTs, f, agg)
+      val keep = (0 until c0.rows).filter(i => (0 until c0.cols).exists(j => c0(i, j) != 0.0))
+      val c = DenseMatrix.tabulate(keep.length, c0.cols)((i, j) => c0(keep(i), j))
+      assert(c.rows == n / f, s"$lowF->$highF n=$n kept ${c.rows} of ${c0.rows} rows")
+      val ind = DenseVector.tabulate(n)(i => 40.0 + 3.0 * math.sin(i * 0.4) + 0.05 * i + rnd.nextDouble())
+      val x = DenseMatrix.horzcat(ind.toDenseMatrix.t, DenseMatrix.ones[Double](n, 1))
+      val y = c * (x * DenseVector(2.0, 10.0)) + DenseVector.fill(c.rows)(5.0 * rnd.nextGaussian())
+      for (kind <- Seq(Kernels.ChowLinCov, Kernels.LittermanCov);
+           rho <- Seq(1e-5, 0.3, 0.63, 0.95, 1.0 - 1e-5);
+           s2 <- Seq(1e-5, 3e-3, 0.8, 40.0, 1e4)) {
+        val got = Kernels.negLogLikObjective(rho, s2, y, x, c, kind)
+        val want = BreezeObjective.negLogLikObjective(rho, s2, y, x, c, kind)
+        assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want),
+          s"$lowF->$highF n=$n agg=$agg $kind rho=$rho s2=$s2: $got vs $want")
+      }
+    }
+    // C S C' not positive definite: a kept all-zero C row, or sigma^2 < 0
+    val lowTs = Fixtures.freqDates("1980-01-01", "YS", 5)
+    val highTs = Fixtures.freqDates("1980-01-01", "QS", 18)
+    val cZero = DisaggCore.buildConversionMatrix(lowTs, Frequency.parseValidated("YS"), highTs, 4, "sum")
+    val x = DenseMatrix.horzcat(DenseMatrix.tabulate(18, 1)((i, _) => 1.0 + i), DenseMatrix.ones[Double](18, 1))
+    val y = DenseVector.tabulate(5)(i => 10.0 + i)
+    val cKept = cZero(0 until 4, ::).toDenseMatrix
+    for ((c, yy, s2) <- Seq((cZero, y, 0.8), (cKept, y(0 until 4).toDenseVector, -0.8));
+         kind <- Seq(Kernels.ChowLinCov, Kernels.LittermanCov)) {
+      val want = intercept[Exception](BreezeObjective.negLogLikObjective(0.5, s2, yy, x, c, kind))
+      val got = intercept[Exception](Kernels.negLogLikObjective(0.5, s2, yy, x, c, kind))
+      assert(got.getClass == want.getClass && got.isInstanceOf[breeze.linalg.NotConvergedException],
+        s"$kind s2=$s2: ${got.getClass} vs ${want.getClass}")
+    }
+    // a C column with two nonzeros breaks the one-scan contract: refused
+    val cTwo = cKept.copy
+    cTwo(1, 0) = 1.0
+    val e = intercept[IllegalArgumentException](
+      Kernels.negLogLikObjective(0.5, 0.8, y(0 until 4).toDenseVector, x, cTwo, Kernels.ChowLinCov))
+    assert(e.getMessage.contains("column 0 has more than one nonzero"), e.getMessage)
   }
 
   test("conversion matrix row sums and groupBy equivalence (test_disaggregation.py:96-139)") {

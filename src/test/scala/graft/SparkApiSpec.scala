@@ -146,15 +146,18 @@ class SparkApiSpec extends AnyFunSuite {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  test("series runs one Spark job per input and none for its output") {
-    // a parquet scan is the shape callers pass; the frames are built (and
-    // their schemas read) before counting, so each window holds only the
-    // jobs of the call itself
+  /** The chow-lin golden's inputs as parquet scans, the shape callers pass;
+    * the frames are built (and their schemas read) before any counting, so
+    * a counting window holds only the jobs of the call itself. */
+  private def parquetInputs(): (DataFrame, DataFrame) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_series_jobs").toString
     localDf(Fixtures.salesA).write.parquet(s"$dir/low")
     localDf(Fixtures.withConstant(Fixtures.exportsQ)).write.parquet(s"$dir/high")
-    val low = spark.read.parquet(s"$dir/low")
-    val high = spark.read.parquet(s"$dir/high")
+    (spark.read.parquet(s"$dir/low"), spark.read.parquet(s"$dir/high"))
+  }
+
+  test("series runs one Spark job per input and none for its output") {
+    val (low, high) = parquetInputs()
     def jobsOf(run: => Any): Int = Fixtures.jobsOf(spark)(run)
     val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
     assert(jobsOf(Disaggregate.seriesOutput(low, Some(high), params = chowLin)) == 2,
@@ -162,6 +165,65 @@ class SparkApiSpec extends AnyFunSuite {
     val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
     assert(jobsOf(Disaggregate.series(low, None, params = dc).collect()) == 1,
       "series(low).collect(): one job for the input, none for the output")
+  }
+
+  test("seriesOutput runs both collects under the caller's job group and scheduler pool") {
+    // the indicator is collected on a pool thread: it must carry the
+    // caller's local properties, not those of the thread that created it
+    val (low, high) = parquetInputs()
+    val sc = spark.sparkContext
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    def snapshot = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+      "spark.scheduler.pool", "spark.job.tags", "spark.sql.execution.id").map(k => k -> sc.getLocalProperty(k))
+    Disaggregate.seriesOutput(low, Some(high), params = chowLin)
+    for (round <- Seq("a", "b")) {
+      sc.setJobGroup(s"graft-fence-$round", "seriesOutput thread-local fence")
+      sc.setLocalProperty("spark.scheduler.pool", s"graft-pool-$round")
+      try {
+        val before = snapshot
+        val jobs = Fixtures.jobRunsOf(spark)(Disaggregate.seriesOutput(low, Some(high), params = chowLin))
+        assert(jobs.length == 2, s"round $round: ${jobs.length} jobs")
+        jobs.foreach { j =>
+          assert(j.properties.getProperty("spark.jobGroup.id") == s"graft-fence-$round", s"round $round")
+          assert(j.properties.getProperty("spark.scheduler.pool") == s"graft-pool-$round", s"round $round")
+        }
+        assert(snapshot == before, s"round $round: caller's local properties changed")
+      } finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("spark.scheduler.pool", null)
+      }
+    }
+  }
+
+  test("seriesOutput reports low_freq_df's error first and leaves no job running") {
+    val (schema, rows) = rowsOf(Fixtures.salesA)
+    val (hSchema, hRows) = rowsOf(Fixtures.withConstant(Fixtures.exportsQ))
+    // parquet scans, so each collect is a job (a local relation's is not);
+    // the indicator's job outlasts the low one, so a call that threw as
+    // soon as low failed would leave it running
+    val dir = java.nio.file.Files.createTempDirectory("graft_series_errors").toString
+    spark.createDataFrame(rows.updated(3, Row(null, 1.0)).asJava, schema).write.parquet(s"$dir/low")
+    spark.createDataFrame(hRows.updated(5, Row(null, 1.0, 1.0)).asJava, hSchema).write.parquet(s"$dir/high")
+    val slow = udf { (v: Double) => Thread.sleep(20); v }
+    val nullLow = spark.read.parquet(s"$dir/low")
+    val nullHigh = spark.read.parquet(s"$dir/high").withColumn("exports", slow(col("exports")))
+    val textLow = localDf(Fixtures.salesA).withColumn("ts", col("ts").cast(StringType))
+    val textHigh = localDf(Fixtures.withConstant(Fixtures.exportsQ)).withColumn("ts", col("ts").cast(StringType))
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    for ((low, high, want) <- Seq(
+        (nullLow, nullHigh, "Unsupported time value null"),
+        (textLow, textHigh, "No datetime index found on the dataframe passed as argument to low_freq_df."))) {
+      var e: IllegalArgumentException = null
+      var thrownAt = 0L
+      val jobs = Fixtures.jobRunsOf(spark) {
+        e = intercept[IllegalArgumentException](Disaggregate.seriesOutput(low, Some(high), params = chowLin))
+        thrownAt = System.currentTimeMillis()
+        Thread.sleep(1000) // a job the call left behind starts or ends in here
+      }
+      assert(e.getMessage == want)
+      assert(jobs.forall(_.endedAt.exists(_ <= thrownAt)),
+        s"$want: a job ended after the call threw, or never: ${jobs.map(_.endedAt)} vs $thrownAt")
+    }
   }
 
   test("series output does not depend on input row order or partitioning") {
