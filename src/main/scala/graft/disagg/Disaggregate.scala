@@ -1,6 +1,7 @@
 package graft.disagg
 
 import java.time.{LocalDate, LocalDateTime}
+import java.util.Locale
 import java.util.concurrent.{ExecutorService, Executors}
 
 import scala.collection.immutable.ArraySeq
@@ -29,8 +30,11 @@ case class KeyedOut(series_id: Long, ts: LocalDateTime, value: Double)
   *
   * Two execution shapes:
   *  - [[series]]: one series. The frame is tiny (n = O(10^3)), so each input
-  *    costs ONE Spark job: its projection is collected as it is and sorted on
-  *    the driver. With an indicator the two jobs overlap, the indicator's on
+  *    costs ONE Spark job: it is collected unordered and sorted on the
+  *    driver. A frame already in the NTZ/DOUBLE shape is collected as it
+  *    is, so a repeated call on one frame reuses its plan; one whose
+  *    columns need a cast is re-projected, and so re-planned, on each
+  *    call. With an indicator the two jobs overlap, the indicator's on
   *    a second driver thread: most of a one-task job is fixed set-up (codegen,
   *    broadcasts, closure cleaning), not the scan. The kernel runs on the
   *    driver, and the result comes back as a local relation, which
@@ -76,10 +80,17 @@ object Disaggregate {
     * Validation mirrors ts_disagg.py:216-231 (message text pinned by the
     * reference's error-path tests).
     *
-    * One job: the projection is collected unordered and sorted on the driver
+    * One job: the rows are collected unordered and sorted on the driver
     * (stable, on the full timestamp). A global `orderBy` would plan a range
     * exchange, which costs a sampling job and a shuffle stage on top of the
     * result stage, for a frame of at most a few thousand rows.
+    *
+    * A frame whose ts is already TIMESTAMP_NTZ, whose other columns are
+    * already DOUBLE and whose names are distinct (what [[series]] returns)
+    * is collected as it is and read by index: Spark keeps that Dataset's
+    * QueryExecution, so a repeated call on one frame analyses, optimises
+    * and plans it once. Any other schema is cast by a fresh projection,
+    * planned again on every call.
     */
   private[graft] def collectTsFrame(df: DataFrame, tsCol: String, role: String): TsFrame = {
     val schema = df.schema
@@ -91,18 +102,25 @@ object Disaggregate {
     if (!isTime)
       DisaggCore.fail(s"No datetime index found on the dataframe passed as argument to $role.")
     val valueCols = schema.fields.filter(_.name != tsCol).map(_.name).toIndexedSeq
-    val rows = df
-      // NTZ cast: collected values become wall-clock LocalDateTime, immune
-      // to the session/JVM timezone (a non-UTC zone would otherwise shift
-      // every date by up to a day and corrupt calendar period keys)
-      .select((col(tsCol).cast(TimestampNTZType) +:
-        valueCols.map(c => col(c).cast(DoubleType))): _*)
-      .collect()
-      // nulls first, as in an ascending orderBy; toLocalDate rejects them below
-      .sortBy(r => Option(r.getAs[LocalDateTime](0)))(Ordering.Option(byDateTime))
-    val ts = rows.map(r => toLocalDate(r.get(0))).toIndexedSeq
-    val data = valueCols.indices.map { j =>
-      rows.map(r => if (r.isNullAt(j + 1)) Double.NaN else r.getDouble(j + 1))
+    // distinct as the default (case-insensitive) resolver sees them: a
+    // duplicate name keeps the projection, which resolves it as it always has
+    val asIs = tsField.exists(_.dataType == TimestampNTZType) &&
+      schema.fields.forall(f => f.name == tsCol || f.dataType == DoubleType) &&
+      schema.fieldNames.map(_.toLowerCase(Locale.ROOT)).distinct.length == schema.length
+    val (collected, tsIdx, valueIdx) =
+      if (asIs) (df.collect(), schema.fieldIndex(tsCol), schema.fields.indices.filter(schema(_).name != tsCol))
+      else (df
+        // NTZ cast: collected values become wall-clock LocalDateTime, immune
+        // to the session/JVM timezone (a non-UTC zone would otherwise shift
+        // every date by up to a day and corrupt calendar period keys)
+        .select((col(tsCol).cast(TimestampNTZType) +:
+          valueCols.map(c => col(c).cast(DoubleType))): _*)
+        .collect(), 0, valueCols.indices.map(_ + 1))
+    // nulls first, as in an ascending orderBy; toLocalDate rejects them below
+    val rows = collected.sortBy(r => Option(r.getAs[LocalDateTime](tsIdx)))(Ordering.Option(byDateTime))
+    val ts = rows.map(r => toLocalDate(r.get(tsIdx))).toIndexedSeq
+    val data = valueIdx.map { j =>
+      rows.map(r => if (r.isNullAt(j)) Double.NaN else r.getDouble(j))
     }
     TsFrame(ts, valueCols, data)
   }

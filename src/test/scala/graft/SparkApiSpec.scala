@@ -1,9 +1,14 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,6 +170,138 @@ class SparkApiSpec extends AnyFunSuite {
     val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
     assert(jobsOf(Disaggregate.series(low, None, params = dc).collect()) == 1,
       "series(low).collect(): one job for the input, none for the output")
+  }
+
+  /** The QueryExecution of every action `body` runs, in the order Spark
+    * reports them to a QueryExecutionListener. */
+  private def actionPlans(body: => Any): Seq[QueryExecution] = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = { seen.add(qe); () }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    Bridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** Whether collecting `df` ran on `df`'s own QueryExecution. */
+  private def collectedAsIs(df: DataFrame): Boolean =
+    actionPlans(Disaggregate.collectTsFrame(df, "ts", "low_freq_df")).exists(_ eq df.queryExecution)
+
+  test("a repeated series call on one frame collects that frame's own plan") {
+    // an NTZ/DOUBLE frame needs no cast, so each call collects the caller's
+    // Dataset itself: Spark plans it once, not once per call
+    val (low, high) = parquetInputs()
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
+    for (call <- Seq("first", "second"); (params, h, inputs) <- Seq(
+        (chowLin, Some(high), Seq(low, high)), (dc, None, Seq(low)))) {
+      val what = s"${params.method}, $call call"
+      var jobs = 0
+      val plans = actionPlans {
+        jobs = Fixtures.jobsOf(spark)(Disaggregate.series(low, h, params = params).collect())
+      }
+      assert(jobs == inputs.length, s"$what: one job per input, none for the output")
+      inputs.foreach(in => assert(plans.count(_ eq in.queryExecution) == 1, s"$what: ${plans.length} plans"))
+    }
+  }
+
+  test("collectTsFrame gives the same TsFrame whether it collects a frame as it is or casts it") {
+    val bits = (a: Array[Double]) => a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    def collect(df: DataFrame): TsFrame = Disaggregate.collectTsFrame(df, "ts", "low_freq_df")
+    def assertSame(got: TsFrame, want: TsFrame, what: String): Unit = {
+      assert(got.ts == want.ts, what)
+      assert(got.columns == want.columns, what)
+      assert(got.data.map(bits) == want.data.map(bits), what)
+    }
+    // a DATE ts always takes the projection: cast back to NTZ it is the
+    // same midnight, so the two paths collect the same values
+    def projected(df: DataFrame): DataFrame = df.withColumn("ts", col("ts").cast(DateType))
+    val dir = java.nio.file.Files.createTempDirectory("graft_collect_paths").toString
+    val (schema, rows) = rowsOf(Fixtures.salesA)
+    spark.createDataFrame(rows.updated(3, Row(rows(3).get(0), null)).asJava, schema).write.parquet(s"$dir/nullv")
+    val base = spark.read.parquet(s"$dir/nullv")
+    val want = collect(projected(base))
+    assert(want.data(0)(3).isNaN && want.data(0).count(_.isNaN) == 1)
+    assert(want.ts == Fixtures.salesA.ts)
+    val swapped = base.select(col("sales"), col("ts"))
+    for ((df, what) <- Seq(base -> "(ts, value)", swapped -> "(value, ts)")) {
+      assert(collectedAsIs(df), what)
+      assert(!collectedAsIs(projected(df)), what)
+      assertSame(collect(df), want, what)
+      assertSame(collect(projected(df)), want, s"$what, projected")
+    }
+
+    // an INT value column is cast
+    val whole = base.select(col("ts"), round(col("sales")).as("sales"))
+    val ints = whole.select(col("ts"), col("sales").cast(IntegerType).as("sales"))
+    assert(collectedAsIs(whole) && !collectedAsIs(ints))
+    assertSame(collect(ints), collect(whole), "INT value")
+
+    // a TIMESTAMP (LTZ) ts is cast to the session's wall clock
+    val prev = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      base.withColumn("ts", col("ts").cast(TimestampType)).write.parquet(s"$dir/ltz")
+      val ltz = spark.read.parquet(s"$dir/ltz")
+      assert(ltz.schema("ts").dataType == TimestampType && !collectedAsIs(ltz))
+      assertSame(collect(ltz), want, "LTZ ts in a non-UTC session")
+    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+
+    // a null ts: the reference's message on both paths
+    spark.createDataFrame(rows.updated(5, Row(null, 1.0)).asJava, schema).write.parquet(s"$dir/nullts")
+    val nullTs = spark.read.parquet(s"$dir/nullts")
+    for (df <- Seq(nullTs, projected(nullTs), nullTs.select(col("sales"), col("ts")))) {
+      val e = intercept[IllegalArgumentException](collect(df))
+      assert(e.getMessage == "Unsupported time value null")
+    }
+
+    // duplicate names (as the case-insensitive resolver sees them) are
+    // never read by index: two columns keep the projection's analysis
+    // error, and one column selected twice still resolves through it
+    for (dup <- Seq(
+        base.select(col("ts"), col("sales"), col("sales").as("sales")),
+        base.select(col("ts"), col("sales"), col("sales").as("SALES")),
+        base.select(col("ts"), col("sales"), col("ts").as("ts")))) {
+      val e = intercept[AnalysisException](collect(dup))
+      assert(e.getCondition == "AMBIGUOUS_REFERENCE", dup.columns.mkString(","))
+    }
+    val twice = base.select(col("ts"), col("sales"), col("sales"))
+    assert(!collectedAsIs(twice))
+    assertSame(collect(twice), TsFrame(want.ts, want.columns ++ want.columns, want.data ++ want.data),
+      "one column selected twice")
+  }
+
+  test("concurrent series calls on one shared frame return the values of a sequential call") {
+    // the calls share each frame's one physical plan and execute it at once
+    // from several threads; the chow-lin calls also collect their indicator
+    // on the graft-series-collect pool
+    val (low, high) = parquetInputs()
+    val chowLin = Disaggregate.Params(method = "chow-lin", aggFunc = "sum")
+    val dc = Disaggregate.Params(method = "denton-cholette", targetFreq = Some("QS"))
+    def run(params: Disaggregate.Params, h: Option[DataFrame]): Seq[(java.time.LocalDateTime, Long)] =
+      Disaggregate.series(low, h, params = params).collect().toSeq
+        .map(r => (r.getAs[java.time.LocalDateTime](0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+    val cases = Seq(chowLin -> Some(high), dc -> None)
+    val pool = Executors.newFixedThreadPool(4)
+    val concurrent = try {
+      val futures = (0 until 8).map { i =>
+        val (params, h) = cases(i % 2)
+        pool.submit(() => run(params, h))
+      }
+      futures.map(_.get(5, TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    cases.zipWithIndex.foreach { case ((params, h), c) =>
+      val sequential = run(params, h)
+      assert(sequential.nonEmpty)
+      concurrent.indices.filter(_ % 2 == c).foreach(i =>
+        assert(concurrent(i) == sequential, s"${params.method}, concurrent call $i"))
+    }
   }
 
   test("seriesOutput runs both collects under the caller's job group and scheduler pool") {
